@@ -46,26 +46,4 @@ object PathUtils {
       } yield n * m
     }
   }
-
-  /** Greedy first-fit split packing (CopyInputFormat.java:51-77): accumulate
-    * lengths in manifest order, cut a split when adding the next file would
-    * exceed `target`; dirs (length 0 entries by convention) weigh nothing.
-    * Returns the bucket index per input position. Exact reference semantics —
-    * used for golden tests and for driver-side packing of small manifests;
-    * the distributed approximation is graft.plan.Planner.assignBuckets.
-    */
-  def packGreedy(lengths: Seq[Long], target: Long): Seq[Int] = {
-    val out = Array.ofDim[Int](lengths.length)
-    var bucket = 0
-    var acc = 0L
-    var i = 0
-    while (i < lengths.length) {
-      val len = math.max(lengths(i), 0L)
-      if (acc > 0 && acc + len > target) { bucket += 1; acc = 0L }
-      out(i) = bucket
-      acc += len
-      i += 1
-    }
-    out.toSeq
-  }
 }

@@ -172,9 +172,9 @@ object Executor {
   private def permWithType(isDir: Boolean, perm: String): String =
     (if (isDir) "d" else "-") + perm
 
-  /** Execute a plan: mkdirs for dirs (driver — dir count is small), bucketed
-    * mapPartitions copy for files, then delete-sync and dir-attribute
-    * finalize (DistCPPlus.java:264-297). */
+  /** Execute a plan: one bucketed mapPartitions pass on the executors runs
+    * every task (mkdirs for dirs, streamed copies for files), then
+    * delete-sync and dir-attribute finalize (DistCPPlus.java:264-297). */
   def execute(spark: SparkSession, planned: CopyPlan, cfg: CopyConfig): CopyStats = {
     import spark.implicits._
     val tSetup0 = System.nanoTime()

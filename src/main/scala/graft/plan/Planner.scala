@@ -1,12 +1,12 @@
 package graft.plan
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.enumerate.Enumerate
+import graft.operators.PrefixSum
 
 /** The copy planner as Dataset algebra (SURVEY.md §7 step 3).
   *
@@ -17,8 +17,10 @@ import graft.enumerate.Enumerate
   *   - update diff   → left join src⟕dst on relDst + predicate (op 6)
   *   - dup check     → groupBy(relDst).count > 1               (op 8)
   *   - delete sync   → dst left-anti src + ancestor suppression (op 9)
-  *   - split packing → driver greedy (exact, small manifests) or window
-  *                     cumsum bucketing (distributed)           (op 10)
+  *   - split packing → range-partitioned cumsum bucketing      (op 10)
+  *
+  * The destination is listed at most once per plan and that one listing
+  * feeds both the update diff and the delete sync.
   */
 final case class CopyPlan(
     tasks: Dataset[CopyTask],
@@ -168,58 +170,66 @@ object Planner {
     }
   }
 
+  /** The destination tree relativized to `dstRoot` — columns (relDst,
+    * dLen, dMtime, dIsDir), the root entry itself excluded — or None when
+    * the destination does not exist yet. */
+  private def listDestination(spark: SparkSession, dstRoot: String): Option[DataFrame] = {
+    import spark.implicits._
+    val root = new Path(dstRoot)
+    if (!root.getFileSystem(Fs.conf()).exists(root)) None
+    else {
+      val qDstRoot = Enumerate.qualify(dstRoot)
+      Some(Enumerate.listTree(spark, dstRoot)
+        .flatMap(m => PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(r => (r, m.length, m.mtime, m.isDir)))
+        .toDF("relDst", "dLen", "dMtime", "dIsDir"))
+    }
+  }
+
   /** Update-diff: drop tasks whose destination is already "the same"
     * (DistCpUtils.java:239-291 predicate order: timestamp → length; checksum
-    * re-checked lazily at copy time for length-equal pairs). */
+    * re-checked lazily at copy time for length-equal pairs). `dst` is the
+    * [[listDestination]] of `dstRoot`. */
   def updateDiff(
       tasks: Dataset[CopyTask],
+      dst: DataFrame,
       dstRoot: String,
       skipTs: Boolean,
-      skipCrc: Boolean = true,
+      skipCrc: Boolean,
   ): Dataset[CopyTask] = {
     val spark = tasks.sparkSession
     import spark.implicits._
-    val conf = Fs.conf()
-    val dfs = new Path(dstRoot).getFileSystem(conf)
-    if (!dfs.exists(new Path(dstRoot))) tasks
+    val joined = tasks.join(dst, Seq("relDst"), "left").localCheckpoint()
+    val metaDiff = joined
+      .filter(
+        col("src.isDir") || col("dLen").isNull ||
+          col("src.length") =!= col("dLen") ||
+          (if (skipTs) lit(false) else col("src.mtime") =!= col("dMtime")))
+      .drop("dLen", "dMtime", "dIsDir")
+      .as[CopyTask]
+    if (skipCrc) metaDiff
     else {
-      val qDstRoot = Enumerate.qualify(dstRoot)
-      val dst = Enumerate.listTree(spark, dstRoot)
-        .flatMap(m => PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(r => (r, m.length, m.mtime, m.isDir)))
-        .toDF("relDst", "dLen", "dMtime", "dIsDir")
-      val joined = tasks.join(dst, Seq("relDst"), "left").localCheckpoint()
-      val metaDiff = joined
+      // CRC pass over the metadata-equal pairs (DistCpUtils.java:252-291:
+      // checksum compared only when TS+length match; null/unsupported
+      // checksum ⇒ same). Distributed — one getFileChecksum RPC pair per
+      // surviving file inside mapPartitions, never on the driver.
+      val metaSame = joined
         .filter(
-          col("src.isDir") || col("dLen").isNull ||
-            col("src.length") =!= col("dLen") ||
-            (if (skipTs) lit(false) else col("src.mtime") =!= col("dMtime")))
+          !col("src.isDir") && col("dLen").isNotNull &&
+            col("src.length") === col("dLen") &&
+            (if (skipTs) lit(true) else col("src.mtime") === col("dMtime")))
         .drop("dLen", "dMtime", "dIsDir")
         .as[CopyTask]
-      if (skipCrc) metaDiff
-      else {
-        // CRC pass over the metadata-equal pairs (DistCpUtils.java:252-291:
-        // checksum compared only when TS+length match; null/unsupported
-        // checksum ⇒ same). Distributed — one getFileChecksum RPC pair per
-        // surviving file inside mapPartitions, never on the driver.
-        val metaSame = joined
-          .filter(
-            !col("src.isDir") && col("dLen").isNotNull &&
-              col("src.length") === col("dLen") &&
-              (if (skipTs) lit(true) else col("src.mtime") === col("dMtime")))
-          .drop("dLen", "dMtime", "dIsDir")
-          .as[CopyTask]
-        val crcDiff = metaSame.mapPartitions { it =>
-          val c = Fs.conf()
-          it.filter { t =>
-            val sp = new Path(t.src.path)
-            val dp = if (t.relDst == ".") new Path(dstRoot) else new Path(dstRoot, t.relDst)
-            val sc = sp.getFileSystem(c).getFileChecksum(sp)
-            val dc = dp.getFileSystem(c).getFileChecksum(dp)
-            sc != null && dc != null && sc != dc // null ⇒ same ⇒ keep skipped
-          }
+      val crcDiff = metaSame.mapPartitions { it =>
+        val c = Fs.conf()
+        it.filter { t =>
+          val sp = new Path(t.src.path)
+          val dp = if (t.relDst == ".") new Path(dstRoot) else new Path(dstRoot, t.relDst)
+          val sc = sp.getFileSystem(c).getFileChecksum(sp)
+          val dc = dp.getFileSystem(c).getFileChecksum(dp)
+          sc != null && dc != null && sc != dc // null ⇒ same ⇒ keep skipped
         }
-        metaDiff.unionByName(crcDiff)
       }
+      metaDiff.unionByName(crcDiff)
     }
   }
 
@@ -242,99 +252,49 @@ object Planner {
     * leave the parent directories of just-copied files in the doomed set, and
     * the recursive delete pass would destroy them — and their contents — on
     * the next sync run. Closure explosion is bounded by path depth and stays
-    * metadata-scale.
+    * metadata-scale. `dst` is the [[listDestination]] of the destination.
     */
-  def deleteTargets(
-      spark: SparkSession,
-      tasks: Dataset[CopyTask],
-      dstRoot: String,
-  ): Dataset[String] = {
+  def deleteTargets(tasks: Dataset[CopyTask], dst: DataFrame): Dataset[String] = {
+    val spark = tasks.sparkSession
     import spark.implicits._
-    val conf = Fs.conf()
-    val dfs = new Path(dstRoot).getFileSystem(conf)
-    if (!dfs.exists(new Path(dstRoot))) spark.emptyDataset[String]
-    else {
-      val qDstRoot = Enumerate.qualify(dstRoot)
-      val dst = Enumerate.listTree(spark, dstRoot)
-        .flatMap(m => PathUtils.makeRelative(qDstRoot, m.path).filter(_ != "."))
-        .toDF("relDst")
-      val keep = tasks
-        .flatMap { t =>
-          val segs = t.relDst.split('/')
-          (1 to segs.length).map(i => segs.take(i).mkString("/"))
-        }
-        .distinct()
-        .toDF("relDst")
-      val doomed = dst.join(keep, Seq("relDst"), "left_anti")
-      val withParent = doomed.withColumn(
-        "parent",
-        when(col("relDst").contains("/"), regexp_replace(col("relDst"), "/[^/]*$", ""))
-          .otherwise(lit(null)))
-      withParent
-        .join(doomed.select(col("relDst").as("parent")), Seq("parent"), "left_anti")
-        .select(col("relDst")).as[String]
-    }
+    val keep = tasks
+      .flatMap { t =>
+        val segs = t.relDst.split('/')
+        (1 to segs.length).map(i => segs.take(i).mkString("/"))
+      }
+      .distinct()
+      .toDF("relDst")
+    val doomed = dst.select(col("relDst")).join(keep, Seq("relDst"), "left_anti")
+    val withParent = doomed.withColumn(
+      "parent",
+      when(col("relDst").contains("/"), regexp_replace(col("relDst"), "/[^/]*$", ""))
+        .otherwise(lit(null)))
+    withParent
+      .join(doomed.select(col("relDst").as("parent")), Seq("parent"), "left_anti")
+      .select(col("relDst")).as[String]
   }
 
-  /** Size-weighted bucket assignment (CopyInputFormat.java:33-79). Driver-side
-    * exact greedy first-fit when the manifest is small (the reference itself
-    * plans on the driver); [[assignBucketsScalable]] otherwise.
+  /** Size-weighted bucket assignment (CopyInputFormat.java:33-79): in
+    * relDst order, each file weighs its length (dirs weigh 0) and lands in
+    * bucket (bytes up to and including it - 1) / (total / n), clamped to
+    * n-1 — when total % n != 0 the last file would otherwise open an n+1th
+    * bucket that the executor's n-partition identity partitioner rejects.
+    * Cuts fall on fixed byte offsets rather than the reference's greedy
+    * first-fit; a bucket still holds at most target + one file, plus the
+    * < n-byte total % n remainder in the clamped last one.
+    * One [[graft.operators.PrefixSum.runningBefore]] pass: no task rows
+    * reach the driver and no stage runs on a single partition.
     */
   def assignBuckets(tasks: Dataset[CopyTask], numBuckets: Int): Dataset[(CopyTask, Int)] = {
     val spark = tasks.sparkSession
     import spark.implicits._
     val n = math.max(numBuckets, 1)
-    val cnt = tasks.count()
-    if (cnt <= 1000000) {
-      val sorted = tasks.collect().sortBy(_.relDst)
-      val lengths = sorted.map(t => if (t.src.isDir) 0L else t.src.length)
-      val total = lengths.sum
-      val target = math.max(total / n, 1L)
-      val buckets = PathUtils.packGreedy(lengths.toIndexedSeq, target)
-      spark.createDataset(sorted.zip(buckets).toIndexedSeq)
-    } else assignBucketsScalable(tasks, n)
-  }
-
-  /** Distributed bucket assignment with NO single-partition stage — the
-    * 100-TB-manifest path. Two-pass range-partitioned prefix sum:
-    *   1. range-partition by relDst (global order across partitions), compute
-    *      each partition's byte total with one pass;
-    *   2. driver folds the per-partition totals into start offsets (#parts
-    *      values — trivially small), broadcasts them;
-    *   3. each partition computes exact global cumulative sums locally and
-    *      derives bucket = (cum-1) / target.
-    * Equivalent to the global window cumsum, without funneling the manifest
-    * through one task the way `Window.orderBy` (no partitionBy) would.
-    */
-  def assignBucketsScalable(tasks: Dataset[CopyTask], numBuckets: Int): Dataset[(CopyTask, Int)] = {
-    val spark = tasks.sparkSession
-    import spark.implicits._
-    val n = math.max(numBuckets, 1)
     val parts = math.max(tasks.rdd.getNumPartitions, spark.sparkContext.defaultParallelism)
-    val ranged = tasks.repartitionByRange(parts, col("relDst")).sortWithinPartitions(col("relDst")).as[CopyTask]
-      .localCheckpoint()
     def weight(t: CopyTask): Long = if (t.src.isDir) 0L else math.max(t.src.length, 0L)
-    val partTotals: Array[Long] = ranged
-      .mapPartitions(it => Iterator.single(it.map(weight).sum))
-      .collect()
-    val offsets = partTotals.scanLeft(0L)(_ + _) // offsets(i) = bytes before partition i
-    val total = offsets.last
-    val target = math.max(total / n, 1L)
-    val bOffsets = spark.sparkContext.broadcast(offsets)
-    // rdd.mapPartitionsWithIndex, NOT Dataset.mapPartitions +
-    // TaskContext.getPartitionId — the documented applyLimits hazard: a
-    // later union/coalesce merging this into a wider stage offsets the
-    // TASK partition ids and they stop indexing bOffsets.
-    // The bucket clamps to n-1: when total % n != 0, (total-1)/target
-    // reaches n on the last file and would mint an n+1th bucket.
-    spark.createDataset(
-      ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var cum = bOffsets.value(pid)
-        it.map { t =>
-          cum += weight(t)
-          (t, math.min((math.max(cum - 1, 0L) / target).toInt, n - 1))
-        }
-      })
+    PrefixSum.runningBefore(tasks, parts, Seq(col("relDst")))(weight) { (t, before, total) =>
+      val target = math.max(total / n, 1L)
+      (t, math.min(math.max(before + weight(t) - 1, 0L) / target, n - 1L).toInt)
+    }
   }
 
   /** Plan serialization (ref §3.3 `generateConf` / export-only: plan now,
@@ -382,10 +342,16 @@ object Planner {
     // up to date at the destination — the copy then silently overwrites and
     // the two sources ping-pong the destination between runs with exit 0
     checkDuplication(limited)
-    val diffed =
-      if (cfg.update) updateDiff(limited, cfg.dst, cfg.skipTs, cfg.skipCrc) else limited
-    val deletes =
-      if (cfg.delete) deleteTargets(spark, all, cfg.dst) else spark.emptyDataset[String]
+    val dst =
+      if (cfg.update || cfg.delete) listDestination(spark, cfg.dst) else None
+    val diffed = dst match {
+      case Some(d) if cfg.update => updateDiff(limited, d, cfg.dst, cfg.skipTs, cfg.skipCrc)
+      case _ => limited
+    }
+    val deletes = dst match {
+      case Some(d) if cfg.delete => deleteTargets(all, d)
+      case _ => spark.emptyDataset[String]
+    }
     CopyPlan(
       tasks = diffed.localCheckpoint(),
       deletes = deletes,

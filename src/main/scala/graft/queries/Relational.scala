@@ -404,8 +404,8 @@ object Relational {
         // Global cumulative sum WITHOUT a single-partition window (the r1/r2
         // formulation used Window.orderBy with no partitionBy — every row
         // through one task): operators.PrefixSum.runningBefore, the shared
-        // two-pass range-partitioned scheme (same as
-        // graft.plan.Planner.assignBucketsScalable). Weights are exact
+        // two-pass range-partitioned scheme the copy planner's
+        // graft.plan.Planner.assignBuckets also packs with. Weights are exact
         // integer cents, so the distributed sum is bit-identical to the
         // oracle's sequential window.
         import s.implicits._

@@ -30,6 +30,7 @@ import org.apache.hadoop.fs.{FileChecksum, FileStatus, Path, RawLocalFileSystem}
   * deprecated lazy permission loader rejects non-file:// URIs); the data
   * plane (open/create/rename/delete/setTimes) is inherited — those paths
   * resolve through the URI's path component and are scheme-agnostic.
+  * Every listStatus is tallied per path in [[ChecksummedLocalFs.listStatusCalls]].
   */
 class ChecksummedLocalFs extends RawLocalFileSystem {
   override def getScheme: String = "chkfile"
@@ -55,6 +56,7 @@ class ChecksummedLocalFs extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[FileStatus] = {
     val p = nio(f)
+    ChecksummedLocalFs.listed.merge(p.toString, 1, (a: Integer, b: Integer) => a + b)
     if (!JFiles.isDirectory(p)) Array(statusOf(f))
     else Using.resource(JFiles.list(p)) { stream =>
       stream.iterator.asScala
@@ -80,6 +82,13 @@ class ChecksummedLocalFs extends RawLocalFileSystem {
 }
 
 object ChecksummedLocalFs {
+  private val listed = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+
+  /** listStatus calls per local path, JVM-wide: local-mode executors share
+    * the driver's JVM, so a test can count the listings a plan issues. */
+  def listStatusCalls: Map[String, Int] =
+    listed.asScala.map { case (k, v) => k -> v.intValue }.toMap
+
   /** FileChecksum.equals compares (algorithm, length, bytes) — the base
     * class contract — so two of these are equal iff file contents match. */
   final class Md5Checksum(bytes: Array[Byte]) extends FileChecksum {

@@ -456,34 +456,76 @@ class CopyLayerSpec extends SparkTestBase {
 
   test("scalable bucket assignment balances bytes without a global window") {
     import spark.implicits._
-    val rnd = new Random(13)
-    val tasks = (1 to 5000).map { i =>
-      val len = rnd.nextLong(1000000)
-      CopyTask(FileMeta(f"/s/f$i%05d", len, isDir = false, 1, 0, 0, 0, "", "", ""), f"f$i%05d")
+    def file(rel: String, len: Long): CopyTask =
+      CopyTask(FileMeta(s"/s/$rel", len, isDir = false, 1, 0, 0, 0, "", "", ""), rel)
+    def dir(rel: String): CopyTask = // a dir's reported length must not weigh
+      CopyTask(FileMeta(s"/s/$rel", 4096, isDir = true, 1, 0, 0, 0, "", "", ""), rel)
+    def weight(t: CopyTask): Long = if (t.src.isDir) 0L else t.src.length
+    def check(tasks: Seq[CopyTask], n: Int): Unit = {
+      val clue = s"n=$n tasks=${tasks.length}"
+      val assigned = Planner.assignBuckets(spark.createDataset(tasks).repartition(8), n).collect()
+      assert(assigned.map(_._1.relDst).sorted.toSeq == tasks.map(_.relDst).sorted, clue)
+      // bucket ids index the executor's identity partitioner
+      assert(assigned.forall { case (_, b) => b >= 0 && b < n }, clue)
+      // exact global cumsum in relDst order, CLAMPED to n-1: when
+      // total % n != 0 the raw (cum-1)/target reaches n on the last file
+      val total = tasks.map(weight).sum
+      val target = math.max(total / n, 1L)
+      val sorted = tasks.sortBy(_.relDst)
+      val cums = sorted.map(weight).scanLeft(0L)(_ + _).tail
+      val expect = sorted.zip(cums).map { case (t, cum) =>
+        t.relDst -> math.min((cum - 1).max(0L) / target, n - 1L).toInt
+      }.toMap
+      assigned.foreach { case (t, b) => assert(b == expect(t.relDst), s"$clue ${t.relDst}") }
+      // ids are non-decreasing in relDst order
+      val inOrder = assigned.sortBy(_._1.relDst).map(_._2)
+      assert(inOrder.toSeq == inOrder.sorted.toSeq, clue)
+      // a bucket holds at most target + its first file; the clamped last
+      // bucket also absorbs the total % n remainder
+      val maxFile = (0L +: tasks.map(weight)).max
+      assigned.groupBy(_._2).foreach { case (b, ts) =>
+        val slack = if (b == n - 1) math.max(total - n * target, 0L) else 0L
+        assert(ts.map(t => weight(t._1)).sum <= target + maxFile + slack, s"$clue bucket $b")
+      }
     }
-    val ds = spark.createDataset(tasks).repartition(8)
-    val n = 16
-    val assigned = graft.plan.Planner.assignBucketsScalable(ds, n).collect()
-    assert(assigned.length == 5000)
-    val weights = assigned.groupBy(_._2).map { case (b, ts) => b -> ts.map(_._1.src.length).sum }
-    val total = tasks.map(_.src.length).sum
-    val target = total / n
-    val maxFile = tasks.map(_.src.length).max
-    // every bucket except possibly the last stays within target + one file
-    weights.foreach { case (_, w) => assert(w <= target + maxFile) }
-    // assignment is in global relDst order: same task -> same bucket as exact
-    // cumsum, CLAMPED to n-1 (when total % n != 0 the raw (cum-1)/target
-    // reaches n on the last file — an n+1th bucket the executor's identity
-    // partitioner would reject)
-    val sorted = tasks.sortBy(_.relDst)
-    var cum = 0L
-    val expect = sorted.map { t =>
-      cum += t.src.length
-      (t.relDst, math.min(((cum - 1).max(0L) / math.max(target, 1L)).toInt, n - 1))
-    }.toMap
-    assigned.foreach { case (t, b) => assert(b == expect(t.relDst), s"${t.relDst}") }
-    assert(assigned.forall { case (_, b) => b >= 0 && b < n },
-      "bucket ids must index the executor's identity partitioner")
+    val rnd = new Random(13)
+    check((1 to 5000).map { i =>
+      if (i % 100 == 0) dir(f"f$i%05d") else file(f"f$i%05d", rnd.nextLong(1000000))
+    }, 16)
+    check((1 to 5).map(i => file(s"f$i", 6)), 16) // n > number of files
+    check((1 to 5).map(i => file(s"f$i", 6)), 4) // total % n != 0
+    check((1 to 7).map(i => file(s"f$i", 1)), 4) // remainder piles onto bucket n-1
+    check((1 to 6).map(i => dir(s"d$i")), 4) // dirs only: a no-op sync's plan
+    check(Nil, 4) // empty manifest
+    (1 to 6).foreach { _ =>
+      check(Seq.tabulate(rnd.nextInt(50))(i => file(f"r$i%02d", rnd.nextLong(1000))), 1 + rnd.nextInt(20))
+    }
+  }
+
+  test("plain copy of five 6-byte files fills exactly the executor's buckets") {
+    // 30 bytes over 4 buckets (local[4]): target = 7, and the fifth file's
+    // raw bucket is 4 — one past the identity partitioner's last partition
+    val src = tmpDir("five-src")
+    (1 to 5).foreach(i => Files.write(src.resolve(s"f$i"), "abcdef".getBytes(StandardCharsets.UTF_8)))
+    val dst = tmpDir("five-dst").resolve("out")
+    val out = new java.io.ByteArrayOutputStream()
+    val rc = Console.withOut(out)(graft.cli.Main.run(Array(src.toString, dst.toString), spark))
+    val report = out.toString(StandardCharsets.UTF_8)
+    assert(rc == 0, report)
+    assert(report.contains("COPY=5 "), report)
+    assert(treeListing(src) == treeListing(dst))
+  }
+
+  test("an -update -delete plan lists each destination directory once") {
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    runCopy(Seq("-pt"), src, dst)
+    val cfg = Args.parse(Seq("-update", "-delete", "-pt", src.toString, s"chkfile://$dst")).toOption.get
+    val plan = Planner.plan(spark, cfg)
+    assert(plan.deletes.collect().isEmpty) // forces the lazy delete set
+    val dstDirs = Files.walk(dst).iterator().asScala.filter(Files.isDirectory(_)).map(_.toString).toSet
+    val calls = ChecksummedLocalFs.listStatusCalls.filter { case (p, _) => p == dst.toString || p.startsWith(s"$dst/") }
+    assert(calls == dstDirs.map(_ -> 1).toMap)
   }
 
   test("update with CRC pass (null local checksums => same) still skips") {

@@ -83,26 +83,4 @@ class CoreSpec extends AnyFunSuite {
     assert(cfg.fileLimit == 3 && cfg.sizeLimit == 4096 && cfg.maxTasks == 7)
     assert(cfg.srcs == Seq("/s1", "/s2") && cfg.dst == "/d")
   }
-
-  // --- greedy packing invariants (CopyInputFormat.java:51-77) ---
-  test("packGreedy invariants") {
-    for (_ <- 1 to 300) {
-      val lens = Seq.fill(rnd.nextInt(50))(rnd.nextLong(1000))
-      val target = 1L + rnd.nextLong(2000)
-      val b = PathUtils.packGreedy(lens, target)
-      assert(b.length == lens.length)
-      if (b.nonEmpty) assert(b.head == 0)
-      b.sliding(2).foreach { case Seq(x, y) => assert(y == x || y == x + 1); case _ => }
-      b.zip(lens).groupBy(_._1).values.foreach { grp =>
-        val w = grp.map(_._2).sum
-        assert(w <= target + grp.map(_._2).max)
-      }
-    }
-  }
-
-  test("packGreedy matches reference semantics example") {
-    assert(PathUtils.packGreedy(Seq(4, 4, 4), 10) == Seq(0, 0, 1))
-    assert(PathUtils.packGreedy(Seq(0, 0, 0), 1) == Seq(0, 0, 0))
-    assert(PathUtils.packGreedy(Seq(12, 1), 10) == Seq(0, 1))
-  }
 }
