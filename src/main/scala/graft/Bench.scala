@@ -3,8 +3,6 @@ package graft
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Queries execute fully (noop sink) so sorts/limits are
   * not optimized away the way a bare `.count()` would allow.
@@ -67,7 +65,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     val runs = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt, 1)
     // optional comma-separated name filter for single-query iteration —
     // applied to BOTH engines so ratios always compare the same subset
@@ -82,38 +80,8 @@ object Bench {
     // (ratios print as null); the driver never sets it.
     val duck =
       if (sys.env.get("SPARK_GRAFT_BENCH_NO_ORACLE").contains("1")) Map.empty[String, Double]
-      else oracleTimes(sfDir, runs, cpus, selected.map(_.name).toSet)
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-    // partitions-scale-with-data: see ShuffleSizing (no-op at sf0.1)
-    ShuffleSizing.configs(sfDir, cpus.toInt).foreach { case (k, v) => builder0.config(k, v) }
-    val spark = builder0
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // default 100 evicts across a 45-query suite (~4 codegen units each),
-      // forcing janino recompiles of identical source on every repeat run
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // Suite-growth hygiene (round-9 drift diagnosis): per-query times
-      // carry SHARED-JVM overhead that scales with the whole suite, not the
-      // query — the r9 binary re-run on the r8 123-query subset alone came
-      // in 13% UNDER r8 while the same queries inside the 161-run read 16%
-      // over. Status stores are one accumulating term: even with the UI off,
-      // SQLAppStatusListener retains 1000 executions' plan graphs and the
-      // job/stage stores default to 1000 entries each — a 161×3-pass run
-      // holds ~500 execution plans on heap. Retain a handful instead.
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the per-query unpersist sweep below emits one intended WARN per
-    // checkpointed RDD ("lineage truncated, cannot be recomputed") — silence
-    // that logger so the artifact line isn't buried in noise
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+      else oracleTimes(sfDir, runs, cpus.toString, selected.map(_.name).toSet)
+    val spark = Session.forCorpus("graft-bench", sfDir)
     // untimed warmup: JVM/codegen/parquet-footer costs land here, not on q01
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     // fixed per-query overhead: an empty-plan job through the SAME timing
@@ -152,9 +120,7 @@ object Bench {
           try { q.build(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable => System.err.println(s"[bench] ${q.name}: ${e.getMessage}"); false }
         val dt = (System.nanoTime() - t0) / 1e9
-        // drop blocks the query materialized (localCheckpoint): repeated runs
-        // of 45+ queries must not accumulate executor storage memory
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        Session.sweep(spark)
         if (ok) Some(dt) else None
       }
     }

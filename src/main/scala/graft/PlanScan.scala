@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit diagnostic: builds every registered query and tallies physical
   * operators from the executed plan, flagging scale anti-patterns
   * (CartesianProduct, single-partition Window.orderBy shows up as a Window
@@ -21,19 +19,7 @@ import org.apache.spark.sql.SparkSession
 object PlanScan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-    // partitions-scale-with-data: see ShuffleSizing (derives == cpus at the
-    // census scales, so the census stays byte-identical to a cpus pin)
-    ShuffleSizing.configs(sfDir, cpus.toInt).foreach { case (k, v) => builder0.config(k, v) }
-    val spark = builder0
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.forCorpus("graft-planscan", sfDir)
     val keys = Seq(
       "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
       "BroadcastNestedLoopJoin", "CartesianProduct",
@@ -69,7 +55,7 @@ object PlanScan {
           println(s"FAIL ${q.name}: ${e.getMessage}")
           fails += q.name
       }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Session.sweep(spark)
     }
     println(totals.map { case (k, n) => s"$k=$n" }.mkString("TOTALS ", " ", ""))
     sys.env.get("SPARK_GRAFT_PLANSCAN_OUT").foreach { path =>

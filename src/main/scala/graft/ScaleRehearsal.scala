@@ -1,131 +1,54 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-/** Empirical scale rehearsal: run a named query subset ONCE-warm/ONCE-timed
-  * against an arbitrary sf dir, recording wall-clock plus the executor-side
-  * totals plan-shape audits can't show — shuffle bytes written and
-  * memory/disk spill. The SCALE.md "sf1 rehearsal" table is produced by
-  * running this at sf0.1 and at the generated 10× corpus
-  * (tools/gen_sf1.py) and comparing: a query whose wall-clock exponent
-  * log₁₀(t₁/t₀.₁) stays ≲ 1 scales linearly; shuffle bytes growing ≫ 10×
-  * or spill appearing at sf1 names the stage that needs attention before
-  * 100 TB.
+/** Empirical scale rehearsal and per-query runtime attribution: run a
+  * query subset (default: all) warm-up + interleaved min-of-n against an
+  * arbitrary sf dir, recording wall-clock plus what the bench total and
+  * plan-shape audits can't show — jobs, stages, tasks, summed executor
+  * task time, shuffle bytes and memory/disk spill of the fastest run. Is
+  * a 2 s query 2 s of compute, or 40 tiny jobs of scheduling floor?
   *
-  * Metric attribution is keyed by JOB GROUP, not by reset()-window: each
-  * timed run executes under its own `setJobGroup` id, the listener maps
-  * stage → group at job start and accumulates per group, so a stage event
-  * that the async bus delivers late (observed once at sf10: ~1 GB of
-  * t161's banding exchange landing in the next query's window despite the
-  * drain) lands in the RIGHT bucket no matter when it arrives. The
-  * end-of-run drain remains, but only to make the final read complete —
-  * it is no longer what keeps queries from bleeding into each other.
+  * The SCALE.md "sf1 rehearsal" table is produced by running this at
+  * sf0.1 and at the generated 10× corpus (tools/gen_sf1.py) and comparing:
+  * a query whose wall-clock exponent log₁₀(t₁/t₀.₁) stays ≲ 1 scales
+  * linearly; shuffle bytes growing ≫ 10× or spill appearing at sf1 names
+  * the stage that needs attention before 100 TB. Metrics are keyed by job
+  * group ([[QueryMetrics]]), so a late stage event cannot land on the
+  * wrong query.
   *
   * Deliberately separate from [[Bench]]: Bench is the driver's
   * fixed-format artifact (min-of-n, DuckDB denominator); this is a
   * diagnostic whose DuckDB arm would be quadratic-cost nonsense at sf1
   * (the all-pairs list-lambda oracles), so it has none.
   *
-  * Usage: runMain graft.ScaleRehearsal <sfDir> <name,name,...>
+  * Usage: runMain graft.ScaleRehearsal <sfDir> [name,name,...]
+  *   (SPARK_GRAFT_REHEARSAL_RUNS timed passes, default 2)
+  * Output: one TSV line per query →
+  *   name wall_s jobs stages tasks task_time_s shuf_read_mb shuf_write_mb spill_mb
   */
 object ScaleRehearsal {
 
   def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println("usage: runMain graft.ScaleRehearsal <sfDir> <name,name,...>")
+    if (args.isEmpty) {
+      System.err.println("usage: runMain graft.ScaleRehearsal <sfDir> [name,name,...]")
       sys.exit(2)
     }
-    val Array(sfDir, nameCsv) = args.take(2)
-    val names = nameCsv.split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-    // partitions-scale-with-data by DEFAULT (ShuffleSizing derives AQE's
-    // initialPartitionNum from the corpus); SPARK_GRAFT_SHUFFLE_PARTITIONS
-    // remains the exact-control override for sizing experiments
-    ShuffleSizing.configs(sfDir, cpus.toInt).foreach { case (k, v) => builder0.config(k, v) }
-    val spark = builder0
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    final case class Tot(var shuffle: Long = 0L, var spill: Long = 0L)
-    object m extends SparkListener {
-      private val stageGroup = new ConcurrentHashMap[Int, String]()
-      val byGroup = new ConcurrentHashMap[String, Tot]()
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("ungrouped")
-        js.stageIds.foreach(id => stageGroup.put(id, g))
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val tm = sc.stageInfo.taskMetrics
-        if (tm != null) {
-          val g = Option(stageGroup.get(sc.stageInfo.stageId)).getOrElse("ungrouped")
-          val t = byGroup.computeIfAbsent(g, _ => Tot())
-          t.synchronized {
-            t.shuffle += tm.shuffleWriteMetrics.bytesWritten
-            t.spill += tm.memoryBytesSpilled + tm.diskBytesSpilled
-          }
-        }
-      }
+    val sfDir = args(0)
+    val registry = args.lift(1).map(_.split(',').toSeq) match {
+      case Some(names) =>
+        val missing = names.toSet -- SparkEntry.registry.map(_.name)
+        require(missing.isEmpty, s"unknown queries: $missing")
+        SparkEntry.registry.filter(q => names.contains(q.name))
+      case None => SparkEntry.registry
     }
-    spark.sparkContext.addSparkListener(m)
-
-    val registry = SparkEntry.registry.filter(q => names.contains(q.name))
-    val missing = names.toSet -- registry.map(_.name).toSet
-    require(missing.isEmpty, s"unknown queries: $missing")
-
-    // Interleaved min-of-n, same rationale as Bench: this machine is
-    // shared and stalls last minutes, so back-to-back repeats of one query
-    // all land inside one stall; interleaving lets the min come from a
-    // clean pass. Pass 0 is an untimed warmup (codegen, file footers).
-    val runs = math.max(sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_RUNS", "2").toInt, 1)
-    def once(q: graft.queries.Q, group: String): Double = {
-      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
-      val t0 =
-        try {
-          val t = System.nanoTime()
-          q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-          t
-        } finally spark.sparkContext.clearJobGroup()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      dt
-    }
-    registry.foreach(q => once(q, s"warmup-${q.name}"))
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    val bestGroup = scala.collection.mutable.Map.empty[String, String]
-    for (run <- 1 to runs; q <- registry) {
-      val group = s"run$run-${q.name}"
-      val sec = once(q, group)
-      if (!best.contains(q.name) || sec < best(q.name)) {
-        best(q.name) = sec
-        bestGroup(q.name) = group
-      }
-    }
-    // one drain at the end so the LAST run's stage events are all in;
-    // per-group attribution means a straggler can no longer land in the
-    // wrong bucket, only arrive late for this read
-    if (!org.apache.spark.GraftListenerDrain.drain(spark.sparkContext))
-      Thread.sleep(1000)
-    println(f"${"query"}%-28s ${"sec"}%8s ${"shuffleMB"}%10s ${"spillMB"}%8s")
-    registry.foreach { q =>
-      val sec = best(q.name)
-      val t = Option(m.byGroup.get(bestGroup(q.name))).getOrElse(Tot())
-      // fields are mutated under t.synchronized on the listener thread —
-      // read under the same lock so the post-drain read is fully ordered
-      val (sh, sp) = t.synchronized((t.shuffle, t.spill))
-      println(f"${q.name}%-28s $sec%8.2f ${sh / 1e6}%10.1f ${sp / 1e6}%8.1f")
+    val spark = Session.forCorpus("graft-scalerehearsal", sfDir)
+    val timed = QueryMetrics.timeArms(spark,
+      registry.map(q => q.name -> (() => q.build(spark, sfDir))))
+    println("name\twall_s\tjobs\tstages\ttasks\ttask_time_s\tshuf_read_mb\tshuf_write_mb\tspill_mb")
+    timed.foreach { r =>
+      val t = r.totals
+      println(f"${r.name}\t${r.seconds}%.3f\t${t.jobs}\t${t.stages}\t${t.tasks}\t" +
+        f"${t.taskTimeMs / 1e3}%.2f\t${t.shuffleRead / 1e6}%.1f\t" +
+        f"${t.shuffleWrite / 1e6}%.1f\t${t.spill / 1e6}%.1f")
     }
     spark.stop()
   }

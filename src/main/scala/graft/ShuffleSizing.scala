@@ -76,15 +76,8 @@ object ShuffleSizing {
     * BOTH; otherwise partitions stay at cpus and the initial number is
     * derived from the corpus. */
   def configs(dir: String, cpus: Int): Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") match {
-      case Some(n) =>
-        Seq(
-          "spark.sql.shuffle.partitions" -> n,
-          "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> n)
-      case None =>
-        Seq(
-          "spark.sql.shuffle.partitions" -> cpus.toString,
-          "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-            initialPartitionNum(dir, cpus).toString)
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt) match {
+      case Some(n) => Session.sizing(n, n)
+      case None => Session.sizing(cpus, initialPartitionNum(dir, cpus))
     }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,8 +8,8 @@ import org.apache.spark.sql.functions._
   * t57 isolated-arm readings). [[ScaleRehearsal]] times whole registry
   * queries; this times named SUB-PLANS of one query so a wall-clock
   * number can be attributed to the stage that owns it before anyone
-  * redesigns the wrong one. Same discipline: warmup pass + interleaved
-  * min-of-n, job-group-keyed shuffle/spill attribution.
+  * redesigns the wrong one. Same timing loop ([[QueryMetrics.timeArms]]):
+  * warmup pass + interleaved min-of-n, job-group-keyed shuffle/spill.
   *
   * Probes are cumulative prefixes of the query's pipeline, so
   * arm[i+1] − arm[i] isolates one stage's cost. The t121 arms mirror
@@ -225,86 +222,15 @@ object StageProbe {
       case "t57" => t57Arms
       case other => sys.error(s"no stage probe defined for: $other")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-    // partitions-scale-with-data: see ShuffleSizing (probes must run the
-    // same sizing the engine ships, or they attribute the wrong plan)
-    ShuffleSizing.configs(sfDir, cpus.toInt).foreach { case (k, v) => builder0.config(k, v) }
-    val spark = builder0
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    final case class Tot(var shuffle: Long = 0L, var spill: Long = 0L)
-    object m extends SparkListener {
-      private val stageGroup = new ConcurrentHashMap[Int, String]()
-      val byGroup = new ConcurrentHashMap[String, Tot]()
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("ungrouped")
-        js.stageIds.foreach(id => stageGroup.put(id, g))
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val tm = sc.stageInfo.taskMetrics
-        if (tm != null) {
-          val g = Option(stageGroup.get(sc.stageInfo.stageId)).getOrElse("ungrouped")
-          val t = byGroup.computeIfAbsent(g, _ => Tot())
-          t.synchronized {
-            t.shuffle += tm.shuffleWriteMetrics.bytesWritten
-            t.spill += tm.memoryBytesSpilled + tm.diskBytesSpilled
-          }
-          // per-stage forensics: which stage owns the spill (opt-in — one
-          // line per stage is too chatty for the summary table)
-          if (sys.env.get("SPARK_GRAFT_PROBE_STAGES").contains("1")) {
-            val sp = tm.memoryBytesSpilled + tm.diskBytesSpilled
-            if (sp > 0)
-              println(f"[stage] $g stage=${sc.stageInfo.stageId} " +
-                f"spillMB=${sp / 1e6}%.1f tasks=${sc.stageInfo.numTasks} " +
-                f"name=${sc.stageInfo.name.take(80)}")
-          }
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(m)
-
-    val runs = math.max(sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_RUNS", "2").toInt, 1)
-    def once(name: String, build: (SparkSession, String) => DataFrame, group: String): Double = {
-      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
-      val t0 =
-        try {
-          val t = System.nanoTime()
-          build(spark, sfDir).write.format("noop").mode("overwrite").save()
-          t
-        } finally spark.sparkContext.clearJobGroup()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      dt
-    }
-    arms.foreach { case (n, b) => once(n, b, s"warmup-$n") }
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    val bestGroup = scala.collection.mutable.Map.empty[String, String]
-    for (run <- 1 to runs; (n, b) <- arms) {
-      val group = s"run$run-$n"
-      val sec = once(n, b, group)
-      if (!best.contains(n) || sec < best(n)) { best(n) = sec; bestGroup(n) = group }
-    }
-    if (!org.apache.spark.GraftListenerDrain.drain(spark.sparkContext))
-      Thread.sleep(1000)
+    val spark = Session.forCorpus("graft-stageprobe", sfDir)
+    val timed = QueryMetrics.timeArms(spark,
+      arms.map { case (n, build) => n -> (() => build(spark, sfDir)) })
     println(f"${"arm"}%-14s ${"sec"}%8s ${"delta"}%8s ${"shuffleMB"}%10s ${"spillMB"}%8s")
     var prev = 0.0
-    arms.foreach { case (n, _) =>
-      val sec = best(n)
-      val t = Option(m.byGroup.get(bestGroup(n))).getOrElse(Tot())
-      val (sh, sp) = t.synchronized((t.shuffle, t.spill))
-      println(f"$n%-14s $sec%8.2f ${sec - prev}%8.2f ${sh / 1e6}%10.1f ${sp / 1e6}%8.1f")
-      prev = sec
+    timed.foreach { r =>
+      println(f"${r.name}%-14s ${r.seconds}%8.2f ${r.seconds - prev}%8.2f " +
+        f"${r.totals.shuffleWrite / 1e6}%10.1f ${r.totals.spill / 1e6}%8.1f")
+      prev = r.seconds
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -40,18 +39,8 @@ object StreamRehearsal {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, twin, nStr) = args.take(3)
     val n = nStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-    // partitions-scale-with-data: see ShuffleSizing
-    ShuffleSizing.configs(sfDir, cpus.toInt).foreach { case (k, v) => builder0.config(k, v) }
-    val spark = builder0
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark: org.apache.spark.sql.SparkSession =
+      Session.forCorpus("graft-streamrehearsal", sfDir)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +8,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-    // partitions-scale-with-data (SCALE.md rule as engine behavior):
-    // shuffle.partitions stays cpus; AQE's initialPartitionNum derives
-    // from the corpus size — identical to a plain cpus pin at gate scales
-    ShuffleSizing.configs(sfDir, cpus.toInt).foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // same shared-JVM hygiene as Bench: a 163-query dump otherwise
-      // retains ~1000 execution plans + job/stage entries on heap
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.forCorpus("graft-verify", sfDir)
     new java.io.File(outDir).mkdirs()
     // A query that throws must stay VISIBLE in the correctness report (round-7
     // advice: 10 broken queries simply vanished from CORRECTNESS_r07.json
@@ -54,9 +34,7 @@ object Verify {
           System.err.println(s"[verify] $name error-marker write failed: ${e2.getMessage}")
         }
       }
-      // drop blocks the query materialized (localCheckpoint): the 45-query
-      // dump must not accumulate executor storage memory across queries
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Session.sweep(spark)
     }
     def q(s: String): String = Json.str(s)
     val json = SparkEntry.oracleSql

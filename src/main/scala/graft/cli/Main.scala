@@ -167,25 +167,25 @@ object Main {
     }
   }
 
+  /** `-sql <dir>` runs analytics over the corpus under dir, so it is sized
+    * like every corpus session (see [[graft.ShuffleSizing]]). A copy's
+    * exchanges carry file-METADATA rows (~200 B/file), so the right sizing
+    * input is file COUNT, which isn't known until the enumeration the
+    * session exists to run. Instead of pre-listing the source twice, give
+    * AQE a static generous ceiling to coalesce down from: 4096 initial
+    * partitions × ~200 MB/task ≈ 4B files before the ceiling binds, while
+    * small trees coalesce to the same task counts a plain cpus pin
+    * produced. */
+  private[graft] def sizing(argv: Array[String], cpus: Int): Seq[(String, String)] =
+    argv match {
+      case Array("-sql", dir, _*) if !dir.startsWith("-") => graft.ShuffleSizing.configs(dir, cpus)
+      case _ => graft.Session.sizing(cpus, math.max(cpus, 4096))
+    }
+
   def main(argv: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-copy")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Copy-layer exchanges carry file-METADATA rows (~200 B/file), so the
-      // right sizing input is file COUNT, which isn't known until the
-      // enumeration this session exists to run. Instead of pre-listing the
-      // source twice, give AQE a static generous ceiling to coalesce down
-      // from: 4096 initial partitions × ~200 MB/task ≈ 4B files before the
-      // ceiling binds, while small trees coalesce to the same task counts a
-      // plain cpus pin produced (see ShuffleSizing for the query engine's
-      // corpus-derived variant).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        math.max(cpus.toInt, 4096).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.cpus
+    val spark = graft.Session("graft-copy",
+      sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"), sizing(argv, cpus))
     val code = run(argv, spark)
     spark.stop()
     if (code != 0) sys.exit(code)

@@ -1,15 +1,14 @@
 package org.apache.spark
 
-/** Deterministic listener-bus drain for [[graft.ScaleRehearsal]].
+/** Deterministic listener-bus drain for [[graft.QueryMetrics]].
   *
-  * The rehearsal attributes per-query shuffle/spill by reading a
-  * SparkListener's accumulated stage metrics right after each timed run.
-  * The listener bus is async, so a straggling SparkListenerStageCompleted
-  * from a slow stage could land after the read (or after the next query's
-  * reset) and silently mis-attribute SCALE.md numbers. `LiveListenerBus
-  * .waitUntilEmpty` is the precise "all posted events delivered" barrier,
-  * but it is `private[spark]` — this one-method shim in the
-  * `org.apache.spark` package exposes it. Test-only/diagnostic surface;
+  * ScaleRehearsal and StageProbe read the listener's per-group job and
+  * stage metrics right after their timed runs. The listener bus is async,
+  * so a straggling SparkListenerStageCompleted from a slow stage could
+  * land after the read and silently under-report SCALE.md numbers.
+  * `LiveListenerBus.waitUntilEmpty` is the precise "all posted events
+  * delivered" barrier, but it is `private[spark]` — this one-method shim
+  * in the `org.apache.spark` package exposes it. Test-only/diagnostic surface;
   * nothing in the query path depends on it.
   */
 object GraftListenerDrain {

@@ -57,6 +57,15 @@ class SqlCliSpec extends SparkTestBase {
     assert(lines.length == 4)
   }
 
+  test("-sql runs under Verify's settings for the same corpus and cpus") {
+    // a copy-sized session once ran -sql without nanosAsLong, so INT64
+    // TIMESTAMP(NANOS) corpus columns failed with PARQUET_TYPE_ILLEGAL
+    val sql = Session.settings(Main.sizing(Array("-sql", dir, "-e", "SELECT 1"), 4))
+    assert(sql == Session.settings(ShuffleSizing.configs(dir, 4)))
+    assert(sql.contains("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
+    assert(Main.sizing(Array("-pt", "/a", "/b"), 4) == Session.sizing(4, 4096))
+  }
+
   test("exit codes: bad usage is -1, failing SQL is -999") {
     assert(runCli("-sql")._1 == -1) // no dir
     assert(runCli("-sql", dir)._1 == -1) // no statements
