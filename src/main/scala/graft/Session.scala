@@ -68,7 +68,13 @@ object Session {
     apply(appName, s"local[$cpus]", ShuffleSizing.configs(dir, cpus))
 
   /** Drop the blocks a query materialized (localCheckpoint), so a run of
-    * many queries does not accumulate executor storage memory. */
-  def sweep(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    * many queries does not accumulate executor storage memory. With a
+    * [[mark]], only RDDs created after it are dropped. */
+  def sweep(spark: SparkSession, after: Int = -1): Unit =
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (id > after) rdd.unpersist(blocking = false)
+    }
+
+  /** An RDD id watermark: every RDD created later has a larger id. */
+  def mark(spark: SparkSession): Int = spark.sparkContext.emptyRDD[Unit].id
 }

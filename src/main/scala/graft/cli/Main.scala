@@ -39,6 +39,9 @@ object Main {
         System.err.println(s"graft-copy: $msg")
         -1
       case Right(cfg) =>
+        // the op's level checkpoints, plan tasks, bucket ranges and results
+        // stay pinned until released; RDDs the caller persisted survive
+        val mark = graft.Session.mark(spark)
         try {
           val plan = Planner.plan(spark, cfg)
           if (cfg.exportOnly) {
@@ -75,7 +78,7 @@ object Main {
           case e: Throwable =>
             System.err.println(s"graft-copy: ${e.getClass.getName}: ${e.getMessage}")
             -999
-        }
+        } finally graft.Session.sweep(spark, after = mark)
     }
 
   /** Split a `-f` script on statement-separating semicolons ONLY: a naive

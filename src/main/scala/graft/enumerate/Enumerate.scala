@@ -4,6 +4,7 @@ import java.util.regex.Pattern
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.{FileMeta, Fs, PathUtils}
@@ -13,12 +14,13 @@ import graft.core.{FileMeta, Fs, PathUtils}
   * The reference walks each source tree with a driver-side stack
   * (DistCPPlus.java:611-750) and batches metadata RPCs by parent dir
   * (FileStatusClusterOptimizer.java:50-115). Here the walk is a distributed
-  * level-by-level BFS: each round lists the current frontier of directories
-  * with one `listStatus` per dir executed inside `mapPartitions`, so a
-  * 1000-executor cluster fans the metadata RPCs out instead of serializing
-  * them on the driver — the reference's worst scalability bottleneck
-  * (SURVEY.md §2.2). The result is metadata-scale (one row per file), so
-  * collect-free Dataset unions stay cheap relative to the data being copied.
+  * level-by-level BFS over all roots at once: each round lists the current
+  * frontier of directories with one `listStatus` per dir executed inside
+  * `mapPartitions`, so a 1000-executor cluster fans the metadata RPCs out
+  * instead of serializing them on the driver — the reference's worst
+  * scalability bottleneck (SURVEY.md §2.2). The result is metadata-scale
+  * (one row per file), so collect-free unions stay cheap relative to the
+  * data being copied.
   */
 object Enumerate {
 
@@ -67,25 +69,57 @@ object Enumerate {
     }
   }
 
+  /** Full recursive enumeration of every root in ONE level-synchronous
+    * walk (each root's own entry included). Every entry is tagged with the
+    * INDEX of the root it was listed under, not matched to a root by path
+    * prefix, so equal or nested roots each get their complete listing.
+    *
+    * Each level is one Spark job, the eager local checkpoint of its
+    * listing, spread over min(dirs, defaultParallelism) tasks. The same job
+    * counts the next frontier's dirs in an accumulator; a retried task can
+    * only over-count, which costs one empty round. The result is one flat
+    * union of the checkpointed levels, so its lineage does not grow with
+    * depth, coalesced to defaultParallelism partitions: a deep or wide
+    * walk holds up to depth × defaultParallelism small ones, and every
+    * scan of it would run a task per partition.
+    */
+  def listRoots(spark: SparkSession, roots: Seq[String]): Dataset[(Int, FileMeta)] = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val conf = Fs.conf()
+    val top = roots.zipWithIndex.map { case (r, i) => (i, toMeta(fs(conf, r).getFileStatus(new Path(r)))) }
+    val levels = Vector.newBuilder[RDD[(Int, FileMeta)]]
+    levels += sc.parallelize(top, 1)
+    val topDirs = top.collect { case (i, m) if m.isDir => (i, m.path) }
+    var dirs = topDirs.length.toLong
+    // dirs to list, spread over `width` partitions: the roots straight from
+    // the driver, later levels by a shuffle inside the level's own job
+    var frontier = (width: Int) => sc.parallelize(topDirs, width)
+    while (dirs > 0) {
+      val found = sc.longAccumulator("enumerate.dirs")
+      val level = frontier(math.min(dirs, sc.defaultParallelism.toLong).toInt).mapPartitions { it =>
+        val conf = Fs.conf()
+        it.flatMap { case (i, p) =>
+          fs(conf, p).listStatus(new Path(p)).iterator.map { st =>
+            if (st.isDirectory) found.add(1)
+            (i, toMeta(st))
+          }
+        }
+      }
+      level.localCheckpoint()
+      level.count() // the level's one job: pins its blocks and fills `found`
+      levels += level
+      dirs = found.value
+      val next = level.filter(_._2.isDir).map { case (i, m) => (i, m.path) }
+      frontier = width => next.repartition(width)
+    }
+    spark.createDataset(sc.union(levels.result()).coalesce(sc.defaultParallelism))
+  }
+
   /** Full recursive enumeration of `root` (the root entry itself included). */
   def listTree(spark: SparkSession, root: String): Dataset[FileMeta] = {
     import spark.implicits._
-    val conf = Fs.conf()
-    val rootMeta = toMeta(fs(conf, root).getFileStatus(new Path(root)))
-    var acc = spark.createDataset(Seq(rootMeta))
-    var frontier = spark.createDataset(if (rootMeta.isDir) Seq(rootMeta.path) else Nil)
-    var depth = 0
-    while (frontier.count() > 0) {
-      val level = listLevel(spark, frontier).localCheckpoint()
-      acc = acc.union(level)
-      frontier = level.filter(_.isDir).map(_.path)
-      depth += 1
-      // the union chain otherwise grows one plan node per tree level:
-      // flatten the accumulator's lineage periodically so pathologically
-      // deep trees (depth 10³+) don't bloat the plan / driver stack
-      if (depth % 8 == 0) acc = acc.localCheckpoint()
-    }
-    acc
+    listRoots(spark, Seq(root)).map(_._2)
   }
 
   /** `-f <urilist>`: newline-delimited URI list (DistCpUtils.java:378-394).
@@ -177,26 +211,18 @@ object Enumerate {
     (leaves, touched)
   }
 
-  /** The `-regexPath` FILE selection [[graft.plan.Planner]] copies: leaf
-    * files at exactly `regexes.length` matching segments PLUS every file
-    * underneath a matched directory — one distributed filter over the tree
-    * [[depthRegex]]'s BFS already enumerated, with no driver-side dir
-    * collection and no per-dir re-walk. */
-  def depthRegexFiles(
-      spark: SparkSession,
-      root: String,
-      regexes: Seq[String],
-  ): Dataset[FileMeta] = {
+  /** The `-regexPath` FILE selection [[graft.plan.Planner]] copies, as a
+    * predicate over an entry and its path relative to its root: leaf files
+    * at exactly `regexes.length` matching segments PLUS every file
+    * underneath a matched directory. The planner applies it while it maps
+    * the one walk to tasks: no driver-side dir collection, no re-walk. */
+  def depthRegexFiles(regexes: Seq[String]): (FileMeta, String) => Boolean = {
     val compiled = regexes.map(Pattern.compile(_))
     val len = compiled.length
-    val tree = listTree(spark, root)
-    val qRoot = qualify(root)
-    tree.filter { m =>
-      !m.isDir && PathUtils.makeRelative(qRoot, m.path).filter(_ != ".").exists { rel =>
-        val segs = rel.split('/')
-        segs.length >= len &&
-          segs.take(len).zip(compiled).forall { case (s, p) => p.matcher(s).matches() }
-      }
+    (m, rel) => !m.isDir && rel != "." && {
+      val segs = rel.split('/')
+      segs.length >= len &&
+        segs.take(len).zip(compiled).forall { case (s, p) => p.matcher(s).matches() }
     }
   }
 

@@ -24,7 +24,8 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders}
   * sequential fold. The returned Dataset is built on localCheckpoint'ed
   * blocks that must survive into the consuming plan (the second pass
   * reads them), so this helper cannot unpersist them itself — Bench and
-  * Verify sweep `getPersistentRDDs` after each query's action. The
+  * Verify sweep `getPersistentRDDs` after each query's action, and the
+  * copy CLI after each op. The
   * checkpoint also trades lineage for speed: block loss fails the query
   * instead of recomputing.
   */

@@ -19,7 +19,8 @@ import graft.operators.PrefixSum
   *   - delete sync   → dst left-anti src + ancestor suppression (op 9)
   *   - split packing → range-partitioned cumsum bucketing      (op 10)
   *
-  * The destination is listed at most once per plan and that one listing
+  * Every source root and the destination are listed in ONE walk
+  * ([[graft.enumerate.Enumerate.listRoots]]); the destination's part of it
   * feeds both the update diff and the delete sync.
   */
 final case class CopyPlan(
@@ -60,37 +61,34 @@ object CopyPlan {
 
 object Planner {
 
-  /** Build CopyTasks for one source root: every descendant keyed by its
-    * dest-relative path. With multiple roots each root nests under its
-    * basename (distcp semantics). */
-  private def tasksForRoot(
-      spark: SparkSession,
-      root: String,
+  /** CopyTasks for the source roots: every entry the walk listed under
+    * root i < roots.length, keyed by its dest-relative path. With multiple
+    * roots each root nests under its basename (distcp semantics). One pass
+    * over the walk whatever the root count. */
+  private def sourceTasks(
+      walk: Dataset[(Int, FileMeta)],
+      roots: Seq[String],
       cfg: CopyConfig,
   ): Dataset[CopyTask] = {
+    val spark = walk.sparkSession
     import spark.implicits._
-    // relativize against the root's FS-qualified rendering: enumerated metas
-    // carry full qualified URIs, the user-typed root may not
-    val qRoot = Enumerate.qualify(root)
-    val baseName = qRoot.split('/').filter(_.nonEmpty).lastOption.getOrElse("")
-    val nest = cfg.srcs.length > 1
-    val metas: Dataset[FileMeta] = cfg.depthRegexes match {
-      case Nil => Enumerate.listTree(spark, root)
-      case rx =>
-        // ONE distributed filter over the tree depthRegex already walked:
-        // leaf files plus every file under a matched dir, selected by
-        // segment-prefix match. The former collect()-the-dirs + one
-        // listTree re-walk per matched dir was an unbounded driver loop
-        // re-enumerating subtrees the BFS had just listed.
-        Enumerate.depthRegexFiles(spark, root, rx)
+    // relativize against each root's FS-qualified rendering: enumerated
+    // metas carry full qualified URIs, the user-typed root may not
+    val qRoots = roots.map(Enumerate.qualify).toArray
+    val baseNames = qRoots.map(_.split('/').filter(_.nonEmpty).lastOption.getOrElse(""))
+    val nest = roots.length > 1
+    val selected: (FileMeta, String) => Boolean = cfg.depthRegexes match {
+      case Nil => (_, _) => true
+      case rx => Enumerate.depthRegexFiles(rx)
     }
-    metas.flatMap { m =>
-      PathUtils.makeRelative(qRoot, m.path).flatMap { rel =>
-        val r = if (rel == ".") {
-          if (m.isDir) None else Some(baseName) // single-file source keeps its name
-        } else Some(if (nest) s"$baseName/$rel" else rel)
-        r.map(CopyTask(m, _))
-      }.iterator
+    walk.flatMap { case (i, m) =>
+      // indexes past the roots belong to the destination's listing
+      if (i >= qRoots.length) None
+      else PathUtils.makeRelative(qRoots(i), m.path).filter(selected(m, _)).flatMap { rel =>
+        if (rel == ".") {
+          if (m.isDir) None else Some(CopyTask(m, baseNames(i))) // single-file source keeps its name
+        } else Some(CopyTask(m, if (nest) s"${baseNames(i)}/$rel" else rel))
+      }
     }
   }
 
@@ -161,8 +159,8 @@ object Planner {
       // materialize the admitted manifest so the intermediate ranged blocks
       // and the entry-state broadcast can be released NOW — a long-lived
       // session issuing repeated limited copies must not accumulate a pinned
-      // full manifest per call (only Bench/Verify sweep persistent RDDs; the
-      // copy tool has no such harness)
+      // full manifest per call (graft.cli.Main.run releases what an op
+      // pinned once it returns; direct Planner callers get no such sweep)
       val out = dirs.union(spark.createDataset(keptRdd)).localCheckpoint()
       ranged.unpersist(blocking = false)
       bEntry.destroy()
@@ -171,18 +169,16 @@ object Planner {
   }
 
   /** The destination tree relativized to `dstRoot` — columns (relDst,
-    * dLen, dMtime, dIsDir), the root entry itself excluded — or None when
-    * the destination does not exist yet. */
-  private def listDestination(spark: SparkSession, dstRoot: String): Option[DataFrame] = {
+    * dLen, dMtime, dIsDir), the root entry itself excluded — from the
+    * walk's entries under root index `idx`. */
+  private def listDestination(walk: Dataset[(Int, FileMeta)], idx: Int, dstRoot: String): DataFrame = {
+    val spark = walk.sparkSession
     import spark.implicits._
-    val root = new Path(dstRoot)
-    if (!root.getFileSystem(Fs.conf()).exists(root)) None
-    else {
-      val qDstRoot = Enumerate.qualify(dstRoot)
-      Some(Enumerate.listTree(spark, dstRoot)
-        .flatMap(m => PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(r => (r, m.length, m.mtime, m.isDir)))
-        .toDF("relDst", "dLen", "dMtime", "dIsDir"))
-    }
+    val qDstRoot = Enumerate.qualify(dstRoot)
+    walk.flatMap { case (i, m) =>
+      if (i != idx) None
+      else PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(r => (r, m.length, m.mtime, m.isDir))
+    }.toDF("relDst", "dLen", "dMtime", "dIsDir")
   }
 
   /** Update-diff: drop tasks whose destination is already "the same"
@@ -327,9 +323,12 @@ object Planner {
       case None =>
         cfg.srcs ++ cfg.fileList.toSeq.flatMap(f => Enumerate.fileList(spark, f).collect())
     }
-    val effCfg = cfg.copy(srcs = roots)
-    val all = roots.map(tasksForRoot(spark, _, effCfg)).reduceOption(_ union _)
-      .getOrElse(spark.emptyDataset[CopyTask])
+    // the destination joins the ONE walk when a diff or delete needs it and
+    // it exists: index roots.length
+    val dstPath = new Path(cfg.dst)
+    val withDst = (cfg.update || cfg.delete) && dstPath.getFileSystem(Fs.conf()).exists(dstPath)
+    val walk = Enumerate.listRoots(spark, if (withDst) roots :+ cfg.dst else roots)
+    val all = sourceTasks(walk, roots, cfg)
     // Under -update the reference OVERWRITES the limit-skip decision with the
     // same-file check (DistCPPlus.java:681-700: `skipfile = isSame`), so
     // -filelimit/-sizelimit are effectively ignored — reproduced here by
@@ -342,8 +341,7 @@ object Planner {
     // up to date at the destination — the copy then silently overwrites and
     // the two sources ping-pong the destination between runs with exit 0
     checkDuplication(limited)
-    val dst =
-      if (cfg.update || cfg.delete) listDestination(spark, cfg.dst) else None
+    val dst = Option.when(withDst)(listDestination(walk, roots.length, cfg.dst))
     val diffed = dst match {
       case Some(d) if cfg.update => updateDiff(limited, d, cfg.dst, cfg.skipTs, cfg.skipCrc)
       case _ => limited

@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.GraftListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.core._
 import graft.enumerate.Enumerate
@@ -742,9 +744,9 @@ class CopyLayerSpec extends SparkTestBase {
   }
 
   test("listTree enumerates a pathologically deep tree (lineage stays flat)") {
-    // depth 80 crosses the every-8-levels accumulator checkpoint ten times;
-    // before that checkpoint existed the union chain grew one plan node per
-    // level — this pins both correctness at depth and the flattened plan
+    // depth 80: a Dataset union chain would grow one plan node per level;
+    // the walk's result is one flat union of its 81 checkpointed levels —
+    // this pins both correctness at depth and the flat plan
     val base = tmpDir("deep")
     var cur = base
     val depth = 80
@@ -765,5 +767,168 @@ class CopyLayerSpec extends SparkTestBase {
     val unions = "Union".r.findAllIn(
       Enumerate.listTree(spark, base.toString).queryExecution.optimizedPlan.toString).size
     assert(unions <= 16, s"accumulator lineage grew with depth: $unions Union nodes")
+  }
+
+  /** Run `body` in job group `group`: its result, the group's
+    * [[QueryMetrics]] totals, and per job in order the name and task count
+    * of its final stage (a walk level's listing stage is named after
+    * Enumerate.scala). */
+  private def jobsIn[T](group: String)(body: => T): (T, QueryMetrics.Totals, Seq[(String, Int)]) = {
+    val sc = spark.sparkContext
+    val metrics = new QueryMetrics
+    val finals = new java.util.concurrent.ConcurrentSkipListMap[Integer, (String, Int)]
+    val finalStages = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          val last = js.stageInfos.maxBy(_.stageId)
+          finals.put(js.jobId, (last.name, last.numTasks))
+        }
+    }
+    sc.addSparkListener(metrics)
+    sc.addSparkListener(finalStages)
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    val out =
+      try body
+      finally {
+        sc.clearJobGroup()
+        assert(GraftListenerDrain.drain(sc))
+        sc.removeSparkListener(metrics)
+        sc.removeSparkListener(finalStages)
+      }
+    (out, metrics(group), finals.values.asScala.toSeq)
+  }
+
+  test("listTree runs one job per directory level, spread over min(dirs, defaultParallelism) tasks") {
+    // four directory levels: the root; a..f; a/x and b/x; a/x/y (empty)
+    val root = tmpDir("levels")
+    ('a' to 'f').foreach { c =>
+      Files.write(Files.createDirectories(root.resolve(c.toString)).resolve("f"), Array[Byte](1))
+    }
+    Files.createDirectories(root.resolve("a/x/y"))
+    Files.createDirectories(root.resolve("b/x"))
+    val (listed, totals, finals) = jobsIn("walk-levels")(Enumerate.listTree(spark, root.toString))
+    val dp = spark.sparkContext.defaultParallelism
+    assert(totals.jobs == 4, finals)
+    assert(finals.map(_._2) == Seq(1, math.min(6, dp), math.min(2, dp), 1), finals)
+    assert(listed.count() == 1 + 6 + 6 + 3)
+  }
+
+  test("an -update -delete plan over two -f roots walks them and the destination together") {
+    val base = tmpDir("two-roots")
+    // `levels` directory levels: a file on each, a side dir on all but the last
+    def chain(name: String, levels: Int): Path = {
+      val root = base.resolve(name)
+      var cur = root
+      (1 to levels).foreach { i =>
+        Files.createDirectories(cur)
+        Files.write(cur.resolve(s"f$i"), Array.fill[Byte](i)(7))
+        if (i < levels) Files.createDirectories(cur.resolve("side"))
+        cur = cur.resolve(s"d$i")
+      }
+      root
+    }
+    val s1 = chain("s1", 3)
+    val s2 = chain("s2", 2)
+    val dst = base.resolve("out")
+    val lst = base.resolve("roots.txt")
+    Files.write(lst, s"chkfile://$s1\nchkfile://$s2\n".getBytes(StandardCharsets.UTF_8))
+    def cfg(flags: String*) = Args.parse(flags ++ Seq("-pt", "-f", lst.toString, s"chkfile://$dst")).toOption.get
+    val first = cfg()
+    Executor.execute(spark, Planner.plan(spark, first), first)
+    val before = ChecksummedLocalFs.listStatusCalls
+    val (plan, _, finals) = jobsIn("walk-roots") {
+      val p = Planner.plan(spark, cfg("-update", "-delete"))
+      p.deletes.collect() // forces the lazy delete set
+      p
+    }
+    // the destination nests s1 one level down: 4 levels, where one walk
+    // per tree would take 3 + 2 + 4 rounds
+    assert(finals.count(_._1.contains("Enumerate.scala")) == 4, finals)
+    val after = ChecksummedLocalFs.listStatusCalls
+    val dirs = Seq(s1, s2, dst).flatMap(r => Files.walk(r).iterator().asScala.filter(Files.isDirectory(_)))
+    val delta = after.map { case (k, v) => k -> (v - before.getOrElse(k, 0)) }.filter(_._2 != 0)
+    assert(delta == dirs.map(_.toString -> 1).toMap)
+    assert(plan.tasks.filter(!_.src.isDir).isEmpty && plan.deletes.isEmpty)
+  }
+
+  test("overlapping roots plan like separate per-root walks") {
+    // relDst -> meta of one standalone listTree of `root`
+    def rels(root: Path): Map[String, FileMeta] = {
+      val q = Enumerate.qualify(root.toString)
+      Enumerate.listTree(spark, root.toString).collect()
+        .flatMap(m => PathUtils.makeRelative(q, m.path).filter(_ != ".").map(_ -> m)).toMap
+    }
+    val src = tmpDir("nest")
+    val mt = java.nio.file.attribute.FileTime.fromMillis(1600000000000L)
+    def put(rel: String, body: String): Unit = {
+      val p = src.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, body.getBytes(StandardCharsets.UTF_8))
+      Files.setLastModifiedTime(p, mt)
+    }
+    put("a.txt", "aaa"); put("sub/b.txt", "bb"); put("mirror/a.txt", "aaa"); put("mirror/extra.txt", "x")
+    val sub = src.resolve("sub")
+    val mirror = src.resolve("mirror")
+
+    // the destination nested under the source
+    val plan = Planner.plan(spark, Args.parse(Seq("-update", "-delete", src.toString, mirror.toString)).toOption.get)
+    val s = rels(src)
+    val d = rels(mirror)
+    val wantTasks = s.collect {
+      case (r, m) if m.isDir || !d.get(r).exists(x => x.length == m.length && x.mtime == m.mtime) => r
+    }.toSet
+    val keep = s.keySet.flatMap(r => r.split('/').inits.filter(_.nonEmpty).map(_.mkString("/")))
+    val doomed = d.keySet -- keep
+    val wantDeletes = doomed.filterNot(r => r.contains('/') && doomed(r.take(r.lastIndexOf('/'))))
+    assert(wantTasks == Set("sub", "sub/b.txt", "mirror", "mirror/a.txt", "mirror/extra.txt"))
+    assert(wantDeletes == Set("extra.txt"))
+    assert(plan.tasks.collect().map(_.relDst).toSet == wantTasks)
+    assert(plan.deletes.collect().toSet == wantDeletes)
+
+    // a source nested under another source: each nests under its basename
+    val lists = tmpDir("nest-lists")
+    val nested = lists.resolve("nested.txt")
+    Files.write(nested, s"$src\n$sub\n".getBytes(StandardCharsets.UTF_8))
+    val planN = Planner.plan(spark, Args.parse(Seq("-f", nested.toString, lists.resolve("out").toString)).toOption.get)
+    val bn = src.getFileName.toString
+    assert(planN.tasks.collect().map(_.relDst).toSet ==
+      s.keySet.map(r => s"$bn/$r") ++ rels(sub).keySet.map(r => s"sub/$r"))
+
+    // the same root twice: both nest under one basename
+    val twice = lists.resolve("twice.txt")
+    Files.write(twice, s"$src\n$src\n".getBytes(StandardCharsets.UTF_8))
+    assert(graft.cli.Main.run(Array("-f", twice.toString, lists.resolve("out2").toString), spark) == -2)
+  }
+
+  test("a missing source root exits -3 and creates no destination") {
+    val base = tmpDir("missing")
+    val missing = base.resolve("no-such-src").toString
+    val good = mkTree(base.resolve("src"))
+    val lst = base.resolve("roots.txt")
+    Files.write(lst, s"$good\n$missing\n".getBytes(StandardCharsets.UTF_8))
+    val dst = base.resolve("out")
+    assert(graft.cli.Main.run(Array(missing, dst.toString), spark) == -3)
+    assert(graft.cli.Main.run(Array("-update", "-delete", "-pt", missing, dst.toString), spark) == -3)
+    assert(graft.cli.Main.run(Array("-f", lst.toString, dst.toString), spark) == -3)
+    assert(!Files.exists(dst))
+  }
+
+  test("each CLI copy releases the RDDs it pinned, and only those") {
+    Session.sweep(spark)
+    val sc = spark.sparkContext
+    val mine = sc.parallelize(1 to 10).persist()
+    mine.count()
+    val pinned = sc.getPersistentRDDs.keySet
+    assert(pinned == Set(mine.id))
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    Console.withOut(new java.io.ByteArrayOutputStream()) {
+      assert(graft.cli.Main.run(Array("-pt", src.toString, dst.toString), spark) == 0)
+      Files.write(src.resolve("a.txt"), "changed".getBytes(StandardCharsets.UTF_8))
+      assert(graft.cli.Main.run(Array("-update", "-delete", "-pt", src.toString, dst.toString), spark) == 0)
+    }
+    assert(fileBytes(dst.resolve("a.txt")).toSeq == "changed".getBytes(StandardCharsets.UTF_8).toSeq)
+    assert(sc.getPersistentRDDs.keySet == pinned)
+    mine.unpersist()
   }
 }
