@@ -28,6 +28,10 @@ object Executor {
 
   val BufferSize = 128 * 1024 // copy.buf.size, DefaultCopyFilesMapper.java:33
 
+  /** The preserved attributes [[preserveAttrs]] applies to a directory. */
+  private val DirAttributes: Set[FileAttribute] =
+    Set(FileAttribute.User, FileAttribute.Group, FileAttribute.Permission)
+
   /** Job counters plus per-phase wall-clock — the reference records
     * SETUP/RUN/CLEANUP durations into the job conf (DistCPPlus.java:128-131,
     * 203-229); here they ride on the stats object. setup = dest mkdirs +
@@ -249,8 +253,12 @@ object Executor {
       it.foreach(rel => pfs.delete(new Path(dstRoot, rel), true))
     }
 
-    // dir-attribute finalize pass (DistCPPlus.java:264-297)
-    if (cfg.preserve.nonEmpty) {
+    // dir-attribute finalize pass (DistCPPlus.java:264-297): of what
+    // preserveAttrs sets, directories take only owner/group/permission —
+    // times are set on files, replication and block size at create — so
+    // without -pu/-pg/-pp the pass (one job, two status calls per dir)
+    // could change nothing
+    if (cfg.preserve.exists(DirAttributes)) {
       planned.dirs.foreachPartition { (it: Iterator[CopyTask]) =>
         val c = Fs.conf()
         val pfs = new Path(dstRoot).getFileSystem(c)

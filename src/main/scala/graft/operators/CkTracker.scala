@@ -29,11 +29,13 @@ private[graft] final class CkTracker(sc: SparkContext) {
     * computes and pins the checkpoint blocks (RDD.doCheckpoint cascades
     * through the lineage at job end), so a loop that needs its per-round
     * cardinality anyway pays ONE action where eager-ck-then-count paid two.
+    * The count is an RDD count of the checkpointed rows: one job, where
+    * `Dataset.count` adds an aggregate exchange (a second job under AQE).
     * Returns (frame, pinned ids, count). */
   def ckCount(df: DataFrame): (DataFrame, Seq[Int], Long) = {
     val before = sc.getPersistentRDDs.keySet
     val out = df.localCheckpoint(eager = false)
-    val cnt = out.count()
+    val cnt = out.queryExecution.toRdd.count()
     (out, (sc.getPersistentRDDs.keySet -- before).toSeq, cnt)
   }
 

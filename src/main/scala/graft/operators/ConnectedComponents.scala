@@ -1,48 +1,49 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Distributed connected components over an edge list.
+/** Connected components over an edge list.
   *
-  * Two algorithms behind one contract — input `edges(srcCol, dstCol)`
-  * (undirected; duplicates and self-loops tolerated), output
-  * `(id, component)` where `component` is the MINIMUM node id of the
-  * component (the canonical keep-one representative a dedup pipeline wants;
-  * cf. the reference's dedup-then-keep-first shape,
+  * Input `edges(srcCol, dstCol)` (undirected; duplicates and self-loops
+  * tolerated), output `(id, component)` where `component` is the MINIMUM
+  * node id of the component (the canonical keep-one representative a dedup
+  * pipeline wants; cf. the reference's dedup-then-keep-first shape,
   * `d/DistCPPlus.java:596-607`'s duplicate-dest grouping). Every node that
   * appears as either endpoint gets exactly one output row; ids must be an
   * orderable column type (min/least drive the labeling).
   *
-  * - `labelPropagation`: each round every node takes the min of its own
-  *   label and its neighbors' — one keyed shuffle per round, rounds bounded
-  *   by component DIAMETER. Right for the near-dup workload (template
-  *   clusters are tiny/star-shaped → 2-3 rounds), but a path graph of
-  *   length n needs n rounds, and a hub node's neighborhood is re-shuffled
-  *   every round.
+  * The algorithm is alternating large-star/small-star (Kiveris et al.,
+  * "Connected Components in MapReduce and Beyond", SoCC'14). Each
+  * operation rewires edges toward the neighborhood minimum (large-star:
+  * every neighbor LARGER than the center points at min(N(u) ∪ {u});
+  * small-star: the center and its ≤-neighbors all point at the min),
+  * provably preserving connectivity and converging in O(log² n) rounds
+  * (O(log n) in practice) REGARDLESS of diameter — and, critically for
+  * 100 TB near-dup graphs, a star of 10⁷ leaves around one template
+  * document collapses in one small-star round instead of hot-spotting the
+  * hub every round the way min-label propagation does (the spec keeps
+  * propagation as its cross-check witness). This is the scale path t49
+  * runs on.
   *
-  * - `largeSmallStar`: alternating large-star/small-star (Kiveris et al.,
-  *   "Connected Components in MapReduce and Beyond", SoCC'14). Each
-  *   operation rewires edges toward the neighborhood minimum
-  *   (large-star: every neighbor LARGER than the center points at
-  *   min(N(u) ∪ {u}); small-star: the center and its ≤-neighbors all point
-  *   at the min), provably preserving connectivity and converging in
-  *   O(log² n) rounds (O(log n) in practice) REGARDLESS of diameter — and,
-  *   critically for 100 TB near-dup graphs, a star of 10⁷ leaves around one
-  *   template document collapses in one small-star round instead of
-  *   hot-spotting the hub every propagation round. This is the scale path
-  *   t49 runs on.
+  * Size-adaptive: the loop pays several Spark jobs per round whatever the
+  * edge count, so a graph of at most [[LocalEdgeBound]] distinct edges is
+  * collected once and solved by a driver-side min-root union-find instead
+  * (McSherry et al., "Scalability! But at what COST?", HotOS'15). Both
+  * paths end in the same labeling join, so their outputs (rows, column
+  * types, nullability) are identical; ConnectedComponentsSpec forces each.
   *
-  * Both keep per-round state as checkpointed Datasets (flat lineage,
-  * edge-scale shuffles only, nothing driver-side but the one convergence
-  * count per round), and FREE each round's blocks as soon as the next
-  * round's are materialized — retention is O(1) edge-scale datasets, not
-  * O(rounds). The blocks backing the RETURNED frame (final edges/labels +
-  * the node set) stay live until the caller is done; release them with the
-  * session-wide persistent-RDD sweep the Verify/Bench harnesses already
-  * run between queries.
+  * The distributed path keeps per-round edge sets as checkpointed Datasets
+  * (flat lineage, edge-scale shuffles only, nothing driver-side but the one
+  * convergence count per round), and FREES each round's blocks as soon as
+  * the next round's are materialized — retention is O(1) edge-scale
+  * datasets, not O(rounds). The blocks backing the RETURNED frame (the
+  * final edge set) stay live until the caller is done; release them with
+  * the session-wide persistent-RDD sweep the Verify/Bench harnesses
+  * already run between queries. The local path frees its one checkpoint
+  * before returning; its star edges are a broadcast array that lives as
+  * long as the returned plan (the context cleaner drops it after).
   */
 object ConnectedComponents {
 
@@ -51,6 +52,18 @@ object ConnectedComponents {
   // ids — exact for the sequential calls inside one operator run (a
   // concurrent query checkpointing in the same session could be
   // misattributed; the Verify/Bench harnesses run queries sequentially)
+
+  /** Largest distinct-edge count solved on the driver, set from the
+    * largest size measured (CcScaleProbe in src/test, 4 cores): at 2¹⁴, 2¹⁷
+    * and 2²⁰ random edges the driver path ran in 0.4 / 0.8 / 3.7 s and 6
+    * jobs against the loop's 4.5 / 7.2 / 36.5 s and 53-62 jobs, and at 2²⁰
+    * disjoint edges (the most nodes and star edges an edge count admits)
+    * it completed in a 512 MiB heap, the smallest Spark starts in, as the
+    * loop does. Its driver state is primitive arrays only: the collected
+    * edges and a sorted copy (16 bytes per edge each), a parent per node (4
+    * bytes), the star edges (16 bytes each). Above it the distributed loop
+    * runs. */
+  private[graft] val LocalEdgeBound: Long = 1L << 20
 
   /** Large-star/small-star alternation to a fixpoint (SoCC'14).
     *
@@ -65,15 +78,19 @@ object ConnectedComponents {
       maxRounds: Int = 64): DataFrame =
     largeSmallStarWithRounds(edges, srcCol, dstCol, maxRounds)._1
 
-  /** Same, also reporting how many large+small-star rounds convergence took —
-    * the operator's O(log n)-rounds-regardless-of-diameter claim is asserted
-    * against this in ConnectedComponentsSpec (a path graph of length n makes
-    * label propagation pay ~n rounds; this stays logarithmic). */
+  /** Same, also reporting how many large+small-star rounds convergence took
+    * (0 when the graph was solved on the driver) — the operator's
+    * O(log n)-rounds-regardless-of-diameter claim is asserted against this
+    * in ConnectedComponentsSpec (a path graph of length n makes label
+    * propagation pay ~n rounds; this stays logarithmic). `localBound`
+    * lets the spec force either path (0: distributed, Long.MaxValue:
+    * local). */
   private[graft] def largeSmallStarWithRounds(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      maxRounds: Int = 64): (DataFrame, Int) = {
+      maxRounds: Int = 64,
+      localBound: Long = LocalEdgeBound): (DataFrame, Int) = {
     val tracker = new CkTracker(edges)
     val base = edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
@@ -101,6 +118,30 @@ object ConnectedComponents {
     var (cur, curIds, prevCnt) = tracker.ckCount(base)
     var round = 0
     var converged = prevCnt == 0
+    val idType = nodes.schema("id").dataType
+    if (!converged && prevCnt <= localBound && (idType == IntegerType || idType == LongType)) {
+      // one job reads the checkpointed edges as one flat (u, v, u, v, ...)
+      // long array per partition. The fixpoint star edges go back the same
+      // way: one broadcast long array, read by index over a range, in the
+      // type the distributed loop's unions widen both endpoints to — so
+      // the labeling join below is shared, and no per-edge row object is
+      // ever built on the driver
+      val flat = cur.select(col("u").cast(LongType), col("v").cast(LongType))
+        .queryExecution.toRdd
+        .mapPartitions { rows =>
+          val b = Array.newBuilder[Long]
+          rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+          Iterator.single(b.result())
+        }
+        .collect()
+      tracker.free(curIds)
+      val stars = edges.sparkSession.sparkContext
+        .broadcast(minRootStars(Array.concat(flat.toSeq: _*)))
+      val at = udf((i: Long) => stars.value(i.toInt))
+      cur = edges.sparkSession.range(stars.value.length / 2)
+        .select(at(col("id") * 2).cast(idType).as("u"), at(col("id") * 2 + 1).cast(idType).as("v"))
+      converged = true
+    }
     while (!converged) {
       round += 1
       require(
@@ -155,51 +196,34 @@ object ConnectedComponents {
     (labeled, round)
   }
 
-  /** Min-label propagation to a fixpoint (the diameter-bounded baseline the
-    * t49 query originally inlined; kept as the equivalence-test witness and
-    * for graphs known to be shallow). */
-  def labelPropagation(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxRounds: Int = 256): DataFrame = {
-    val tracker = new CkTracker(edges)
-    val base = edges
-      .select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    val (sym, symIds) = tracker.ck(base
-      .union(base.select(col("v").as("u"), col("u").as("v")))
-      .toDF("src", "nbr"))
-    var (labels, labelIds) = tracker.ck(edges.select(col(srcCol).as("id"))
-      .union(edges.select(col(dstCol).as("id")))
-      .distinct()
-      .withColumn("lbl", col("id")))
-    var changed = 1L
-    var round = 0
-    while (changed > 0) {
-      round += 1
-      require(
-        round <= maxRounds,
-        s"label propagation did not converge in $maxRounds rounds")
-      val nbrMin = sym.join(labels, sym("nbr") === labels("id"))
-        .groupBy(col("src")).agg(min(col("lbl")).as("nlbl"))
-      val (next, nextIds) = tracker.ck(
-        labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
-          .select(
-            col("id"),
-            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
-      changed = next
-        .join(labels.withColumnRenamed("lbl", "oldLbl"), "id")
-        .filter(col("lbl") =!= col("oldLbl"))
-        .count()
-      // previous round's labels are dead once the delta count is taken
-      tracker.free(labelIds)
-      labels = next
-      labelIds = nextIds
+  /** Min-root union-find over a flat `(u, v, u, v, ...)` edge array,
+    * returning the star edge set the distributed loop converges to in the
+    * same flat form: `(node, min of its component)` for every node that is
+    * not its component's minimum. Nodes are indexed by their position in
+    * the sorted distinct ids, so the smaller index is the smaller id and
+    * unions need no ordering beyond `<`; the whole state is two primitive
+    * arrays (no boxed ids, no hash map). */
+  private def minRootStars(ends: Array[Long]): Array[Long] = {
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (parent(y) != root) { val next = parent(y); parent(y) = root; y = next }
+      root
     }
-    tracker.free(symIds) // loop done; the returned plan reads only `labels`
-    labels.select(col("id"), col("lbl").as("component"))
+    for (e <- 0 until ends.length by 2) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e)))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val stars = Array.newBuilder[Long]
+    for (i <- 0 until n) { val r = find(i); if (r != i) { stars += ids(i); stars += ids(r) } }
+    stars.result()
   }
 
   /** Incremental update: fold NEW edges into an EXISTING (id, component)
@@ -229,10 +253,23 @@ object ConnectedComponents {
       newEdges: DataFrame,
       srcCol: String,
       dstCol: String,
-      maxRounds: Int = 64): DataFrame = {
+      maxRounds: Int = 64): DataFrame =
+    incrementalWithBound(
+      assignment, idCol, componentCol, newEdges, srcCol, dstCol, maxRounds, LocalEdgeBound)
+
+  /** [[incremental]] with the local-solve bound of [[largeSmallStarWithRounds]]. */
+  private[graft] def incrementalWithBound(
+      assignment: DataFrame,
+      idCol: String,
+      componentCol: String,
+      newEdges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      maxRounds: Int,
+      localBound: Long): DataFrame = {
     val q = (c: String) => col(s"`${c.replace("`", "``")}`")
     val stars = assignment.select(q(idCol).as("__s"), q(componentCol).as("__d"))
     val fresh = newEdges.select(q(srcCol).as("__s"), q(dstCol).as("__d"))
-    largeSmallStar(stars.unionByName(fresh), "__s", "__d", maxRounds)
+    largeSmallStarWithRounds(stars.unionByName(fresh), "__s", "__d", maxRounds, localBound)._1
   }
 }

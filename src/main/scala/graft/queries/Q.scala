@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * NOTE: `build` is not guaranteed to be lazy plan construction. Queries
   * built on eager machinery — the two-pass prefix sums (q20, t41), the
-  * fixpoint label-propagation loop (t49), and anything calling
+  * connected-components operator (t49: an edge count, then a collect or
+  * the per-round fixpoint counts), and anything calling
   * localCheckpoint() (t30-t32, t37/t38) — run Spark jobs inside `build`:
   * repartition sampling, checkpoint materialization, collects, per-round
   * convergence counts. Timers must wrap the whole call (Bench does), and

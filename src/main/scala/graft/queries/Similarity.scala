@@ -1038,9 +1038,12 @@ object Similarity {
         // large-star/small-star (Kiveris et al., SoCC'14): O(log n) rounds
         // regardless of component diameter, and a 10⁷-leaf template star
         // collapses in one small-star round instead of hot-spotting the hub
-        // every round the way plain min-label propagation does. The operator
-        // carries the propagation baseline too, with a randomized
-        // star/path/clique equivalence spec between the two.
+        // every round the way plain min-label propagation does. A pair set
+        // of at most ConnectedComponents.LocalEdgeBound edges (here: a few
+        // hundred) is instead collected once and solved by a driver-side
+        // union-find, so the query pays an edge count, one collect and the
+        // labeling join rather than several jobs per round;
+        // ConnectedComponentsSpec forces both paths on every case.
         // checkpoint pairs BEFORE handing them over: the operator unions the
         // edge list with its flip, and both branches would otherwise each
         // carry (and execute) the full bucket-join + exact Jaccard verify

@@ -30,7 +30,8 @@ import org.apache.hadoop.fs.{FileChecksum, FileStatus, Path, RawLocalFileSystem}
   * deprecated lazy permission loader rejects non-file:// URIs); the data
   * plane (open/create/rename/delete/setTimes) is inherited — those paths
   * resolve through the URI's path component and are scheme-agnostic.
-  * Every listStatus is tallied per path in [[ChecksummedLocalFs.listStatusCalls]].
+  * Every listStatus is tallied per path in [[ChecksummedLocalFs.listStatusCalls]],
+  * every getFileStatus and exists in [[ChecksummedLocalFs.statusCalls]].
   */
 class ChecksummedLocalFs extends RawLocalFileSystem {
   override def getScheme: String = "chkfile"
@@ -52,11 +53,19 @@ class ChecksummedLocalFs extends RawLocalFileSystem {
       makeQualified(f))
   }
 
-  override def getFileStatus(f: Path): FileStatus = statusOf(f)
+  override def getFileStatus(f: Path): FileStatus = {
+    ChecksummedLocalFs.tally(ChecksummedLocalFs.statused, nio(f))
+    statusOf(f)
+  }
+
+  override def exists(f: Path): Boolean = {
+    ChecksummedLocalFs.tally(ChecksummedLocalFs.statused, nio(f))
+    JFiles.exists(nio(f))
+  }
 
   override def listStatus(f: Path): Array[FileStatus] = {
     val p = nio(f)
-    ChecksummedLocalFs.listed.merge(p.toString, 1, (a: Integer, b: Integer) => a + b)
+    ChecksummedLocalFs.tally(ChecksummedLocalFs.listed, p)
     if (!JFiles.isDirectory(p)) Array(statusOf(f))
     else Using.resource(JFiles.list(p)) { stream =>
       stream.iterator.asScala
@@ -82,12 +91,21 @@ class ChecksummedLocalFs extends RawLocalFileSystem {
 }
 
 object ChecksummedLocalFs {
-  private val listed = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+  private type Tally = java.util.concurrent.ConcurrentHashMap[String, Integer]
+  private val listed, statused = new Tally
+
+  private def tally(t: Tally, p: java.nio.file.Path): Unit =
+    t.merge(p.toString, 1, (a: Integer, b: Integer) => a + b)
+
+  private def calls(t: Tally): Map[String, Int] =
+    t.asScala.map { case (k, v) => k -> v.intValue }.toMap
 
   /** listStatus calls per local path, JVM-wide: local-mode executors share
     * the driver's JVM, so a test can count the listings a plan issues. */
-  def listStatusCalls: Map[String, Int] =
-    listed.asScala.map { case (k, v) => k -> v.intValue }.toMap
+  def listStatusCalls: Map[String, Int] = calls(listed)
+
+  /** getFileStatus + exists calls per local path, JVM-wide. */
+  def statusCalls: Map[String, Int] = calls(statused)
 
   /** FileChecksum.equals compares (algorithm, length, bytes) — the base
     * class contract — so two of these are equal iff file contents match. */

@@ -336,6 +336,32 @@ class CopyLayerSpec extends SparkTestBase {
       PosixFilePermissions.fromString("r--r-----"))
   }
 
+  test("-pp sets a copied directory's permission in the finalize pass") {
+    import java.nio.file.attribute.PosixFilePermissions
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    Files.setPosixFilePermissions(src.resolve("sub1"), PosixFilePermissions.fromString("rwxr-x---"))
+    runCopy(Seq("-pp"), src, dst)
+    assert(Files.getPosixFilePermissions(dst.resolve("sub1")) ==
+      PosixFilePermissions.fromString("rwxr-x---"))
+  }
+
+  test("an -update -delete -pt run stats no destination directory after the copy pass") {
+    // -pt sets times on files only, so the dir-attribute finalize pass
+    // (exists + getFileStatus per destination dir) has nothing to do
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    runCopy(Seq("-pt"), src, dst)
+    val cfg = Args.parse(Seq("-update", "-delete", "-pt", src.toString, s"chkfile://$dst")).toOption.get
+    val plan = Planner.plan(spark, cfg)
+    val dstDirs = Files.walk(dst).iterator().asScala.filter(Files.isDirectory(_)).map(_.toString).toSet
+    def dirStats = ChecksummedLocalFs.statusCalls.filter { case (p, _) => dstDirs(p) }
+    val before = dirStats
+    val stats = Executor.execute(spark, plan, cfg)
+    assert(stats.copied == 0 && stats.failed == 0)
+    assert(dirStats == before)
+  }
+
   test("exportOnly plans without copying") {
     val src = mkTree(tmpDir("src"))
     val dst = tmpDir("dst").resolve("out")
