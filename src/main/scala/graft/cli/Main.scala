@@ -47,20 +47,19 @@ object Main {
           if (cfg.exportOnly) {
             // plan-only surface (op 19): WRITE the parquet plan manifest
             // (the whole point of export-only — plan now, execute later,
-            // possibly from another process) and report a DISTRIBUTED
-            // count: the driver-side sourceFilesForTransfer cap exists for
-            // exactly the >1M-file plans this flag is recommended for, so
-            // it must not be on this path
+            // possibly from another process) and report the planning pass's
+            // own count: the driver-side sourceFilesForTransfer cap exists
+            // for exactly the >1M-file plans this flag is recommended for,
+            // so it must not be on this path
             val out = cfg.exportPath.getOrElse(s"${cfg.dst}/_graft_plan")
             Planner.savePlan(plan, out)
-            val nFiles = plan.tasks.filter(!_.src.isDir).count()
-            println(s"planned $nFiles file copies; plan exported to $out")
+            println(s"planned ${plan.totals.files} file copies; plan exported to $out")
             0
           } else {
             val stats = Executor.execute(spark, plan, cfg)
             println(
               s"COPY=${stats.copied} SKIP=${stats.skipped} FAIL=${stats.failed} " +
-                s"DIR=${stats.dirs} BYTESCOPIED=${stats.bytesCopied}")
+                s"DIR=${stats.dirs} BYTESCOPIED=${stats.bytesCopied} BYTESEXPECTED=${stats.bytesExpected}")
             // failures without -i surface as CopyFailedException below;
             // with -i the run reports and exits 0 by contract
             0

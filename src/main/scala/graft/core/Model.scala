@@ -46,6 +46,12 @@ object FileAttribute {
 
   val all: Seq[FileAttribute] = Seq(Replication, BlockSize, User, Group, Permission, Timestamp)
 
+  /** The attributes a file system reports through owner/group/permission
+    * lookups: the only ones a directory takes, and the only ones worth a
+    * lookup's cost (a forked `ls -ld` per entry on a local file system
+    * without the native Hadoop library). */
+  val Ownership: Set[FileAttribute] = Set(User, Group, Permission)
+
   /** Parse the `-p` attribute string; rejects duplicates and unknown chars
     * (FileAttribute.java:14-40). */
   def parse(s: String): Either[String, Set[FileAttribute]] =

@@ -33,7 +33,12 @@ object Enumerate {
     p.getFileSystem(Fs.conf()).makeQualified(p).toString
   }
 
-  def toMeta(st: FileStatus): FileMeta =
+  /** `st` as a [[FileMeta]]. Permission, owner and group are read only
+    * when `owners` is set and are empty strings otherwise: on a local file
+    * system without the native Hadoop library each of those reads forks
+    * `ls -ld`, which costs ~100× the `listStatus` that produced `st`, and
+    * only `-pu`/`-pg`/`-pp` ever use them. */
+  def toMeta(st: FileStatus, owners: Boolean = true): FileMeta =
     FileMeta(
       // the FULL qualified URI, scheme included: stripping to the bare path
       // (toUri.getPath) made every later access re-resolve against the
@@ -48,9 +53,9 @@ object Enumerate {
       blockSize = st.getBlockSize,
       mtime = st.getModificationTime,
       atime = st.getAccessTime,
-      perm = st.getPermission.toString,
-      owner = st.getOwner,
-      group = st.getGroup,
+      perm = if (owners) st.getPermission.toString else "",
+      owner = if (owners) st.getOwner else "",
+      group = if (owners) st.getGroup else "",
     )
 
   private def fs(conf: Configuration, path: String): FileSystem =
@@ -64,7 +69,7 @@ object Enumerate {
       val conf = Fs.conf()
       paths.flatMap { p =>
         val f = fs(conf, p)
-        f.listStatus(new Path(p)).iterator.map(toMeta)
+        f.listStatus(new Path(p)).iterator.map(toMeta(_))
       }
     }
   }
@@ -73,6 +78,8 @@ object Enumerate {
     * walk (each root's own entry included). Every entry is tagged with the
     * INDEX of the root it was listed under, not matched to a root by path
     * prefix, so equal or nested roots each get their complete listing.
+    * Permission, owner and group are read only when `owners` is set (see
+    * [[toMeta]]).
     *
     * Each level is one Spark job, the eager local checkpoint of its
     * listing, spread over min(dirs, defaultParallelism) tasks. The same job
@@ -83,11 +90,12 @@ object Enumerate {
     * walk holds up to depth × defaultParallelism small ones, and every
     * scan of it would run a task per partition.
     */
-  def listRoots(spark: SparkSession, roots: Seq[String]): Dataset[(Int, FileMeta)] = {
-    import spark.implicits._
+  def listRoots(spark: SparkSession, roots: Seq[String], owners: Boolean): RDD[(Int, FileMeta)] = {
     val sc = spark.sparkContext
     val conf = Fs.conf()
-    val top = roots.zipWithIndex.map { case (r, i) => (i, toMeta(fs(conf, r).getFileStatus(new Path(r)))) }
+    val top = roots.zipWithIndex.map { case (r, i) =>
+      (i, toMeta(fs(conf, r).getFileStatus(new Path(r)), owners))
+    }
     val levels = Vector.newBuilder[RDD[(Int, FileMeta)]]
     levels += sc.parallelize(top, 1)
     val topDirs = top.collect { case (i, m) if m.isDir => (i, m.path) }
@@ -102,7 +110,7 @@ object Enumerate {
         it.flatMap { case (i, p) =>
           fs(conf, p).listStatus(new Path(p)).iterator.map { st =>
             if (st.isDirectory) found.add(1)
-            (i, toMeta(st))
+            (i, toMeta(st, owners))
           }
         }
       }
@@ -113,13 +121,14 @@ object Enumerate {
       val next = level.filter(_._2.isDir).map { case (i, m) => (i, m.path) }
       frontier = width => next.repartition(width)
     }
-    spark.createDataset(sc.union(levels.result()).coalesce(sc.defaultParallelism))
+    sc.union(levels.result()).coalesce(sc.defaultParallelism)
   }
 
-  /** Full recursive enumeration of `root` (the root entry itself included). */
+  /** Full recursive enumeration of `root` (the root entry itself included),
+    * without permission, owner and group. */
   def listTree(spark: SparkSession, root: String): Dataset[FileMeta] = {
     import spark.implicits._
-    listRoots(spark, Seq(root)).map(_._2)
+    spark.createDataset(listRoots(spark, Seq(root), owners = false).map(_._2))
   }
 
   /** `-f <urilist>`: newline-delimited URI list (DistCpUtils.java:378-394).
@@ -240,7 +249,7 @@ object Enumerate {
         val f = fs(conf, parent)
         f.listStatus(new Path(parent)).iterator
           .filter(st => want.contains(st.getPath.toUri.getPath))
-          .map(toMeta)
+          .map(toMeta(_))
       }
   }
 }

@@ -1,12 +1,12 @@
 package graft.exec
 
-import java.io.IOException
+import java.io.{FileNotFoundException, IOException}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.core._
 import graft.plan.CopyPlan
@@ -28,15 +28,12 @@ object Executor {
 
   val BufferSize = 128 * 1024 // copy.buf.size, DefaultCopyFilesMapper.java:33
 
-  /** The preserved attributes [[preserveAttrs]] applies to a directory. */
-  private val DirAttributes: Set[FileAttribute] =
-    Set(FileAttribute.User, FileAttribute.Group, FileAttribute.Permission)
-
   /** Job counters plus per-phase wall-clock — the reference records
     * SETUP/RUN/CLEANUP durations into the job conf (DistCPPlus.java:128-131,
     * 203-229); here they ride on the stats object. setup = dest mkdirs +
     * bucket planning; run = the distributed copy + failure policy; cleanup =
-    * delete-sync + dir-attribute finalize. */
+    * delete-sync + dir-attribute finalize. `bytesExpected` is the planned
+    * file bytes (the reference's BYTESEXPECTED counter, DistCPPlus.java:108). */
   final case class CopyStats(
       copied: Long,
       skipped: Long,
@@ -46,6 +43,7 @@ object Executor {
       setupMs: Long = 0L,
       runMs: Long = 0L,
       cleanupMs: Long = 0L,
+      bytesExpected: Long = 0L,
   )
 
   /** The user-extension point (ref op 13, `-mapper <class>`,
@@ -121,7 +119,7 @@ object Executor {
           dfs.delete(tmp, false)
           throw new IOException(s"length mismatch: copied=$copied tmp=$tmpLen src=$srcLenNow")
         }
-        if (dfs.exists(dstPath)) dfs.delete(dstPath, true) // rename protocol, DistCpUtils.java:44-57
+        dfs.delete(dstPath, true) // rename protocol, DistCpUtils.java:44-57; false when absent
         if (!dfs.rename(tmp, dstPath)) throw new IOException(s"rename $tmp -> $dstPath failed")
         preserveAttrs(dfs, dstPath, task.src, cfg.preserve)
         CopyResult(task.relDst, task.src.path, "COPY", copied, "")
@@ -150,8 +148,9 @@ object Executor {
       task: CopyTask,
       cfg: CopyConfig,
   ): Boolean = {
-    if (!dfs.exists(dst)) return false
-    val d = dfs.getFileStatus(dst)
+    val d =
+      try dfs.getFileStatus(dst)
+      catch { case _: FileNotFoundException => return false }
     if (!cfg.skipTs && d.getModificationTime != task.src.mtime) return false
     if (d.getLen != task.src.length) return false
     if (cfg.skipCrc) return true
@@ -160,17 +159,31 @@ object Executor {
     sc == null || dc == null || sc == dc
   }
 
+  /** Apply the preserved attributes of `src` to `p`, which the copy made
+    * the same type as `src`: the destination is stat'ed only for the
+    * owner/group/permission compare. An empty owner, group or permission
+    * was not listed (a plan made without `-pu`/`-pg`/`-pp`) and is left
+    * alone. */
   def preserveAttrs(fs: FileSystem, p: Path, src: FileMeta, attrs: Set[FileAttribute]): Unit = {
-    val st = fs.getFileStatus(p)
-    if (attrs.contains(FileAttribute.Permission) && st.getPermission.toString != src.perm)
-      fs.setPermission(p, FsPermission.valueOf(permWithType(st.isDirectory, src.perm)))
-    if ((attrs.contains(FileAttribute.User) && st.getOwner != src.owner) ||
-        (attrs.contains(FileAttribute.Group) && st.getGroup != src.group))
-      scala.util.Try(fs.setOwner(p,
-        if (attrs.contains(FileAttribute.User)) src.owner else null,
-        if (attrs.contains(FileAttribute.Group)) src.group else null))
-    if (attrs.contains(FileAttribute.Timestamp) && !st.isDirectory)
+    if (attrs.exists(FileAttribute.Ownership)) {
+      val st = fs.getFileStatus(p)
+      if (attrs.contains(FileAttribute.Permission) && src.perm.nonEmpty && st.getPermission.toString != src.perm)
+        fs.setPermission(p, FsPermission.valueOf(permWithType(src.isDir, src.perm)))
+      val user = Option.when(attrs.contains(FileAttribute.User) && src.owner.nonEmpty)(src.owner)
+      val group = Option.when(attrs.contains(FileAttribute.Group) && src.group.nonEmpty)(src.group)
+      if (user.exists(_ != st.getOwner) || group.exists(_ != st.getGroup))
+        scala.util.Try(fs.setOwner(p, user.orNull, group.orNull))
+    }
+    if (attrs.contains(FileAttribute.Timestamp) && !src.isDir)
       fs.setTimes(p, src.mtime, src.atime) // files only: HDFS-2436, DistCPPlus.java:256-258
+  }
+
+  /** (count, bytes) per copy result status. */
+  private type Tally = Map[String, (Long, Long)]
+
+  private def add(a: Tally, status: String, n: Long, b: Long): Tally = {
+    val (n0, b0) = a.getOrElse(status, (0L, 0L))
+    a.updated(status, (n0 + n, b0 + b))
   }
 
   private def permWithType(isDir: Boolean, perm: String): String =
@@ -180,20 +193,15 @@ object Executor {
     * every task (mkdirs for dirs, streamed copies for files), then
     * delete-sync and dir-attribute finalize (DistCPPlus.java:264-297). */
   def execute(spark: SparkSession, planned: CopyPlan, cfg: CopyConfig): CopyStats = {
-    import spark.implicits._
     val tSetup0 = System.nanoTime()
     val dstRoot = cfg.dst
     val conf = Fs.conf()
     val dfs = new Path(dstRoot).getFileSystem(conf)
     dfs.mkdirs(new Path(dstRoot))
 
+    val totals = planned.totals
     val numBuckets = {
-      val totalBytes = {
-        val r = planned.tasks.filter(!_.src.isDir)
-          .agg(org.apache.spark.sql.functions.sum("src.length")).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-      val derived = math.max(1L, totalBytes / cfg.bytesPerTask).toInt
+      val derived = math.max(1L, totals.bytes / cfg.bytesPerTask).toInt
       if (cfg.maxTasks > 0) math.min(cfg.maxTasks, math.max(derived, 1))
       else math.max(derived, spark.sparkContext.defaultParallelism)
     }
@@ -211,26 +219,19 @@ object Executor {
         override def numPartitions: Int = numBuckets
         override def getPartition(key: Any): Int = key.asInstanceOf[Int]
       })
-    val results: Dataset[CopyResult] = spark.createDataset(
-      partitioned.mapPartitions { iter =>
-        val c = Fs.conf()
-        val attempt = Option(TaskContext.get()).map(_.taskAttemptId().toString).getOrElse("0")
-        iter.map { case (_, task) => copyFn(c, task, dstRoot, cfg, attempt) }
-      })
-      .localCheckpoint()
-
-    // ONE aggregation pass over the checkpointed results for every counter
-    // the job reports (per-status counts + bytes): the previous five
-    // filter/count actions re-scanned the result blocks five times, all of
-    // it after the phase timers stopped
-    val statusAgg: Map[String, (Long, Long)] = {
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      results.groupBy(col("status"))
-        .agg(count(lit(1)).as("n"), sum(col("bytes")).as("b"))
-        .collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))))
-        .toMap
+    val results = partitioned.mapPartitions { iter =>
+      val c = Fs.conf()
+      val attempt = Option(TaskContext.get()).map(_.taskAttemptId().toString).getOrElse("0")
+      iter.map { case (_, task) => copyFn(c, task, dstRoot, cfg, attempt) }
     }
+    results.localCheckpoint()
+
+    // the copy pass's ONE job pins the results and returns every counter
+    // the run reports: (count, bytes) per status, per partition
+    val statusAgg: Tally = spark.sparkContext
+      .runJob(results, (it: Iterator[CopyResult]) =>
+        it.foldLeft(Map.empty: Tally)((a, r) => add(a, r.status, 1L, r.bytes)))
+      .foldLeft(Map.empty: Tally)((a, p) => p.foldLeft(a) { case (m, (s, (n, b))) => add(m, s, n, b) })
     val nFailed = statusAgg.get("FAIL").map(_._1).getOrElse(0L)
     if (nFailed > 0) {
       results.filter(_.status == "FAIL").take(10)
@@ -247,7 +248,7 @@ object Executor {
     // recursive delete + ancestor suppression, mirroring FsShell -rmr). The
     // previous collect().foreach serialized a potentially 10^8-path delete
     // set through the driver.
-    planned.deletes.foreachPartition { (it: Iterator[String]) =>
+    if (totals.deletes > 0) planned.deletes.foreachPartition { (it: Iterator[String]) =>
       val c = Fs.conf()
       val pfs = new Path(dstRoot).getFileSystem(c)
       it.foreach(rel => pfs.delete(new Path(dstRoot, rel), true))
@@ -258,7 +259,7 @@ object Executor {
     // times are set on files, replication and block size at create — so
     // without -pu/-pg/-pp the pass (one job, two status calls per dir)
     // could change nothing
-    if (cfg.preserve.exists(DirAttributes)) {
+    if (cfg.preserve.exists(FileAttribute.Ownership)) {
       planned.dirs.foreachPartition { (it: Iterator[CopyTask]) =>
         val c = Fs.conf()
         val pfs = new Path(dstRoot).getFileSystem(c)
@@ -279,6 +280,7 @@ object Executor {
       setupMs = (tRun0 - tSetup0) / 1000000L,
       runMs = (tCleanup0 - tRun0) / 1000000L,
       cleanupMs = (tEnd - tCleanup0) / 1000000L,
+      bytesExpected = totals.bytes,
     )
   }
 }

@@ -1,22 +1,29 @@
 package graft.plan
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.core._
 import graft.enumerate.Enumerate
 import graft.operators.PrefixSum
 
-/** The copy planner as Dataset algebra (SURVEY.md §7 step 3).
+/** The copy planner (SURVEY.md §7 step 3).
   *
   * What the reference does with hand-rolled external sorts and merge loops
-  * (DistCpUtils.java:84-223) becomes groupBy/anti-join/window plans that
-  * Catalyst executes distributed:
+  * (DistCpUtils.java:84-223) becomes one keyed pass over the listing walk
+  * (RDD API, so its shuffles run as ONE Spark job): every source task, every
+  * destination entry and every prefix the source manifest keeps meets the
+  * others under its destination-relative path, and each key decides
+  *   - update diff   → task unless the destination is length/mtime-equal,
+  *                     CRC-compared on the executor when it is   (op 6)
+  *   - dup check     → two or more sources on one key           (op 8)
+  *   - delete sync   → destination-only and not kept, then
+  *                     ancestor suppression by parent key       (op 9)
+  * around it:
   *   - limits        → chained per-partition skip-and-continue  (op 5)
-  *   - update diff   → left join src⟕dst on relDst + predicate (op 6)
-  *   - dup check     → groupBy(relDst).count > 1               (op 8)
-  *   - delete sync   → dst left-anti src + ancestor suppression (op 9)
   *   - split packing → range-partitioned cumsum bucketing      (op 10)
   *
   * Every source root and the destination are listed in ONE walk
@@ -27,7 +34,13 @@ final case class CopyPlan(
     tasks: Dataset[CopyTask],
     deletes: Dataset[String],
     dirs: Dataset[CopyTask],
+    planned: Option[CopyPlan.Totals] = None,
 ) {
+  /** Planned file copies, their bytes and the deletes: the planning pass's
+    * own summary, or for a plan built elsewhere (a loaded one) one job per
+    * manifest. */
+  lazy val totals: CopyPlan.Totals = planned.getOrElse(CopyPlan.Totals.of(tasks, deletes))
+
   /** Dry-run surface (op 19): planned file copies without executing.
     *
     * Driver-side materialization by contract (mirrors the reference's
@@ -57,6 +70,17 @@ object CopyPlan {
     * (~1M paths ≈ low hundreds of MB) before failing fast with a pointer at
     * the distributed plan export. */
   val DryRunListCap: Int = 1000000
+
+  /** File copies, their bytes, and delete-sync targets of a plan. */
+  final case class Totals(files: Long, bytes: Long, deletes: Long)
+
+  object Totals {
+    def of(tasks: Dataset[CopyTask], deletes: Dataset[String]): Totals = {
+      val (files, bytes) = tasks.rdd.filter(!_.src.isDir).map(t => (1L, t.src.length))
+        .fold((0L, 0L)) { case ((f1, b1), (f2, b2)) => (f1 + f2, b1 + b2) }
+      Totals(files, bytes, deletes.rdd.count())
+    }
+  }
 }
 
 object Planner {
@@ -65,13 +89,11 @@ object Planner {
     * root i < roots.length, keyed by its dest-relative path. With multiple
     * roots each root nests under its basename (distcp semantics). One pass
     * over the walk whatever the root count. */
-  private def sourceTasks(
-      walk: Dataset[(Int, FileMeta)],
+  private[graft] def sourceTasks(
+      walk: RDD[(Int, FileMeta)],
       roots: Seq[String],
       cfg: CopyConfig,
-  ): Dataset[CopyTask] = {
-    val spark = walk.sparkSession
-    import spark.implicits._
+  ): RDD[CopyTask] = {
     // relativize against each root's FS-qualified rendering: enumerated
     // metas carry full qualified URIs, the user-typed root may not
     val qRoots = roots.map(Enumerate.qualify).toArray
@@ -168,106 +190,113 @@ object Planner {
     }
   }
 
-  /** The destination tree relativized to `dstRoot` — columns (relDst,
-    * dLen, dMtime, dIsDir), the root entry itself excluded — from the
-    * walk's entries under root index `idx`. */
-  private def listDestination(walk: Dataset[(Int, FileMeta)], idx: Int, dstRoot: String): DataFrame = {
-    val spark = walk.sparkSession
-    import spark.implicits._
-    val qDstRoot = Enumerate.qualify(dstRoot)
-    walk.flatMap { case (i, m) =>
-      if (i != idx) None
-      else PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(r => (r, m.length, m.mtime, m.isDir))
-    }.toDF("relDst", "dLen", "dMtime", "dIsDir")
+  /** What the keyed pass knows about one destination-relative path. Fixed
+    * size whatever the tree: the number of source entries mapped here, one
+    * of them, the destination entry's length/mtime, and whether the source
+    * manifest's path closure keeps the path. */
+  private final case class Slot(srcs: Int, task: Option[CopyTask], dst: Option[(Long, Long)], kept: Boolean) {
+    def +(o: Slot): Slot = Slot(srcs + o.srcs, task.orElse(o.task), dst.orElse(o.dst), kept || o.kept)
   }
 
-  /** Update-diff: drop tasks whose destination is already "the same"
-    * (DistCpUtils.java:239-291 predicate order: timestamp → length; checksum
-    * re-checked lazily at copy time for length-equal pairs). `dst` is the
-    * [[listDestination]] of `dstRoot`. */
-  def updateDiff(
-      tasks: Dataset[CopyTask],
-      dst: DataFrame,
-      dstRoot: String,
-      skipTs: Boolean,
-      skipCrc: Boolean,
-  ): Dataset[CopyTask] = {
-    val spark = tasks.sparkSession
-    import spark.implicits._
-    val joined = tasks.join(dst, Seq("relDst"), "left").localCheckpoint()
-    val metaDiff = joined
-      .filter(
-        col("src.isDir") || col("dLen").isNull ||
-          col("src.length") =!= col("dLen") ||
-          (if (skipTs) lit(false) else col("src.mtime") =!= col("dMtime")))
-      .drop("dLen", "dMtime", "dIsDir")
-      .as[CopyTask]
-    if (skipCrc) metaDiff
-    else {
-      // CRC pass over the metadata-equal pairs (DistCpUtils.java:252-291:
-      // checksum compared only when TS+length match; null/unsupported
-      // checksum ⇒ same). Distributed — one getFileChecksum RPC pair per
-      // surviving file inside mapPartitions, never on the driver.
-      val metaSame = joined
-        .filter(
-          !col("src.isDir") && col("dLen").isNotNull &&
-            col("src.length") === col("dLen") &&
-            (if (skipTs) lit(true) else col("src.mtime") === col("dMtime")))
-        .drop("dLen", "dMtime", "dIsDir")
-        .as[CopyTask]
-      val crcDiff = metaSame.mapPartitions { it =>
-        val c = Fs.conf()
-        it.filter { t =>
-          val sp = new Path(t.src.path)
-          val dp = if (t.relDst == ".") new Path(dstRoot) else new Path(dstRoot, t.relDst)
-          val sc = sp.getFileSystem(c).getFileChecksum(sp)
-          val dc = dp.getFileSystem(c).getFileChecksum(dp)
-          sc != null && dc != null && sc != dc // null ⇒ same ⇒ keep skipped
-        }
-      }
-      metaDiff.unionByName(crcDiff)
+  /** One row of a materialized plan. */
+  private sealed trait Row extends Serializable
+  private final case class Copy(task: CopyTask) extends Row
+  private final case class Delete(relDst: String) extends Row
+  private final case class Duplicate(relDst: String) extends Row
+
+  /** Per-partition tally of the plan rows, summed on the driver. */
+  private final case class Summary(dups: Long, dupExample: String, files: Long, bytes: Long, deletes: Long) {
+    def +(r: Row): Summary = r match {
+      case Copy(t) if !t.src.isDir => copy(files = files + 1, bytes = bytes + t.src.length)
+      case Copy(_) => this
+      case Delete(_) => copy(deletes = deletes + 1)
+      case Duplicate(rel) => copy(dups = dups + 1, dupExample = if (dups == 0) rel else dupExample)
     }
+    def ++(o: Summary): Summary =
+      Summary(dups + o.dups, if (dups > 0) dupExample else o.dupExample,
+        files + o.files, bytes + o.bytes, deletes + o.deletes)
   }
 
-  /** Duplicate-destination check (DistCpUtils.java:84-110): two sources
-    * mapping to one relDst is a planning error (exit -2). */
-  def checkDuplication(tasks: Dataset[CopyTask]): Unit = {
-    val dups = tasks.groupBy(col("relDst")).count().filter(col("count") > 1).limit(1).collect()
-    if (dups.nonEmpty)
-      throw new DuplicationException(s"duplicate destination: ${dups.head.getString(0)}")
+  private object Summary {
+    val Empty: Summary = Summary(0, "", 0, 0, 0)
   }
 
-  /** Delete-sync (DistCpUtils.java:136-223): destination paths absent from
-    * the source manifest, with ancestor suppression — a left-anti join plus a
-    * parent-membership anti-join (the delete set is closed under descendants,
-    * so suppressing direct children of deleted dirs is sufficient).
+  /** The keyed pass: duplicate check, update diff and delete sync over one
+    * shuffle of the walk, materialized with its [[Summary]] in ONE job.
     *
-    * The keep-set is the PATH CLOSURE of the manifest (every relDst plus all
-    * its ancestor prefixes), not the raw relDst column: selection modes that
-    * emit file-only manifests (-regexPath, -f with file URIs) would otherwise
-    * leave the parent directories of just-copied files in the doomed set, and
-    * the recursive delete pass would destroy them — and their contents — on
-    * the next sync run. Closure explosion is bounded by path depth and stays
-    * metadata-scale. `dst` is the [[listDestination]] of the destination.
+    * Keys are destination-relative paths. `tasks` (the admitted source
+    * manifest) contributes one source per relDst; with a destination,
+    * `dst` contributes its entries; under `-delete`, every prefix of every
+    * relDst in `keep` (the whole manifest, before limits and diff) is kept:
+    * a file-only manifest (-regexPath, -f with file URIs) would otherwise
+    * doom the parent directories of the files it copies, and the recursive
+    * delete would take the files along. The reduce combines map-side into
+    * one [[Slot]] per key, so no key's state grows with its directory.
+    *
+    * Per key (DistCpUtils.java:84-291):
+    *   - two or more sources is a duplicate (exit -2). It is checked on the
+    *     admitted manifest BEFORE the diff: diffing first would hide a
+    *     collision whenever one colliding source is up to date, and the two
+    *     sources would ping-pong the destination between runs with exit 0;
+    *   - a source is a task unless `-update` finds a destination entry of
+    *     equal length and (unless `-skiptscheck`) mtime; such a
+    *     metadata-equal pair is CRC-compared on the executor unless
+    *     `-skipcrccheck` (null/unsupported checksum ⇒ same ⇒ skipped);
+    *   - a destination entry with no source that is not kept is doomed.
+    * The doomed set is closed under descendants, so suppressing doomed
+    * paths whose parent is doomed (`subtractByKey` on the parent key)
+    * leaves one recursive delete per doomed subtree.
     */
-  def deleteTargets(tasks: Dataset[CopyTask], dst: DataFrame): Dataset[String] = {
-    val spark = tasks.sparkSession
-    import spark.implicits._
-    val keep = tasks
-      .flatMap { t =>
-        val segs = t.relDst.split('/')
-        (1 to segs.length).map(i => segs.take(i).mkString("/"))
+  private def keyedPass(
+      tasks: RDD[CopyTask],
+      keep: Option[RDD[CopyTask]],
+      dst: Option[RDD[(String, FileMeta)]],
+      cfg: CopyConfig,
+  ): (RDD[Row], Summary) = {
+    val sc = tasks.sparkContext
+    val (update, skipTs, skipCrc, dstRoot) = (cfg.update, cfg.skipTs, cfg.skipCrc, cfg.dst)
+    val deleting = keep.isDefined
+    val sources = tasks.map(t => t.relDst -> Slot(1, Some(t), None, kept = false))
+    val kept = keep.toSeq.map(_.flatMap { t =>
+      val segs = t.relDst.split('/')
+      (1 to segs.length).iterator.map(i => segs.take(i).mkString("/") -> Slot(0, None, None, kept = true))
+    })
+    val dsts = dst.toSeq.map(_.map { case (rel, m) => rel -> Slot(0, None, Some((m.length, m.mtime)), kept = false) })
+    val slots = sc.union(sources +: (kept ++ dsts)).reduceByKey(_ + _, sc.defaultParallelism)
+    val decided: RDD[(String, Row)] = slots.mapPartitions({ it =>
+      val conf = Fs.conf()
+      def crcDiffers(t: CopyTask): Boolean = {
+        val sp = new Path(t.src.path)
+        val dp = if (t.relDst == ".") new Path(dstRoot) else new Path(dstRoot, t.relDst)
+        val srcSum = sp.getFileSystem(conf).getFileChecksum(sp)
+        val dstSum = dp.getFileSystem(conf).getFileChecksum(dp)
+        srcSum != null && dstSum != null && srcSum != dstSum
       }
-      .distinct()
-      .toDF("relDst")
-    val doomed = dst.select(col("relDst")).join(keep, Seq("relDst"), "left_anti")
-    val withParent = doomed.withColumn(
-      "parent",
-      when(col("relDst").contains("/"), regexp_replace(col("relDst"), "/[^/]*$", ""))
-        .otherwise(lit(null)))
-    withParent
-      .join(doomed.select(col("relDst").as("parent")), Seq("parent"), "left_anti")
-      .select(col("relDst")).as[String]
+      it.flatMap {
+        case (rel, s) if s.srcs > 1 => Some(rel -> Duplicate(rel))
+        case (rel, Slot(_, Some(t), d, _)) =>
+          val changed = !update || t.src.isDir || d.forall { case (len, mtime) =>
+            t.src.length != len || (!skipTs && t.src.mtime != mtime) || (!skipCrc && crcDiffers(t))
+          }
+          Option.when(changed)(rel -> Copy(t))
+        case (rel, Slot(_, None, Some(_), false)) if deleting => Some(rel -> Delete(rel))
+        case _ => None
+      }
+    }, preservesPartitioning = true)
+    // read by the parent-keyed shuffle, the subtract and the output alike
+    decided.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val doomed = decided.filter(_._2.isInstanceOf[Delete])
+      val deletes = doomed
+        .map { case (rel, r) => rel.take(math.max(rel.lastIndexOf('/'), 0)) -> r } // top level: ""
+        .subtractByKey(doomed, slots.partitioner.get)
+        .values
+      val rows = decided.values.filter(!_.isInstanceOf[Delete]).union(deletes)
+      rows.localCheckpoint()
+      val summary = sc.runJob(rows, (it: Iterator[Row]) => it.foldLeft(Summary.Empty)(_ + _))
+        .foldLeft(Summary.Empty)(_ ++ _)
+      (rows, summary)
+    } finally decided.unpersist(blocking = false)
   }
 
   /** Size-weighted bucket assignment (CopyInputFormat.java:33-79): in
@@ -313,7 +342,8 @@ object Planner {
     )
   }
 
-  /** Full plan: enumerate → limits → diff → dup-check → delete set. */
+  /** Full plan: enumerate → limits → the keyed pass (dup check, update
+    * diff, delete set). Throws [[DuplicationException]] before it returns. */
   def plan(spark: SparkSession, cfg: CopyConfig): CopyPlan = {
     import spark.implicits._
     val roots = cfg.flatRegex match {
@@ -327,33 +357,31 @@ object Planner {
     // it exists: index roots.length
     val dstPath = new Path(cfg.dst)
     val withDst = (cfg.update || cfg.delete) && dstPath.getFileSystem(Fs.conf()).exists(dstPath)
-    val walk = Enumerate.listRoots(spark, if (withDst) roots :+ cfg.dst else roots)
+    val walk = Enumerate.listRoots(spark, if (withDst) roots :+ cfg.dst else roots,
+      owners = cfg.preserve.exists(FileAttribute.Ownership))
     val all = sourceTasks(walk, roots, cfg)
     // Under -update the reference OVERWRITES the limit-skip decision with the
     // same-file check (DistCPPlus.java:681-700: `skipfile = isSame`), so
     // -filelimit/-sizelimit are effectively ignored — reproduced here by
     // bypassing applyLimits when updating.
     val limited =
-      if (cfg.update) all else applyLimits(all, cfg.fileLimit, cfg.sizeLimit)
-    // dup-check BEFORE the update diff, on the full admitted manifest (the
-    // reference checks the listing, DistCpUtils.java:84-110): diffing first
-    // would hide a collision whenever one colliding source is currently
-    // up to date at the destination — the copy then silently overwrites and
-    // the two sources ping-pong the destination between runs with exit 0
-    checkDuplication(limited)
-    val dst = Option.when(withDst)(listDestination(walk, roots.length, cfg.dst))
-    val diffed = dst match {
-      case Some(d) if cfg.update => updateDiff(limited, d, cfg.dst, cfg.skipTs, cfg.skipCrc)
-      case _ => limited
+      if (cfg.update || (cfg.fileLimit == Long.MaxValue && cfg.sizeLimit == Long.MaxValue)) all
+      else applyLimits(spark.createDataset(all), cfg.fileLimit, cfg.sizeLimit).rdd
+    val dst = Option.when(withDst) {
+      val (idx, qDstRoot) = (roots.length, Enumerate.qualify(cfg.dst))
+      walk.flatMap { case (i, m) =>
+        if (i != idx) None else PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(_ -> m)
+      }
     }
-    val deletes = dst match {
-      case Some(d) if cfg.delete => deleteTargets(all, d)
-      case _ => spark.emptyDataset[String]
-    }
+    val (rows, summary) = keyedPass(limited, Option.when(withDst && cfg.delete)(all), dst, cfg)
+    if (summary.dups > 0) throw new DuplicationException(s"duplicate destination: ${summary.dupExample}")
+    val tasks = spark.createDataset(rows.collect { case Copy(t) => t })
     CopyPlan(
-      tasks = diffed.localCheckpoint(),
-      deletes = deletes,
-      dirs = all.filter(_.src.isDir),
+      tasks = tasks,
+      deletes = spark.createDataset(rows.collect { case Delete(rel) => rel }),
+      // directories pass limits and the diff alike
+      dirs = tasks.filter(_.src.isDir),
+      planned = Some(CopyPlan.Totals(summary.files, summary.bytes, summary.deletes)),
     )
   }
 }

@@ -31,7 +31,10 @@ import org.apache.hadoop.fs.{FileChecksum, FileStatus, Path, RawLocalFileSystem}
   * plane (open/create/rename/delete/setTimes) is inherited — those paths
   * resolve through the URI's path component and are scheme-agnostic.
   * Every listStatus is tallied per path in [[ChecksummedLocalFs.listStatusCalls]],
-  * every getFileStatus and exists in [[ChecksummedLocalFs.statusCalls]].
+  * every getFileStatus and exists in [[ChecksummedLocalFs.statusCalls]], and
+  * every getPermission/getOwner/getGroup on a status this FS returned in
+  * [[ChecksummedLocalFs.attributeCalls]] (RawLocalFileSystem forks `ls -ld`
+  * for those without the native Hadoop library).
   */
 class ChecksummedLocalFs extends RawLocalFileSystem {
   override def getScheme: String = "chkfile"
@@ -46,11 +49,11 @@ class ChecksummedLocalFs extends RawLocalFileSystem {
     val attrs = JFiles.readAttributes(p, classOf[PosixFileAttributes])
     val perm = FsPermission.valueOf(
       (if (dir) "d" else "-") + PosixFilePermissions.toString(attrs.permissions()))
-    new FileStatus(
-      if (dir) 0L else attrs.size(), dir, 1, getDefaultBlockSize,
+    new ChecksummedLocalFs.CountedStatus(
+      if (dir) 0L else attrs.size(), dir, getDefaultBlockSize,
       attrs.lastModifiedTime().toMillis, attrs.lastAccessTime().toMillis,
       perm, attrs.owner().getName, attrs.group().getName,
-      makeQualified(f))
+      makeQualified(f), p.toString)
   }
 
   override def getFileStatus(f: Path): FileStatus = {
@@ -92,10 +95,12 @@ class ChecksummedLocalFs extends RawLocalFileSystem {
 
 object ChecksummedLocalFs {
   private type Tally = java.util.concurrent.ConcurrentHashMap[String, Integer]
-  private val listed, statused = new Tally
+  private val listed, statused, attributed = new Tally
 
-  private def tally(t: Tally, p: java.nio.file.Path): Unit =
-    t.merge(p.toString, 1, (a: Integer, b: Integer) => a + b)
+  private def tally(t: Tally, p: java.nio.file.Path): Unit = tally(t, p.toString)
+
+  private def tally(t: Tally, p: String): Unit =
+    t.merge(p, 1, (a: Integer, b: Integer) => a + b)
 
   private def calls(t: Tally): Map[String, Int] =
     t.asScala.map { case (k, v) => k -> v.intValue }.toMap
@@ -106,6 +111,19 @@ object ChecksummedLocalFs {
 
   /** getFileStatus + exists calls per local path, JVM-wide. */
   def statusCalls: Map[String, Int] = calls(statused)
+
+  /** getPermission + getOwner + getGroup calls per local path, JVM-wide. */
+  def attributeCalls: Map[String, Int] = calls(attributed)
+
+  /** A status whose owner/permission reads are tallied under `local`. */
+  final class CountedStatus(
+      length: Long, dir: Boolean, blockSize: Long, mtime: Long, atime: Long,
+      perm: FsPermission, owner: String, group: String, path: Path, local: String)
+      extends FileStatus(length, dir, 1, blockSize, mtime, atime, perm, owner, group, path) {
+    override def getPermission: FsPermission = { tally(attributed, local); super.getPermission }
+    override def getOwner: String = { tally(attributed, local); super.getOwner }
+    override def getGroup: String = { tally(attributed, local); super.getGroup }
+  }
 
   /** FileChecksum.equals compares (algorithm, length, bytes) — the base
     * class contract — so two of these are equal iff file contents match. */

@@ -957,4 +957,289 @@ class CopyLayerSpec extends SparkTestBase {
     assert(sc.getPersistentRDDs.keySet == pinned)
     mine.unpersist()
   }
+
+  /** The Dataset-join planner the keyed pass replaced, kept as the oracle
+    * the keyed pass is compared against: the same walk and source manifest,
+    * then a groupBy duplicate check, a left-join update diff and a
+    * left-anti-join delete sync with a parent-membership anti-join. */
+  private object JoinPlanner {
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+
+    /** (relDst, source path) of every task and the delete set, or None for
+      * a duplicate destination. */
+    def plan(cfg: CopyConfig): Option[(Set[(String, String)], Set[String])] = {
+      val roots = cfg.srcs ++ cfg.fileList.toSeq.flatMap(f => Enumerate.fileList(spark, f).collect())
+      val dstPath = new HPath(cfg.dst)
+      val withDst = (cfg.update || cfg.delete) && dstPath.getFileSystem(Fs.conf()).exists(dstPath)
+      val walk = spark.createDataset(
+        Enumerate.listRoots(spark, if (withDst) roots :+ cfg.dst else roots, owners = false))
+      val all = spark.createDataset(Planner.sourceTasks(walk.rdd, roots, cfg))
+      val limited = if (cfg.update) all else Planner.applyLimits(all, cfg.fileLimit, cfg.sizeLimit)
+      if (duplicated(limited)) None
+      else {
+        val dst = Option.when(withDst)(listDestination(walk, roots.length, cfg.dst))
+        val diffed = dst match {
+          case Some(d) if cfg.update => updateDiff(limited, d, cfg.dst, cfg.skipTs, cfg.skipCrc)
+          case _ => limited
+        }
+        val deletes = dst match {
+          case Some(d) if cfg.delete => deleteTargets(all, d).collect().toSet
+          case _ => Set.empty[String]
+        }
+        Some((diffed.collect().map(t => (t.relDst, t.src.path)).toSet, deletes))
+      }
+    }
+
+    private def listDestination(walk: Dataset[(Int, FileMeta)], idx: Int, dstRoot: String): DataFrame = {
+      val qDstRoot = Enumerate.qualify(dstRoot)
+      walk.flatMap { case (i, m) =>
+        if (i != idx) None
+        else PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(r => (r, m.length, m.mtime, m.isDir))
+      }.toDF("relDst", "dLen", "dMtime", "dIsDir")
+    }
+
+    private def updateDiff(
+        tasks: Dataset[CopyTask], dst: DataFrame, dstRoot: String, skipTs: Boolean, skipCrc: Boolean,
+    ): Dataset[CopyTask] = {
+      val joined = tasks.join(dst, Seq("relDst"), "left").localCheckpoint()
+      val metaDiff = joined
+        .filter(
+          col("src.isDir") || col("dLen").isNull ||
+            col("src.length") =!= col("dLen") ||
+            (if (skipTs) lit(false) else col("src.mtime") =!= col("dMtime")))
+        .drop("dLen", "dMtime", "dIsDir")
+        .as[CopyTask]
+      if (skipCrc) metaDiff
+      else {
+        val metaSame = joined
+          .filter(
+            !col("src.isDir") && col("dLen").isNotNull &&
+              col("src.length") === col("dLen") &&
+              (if (skipTs) lit(true) else col("src.mtime") === col("dMtime")))
+          .drop("dLen", "dMtime", "dIsDir")
+          .as[CopyTask]
+        val crcDiff = metaSame.mapPartitions { it =>
+          val c = Fs.conf()
+          it.filter { t =>
+            val sp = new HPath(t.src.path)
+            val dp = if (t.relDst == ".") new HPath(dstRoot) else new HPath(dstRoot, t.relDst)
+            val sc = sp.getFileSystem(c).getFileChecksum(sp)
+            val dc = dp.getFileSystem(c).getFileChecksum(dp)
+            sc != null && dc != null && sc != dc
+          }
+        }
+        metaDiff.unionByName(crcDiff)
+      }
+    }
+
+    private def duplicated(tasks: Dataset[CopyTask]): Boolean =
+      tasks.groupBy(col("relDst")).count().filter(col("count") > 1).limit(1).collect().nonEmpty
+
+    private def deleteTargets(tasks: Dataset[CopyTask], dst: DataFrame): Dataset[String] = {
+      val keep = tasks
+        .flatMap { t =>
+          val segs = t.relDst.split('/')
+          (1 to segs.length).map(i => segs.take(i).mkString("/"))
+        }
+        .distinct()
+        .toDF("relDst")
+      val doomed = dst.select(col("relDst")).join(keep, Seq("relDst"), "left_anti")
+      val withParent = doomed.withColumn(
+        "parent",
+        when(col("relDst").contains("/"), regexp_replace(col("relDst"), "/[^/]*$", ""))
+          .otherwise(lit(null)))
+      withParent
+        .join(doomed.select(col("relDst").as("parent")), Seq("parent"), "left_anti")
+        .select(col("relDst")).as[String]
+    }
+  }
+
+  test("the keyed pass plans what the Dataset-join planner planned, on random trees") {
+    import java.nio.file.attribute.FileTime
+    def chk(p: Path): String = "chkfile://" + p
+    val flagSets = Seq(
+      Seq("-update", "-delete"),
+      Seq("-update", "-delete", "-skipcrccheck"),
+      Seq("-update", "-skiptscheck"),
+      Seq("-overwrite", "-delete", "-filelimit", "6"),
+      Seq("-update", "-delete", "-skiptscheck", "-skipcrccheck"),
+    )
+    val names = Vector("a", "b", "c", "log-1", "log-2")
+    var (updateFileTasks, crcTasks, deletes) = (0, 0, 0)
+    for (seed <- 1 to 12) {
+      val rnd = new Random(seed)
+      val base = tmpDir(s"keyed-$seed")
+      val src = base.resolve("src")
+      val mt = 1600000000000L
+      def put(p: Path, n: Int, fill: Byte, mtime: Long): Unit = {
+        Files.createDirectories(p.getParent)
+        Files.write(p, Array.fill[Byte](n)(fill))
+        Files.setLastModifiedTime(p, FileTime.fromMillis(mtime))
+      }
+      // nested dirs and files; a name taken by the other type is skipped
+      for (_ <- 1 to 30) {
+        val rel = Seq.fill(1 + rnd.nextInt(3))(names(rnd.nextInt(names.length))).mkString("/")
+        try if (!Files.exists(src.resolve(rel))) put(src.resolve(rel), rnd.nextInt(40), 1, mt)
+        catch { case _: java.io.IOException => }
+      }
+      Files.createDirectories(src.resolve("e/empty"))
+      val lists = base.resolve("lists")
+      Files.createDirectories(lists)
+      def list(name: String, entries: Seq[Path]): String = {
+        val f = lists.resolve(name)
+        Files.write(f, entries.map(chk).mkString("\n").getBytes(StandardCharsets.UTF_8))
+        f.toString
+      }
+      val srcDirs = Files.list(src).iterator().asScala.filter(Files.isDirectory(_)).toVector.sortBy(_.toString)
+      val srcFiles = Files.walk(src).iterator().asScala.filter(Files.isRegularFile(_)).toVector.sortBy(_.toString)
+      // the selection: one root, two roots, overlapping roots, a file-only
+      // manifest through -regexPath or -f, or a duplicate (a root twice)
+      val selection: Seq[String] = seed % 6 match {
+        case 0 => Seq(chk(src))
+        case 1 => srcDirs.take(2).map(chk)
+        case 2 => Seq("-f", list("overlap.txt", src +: srcDirs.take(1)))
+        case 3 => Seq("-regexPath", chk(src), "[a-c]/log-.*")
+        case 4 => // every root nests under its basename: keep them distinct
+          val dir = srcDirs.takeRight(1)
+          val files = srcFiles.filterNot(f => dir.exists(_.getFileName == f.getFileName))
+            .distinctBy(_.getFileName).take(4)
+          Seq("-f", list("files.txt", files ++ dir))
+        case _ => Seq("-f", list("twice.txt", Seq(src, src)))
+      }
+      val dst = base.resolve("dst")
+      def cfg(flags: Seq[String]) = Args.parse(flags ++ selection :+ chk(dst)).toOption.get
+      // the mirror: a copy of the selection, or of the whole source where
+      // the selection is the duplicate one
+      val first = if (seed % 6 != 5) cfg(Seq("-pt")) else cfg(Nil).copy(srcs = Seq(chk(src)), fileList = None)
+      Executor.execute(spark, Planner.plan(spark, first), first)
+      // a source directory that is a file at the destination
+      srcDirs.headOption.map(d => dst.resolve(src.relativize(d).toString)).filter(Files.isDirectory(_)).foreach { d =>
+        Files.walk(d).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+        put(d, 5, 1, mt)
+      }
+      // destination drift: length, mtime and same-length content changes,
+      // source-only files, file→dir flips, destination-only subtrees; the
+      // first non-empty file changes content only, which only the CRC
+      // compare sees
+      val dstFiles = Files.walk(dst).iterator().asScala.filter(Files.isRegularFile(_)).toVector.sortBy(_.toString)
+      val crcOnly = dstFiles.find(Files.size(_) > 0)
+      for (f <- dstFiles) {
+        val m = Files.getLastModifiedTime(f).toMillis
+        val n = Files.size(f).toInt
+        (if (crcOnly.contains(f)) 2 else rnd.nextInt(8)) match {
+          case 0 => put(f, n + 3, 1, m)
+          case 1 => put(f, n, 1, m + 5000)
+          case 2 => put(f, n, 9, m)
+          case 3 => Files.delete(f)
+          case 4 => Files.delete(f); put(f.resolve("inner"), 2, 1, m)
+          case _ =>
+        }
+      }
+      put(dst.resolve("stale/deep/x"), 1, 1, mt)
+      put(dst.resolve(s"extra-$seed"), 1, 1, mt)
+      val flags = flagSets(seed % flagSets.length)
+      val c = cfg(flags)
+      val clue = s"seed=$seed flags=$flags selection=$selection"
+      val want = JoinPlanner.plan(c)
+      val got =
+        try {
+          val p = Planner.plan(spark, c)
+          Some((p.tasks.collect().map(t => (t.relDst, t.src.path)).toSet, p.deletes.collect().toSet))
+        } catch { case _: DuplicationException => None }
+      assert(got == want, clue)
+      if (seed % 6 == 5) assert(got.isEmpty, clue)
+      got.foreach { case (t, d) =>
+        if (c.update) updateFileTasks += t.count { case (_, p) => Files.isRegularFile(Paths.get(new HPath(p).toUri.getPath)) }
+        deletes += d.size
+        if (c.update && !c.skipCrc) crcTasks += crcOnly.count(f => t.exists(_._1 == dst.relativize(f).toString))
+      }
+    }
+    // the drift reached the diff, its CRC compare and the delete sync
+    assert(updateFileTasks > 0 && crcTasks > 0 && deletes > 0, (updateFileTasks, crcTasks, deletes))
+    info(s"$updateFileTasks file tasks under -update ($crcTasks found by CRC), $deletes deletes")
+  }
+
+  private def quietly[T](body: => T): (T, String) = {
+    val out = new java.io.ByteArrayOutputStream()
+    val r = Console.withOut(out)(body)
+    (r, out.toString(StandardCharsets.UTF_8))
+  }
+
+  test("a no-op -update -delete -pt sync runs at most (tree depth + 1) + 7 Spark jobs") {
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    quietly(graft.cli.Main.run(Array("-pt", src.toString, dst.toString), spark))
+    val depth = Files.walk(src).iterator().asScala.map(p => src.relativize(p).getNameCount).max
+    val ((rc, report), totals, finals) = jobsIn("noop-sync") {
+      quietly(graft.cli.Main.run(Array("-update", "-delete", "-pt", src.toString, dst.toString), spark))
+    }
+    assert(rc == 0 && report.contains("COPY=0 "), report)
+    // the walk's depth + 1 level jobs, one planning job, and the executor's
+    // bucket ranges and copy pass: the Dataset-join planner ran 25 here
+    assert(totals.jobs <= depth + 1 + 7, finals)
+  }
+
+  test("listing reads owner, group and permission only under -pu/-pg/-pp") {
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    def reads(flags: String*): Int = {
+      val before = ChecksummedLocalFs.attributeCalls.values.sum
+      val (rc, report) = quietly(graft.cli.Main.run((flags ++ Seq(s"chkfile://$src", s"chkfile://$dst")).toArray, spark))
+      assert(rc == 0, report)
+      ChecksummedLocalFs.attributeCalls.values.sum - before
+    }
+    assert(reads("-pt") == 0)
+    assert(reads("-update", "-delete", "-pt") == 0)
+    assert(reads("-update", "-delete", "-pugp") > 0)
+  }
+
+  test("BYTESEXPECTED reports the planned file bytes") {
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    val rx = """BYTESCOPIED=(\d+) BYTESEXPECTED=(\d+)""".r.unanchored
+    def bytes(flags: String*): (Long, Long) = {
+      val (rc, report) = quietly(graft.cli.Main.run((flags ++ Seq(src.toString, dst.toString)).toArray, spark))
+      assert(rc == 0, report)
+      report match {
+        case rx(copied, expected) => (copied.toLong, expected.toLong)
+        case _ => fail(report)
+      }
+    }
+    val total = treeListing(src).values.filter(_ >= 0).sum
+    assert(bytes("-pt") == ((total, total)))
+    Files.write(src.resolve("a.txt"), Array.fill[Byte](5000)(3))
+    assert(bytes("-update", "-pt") == ((5000L, 5000L)))
+  }
+
+  test("an -update -pt copy of a changed file stats its destination once") {
+    // the copy-time same-file check, the rename protocol and the -pt
+    // attribute pass each made their own status call: 4 per copied file
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    runCopy(Seq("-pt"), src, dst)
+    Files.write(src.resolve("a.txt"), Array.fill[Byte](2000)(3))
+    val cfg = Args.parse(Seq("-update", "-pt", src.toString, s"chkfile://$dst")).toOption.get
+    val plan = Planner.plan(spark, cfg)
+    val target = dst.resolve("a.txt").toString
+    val before = ChecksummedLocalFs.statusCalls.getOrElse(target, 0)
+    val stats = Executor.execute(spark, plan, cfg)
+    assert(stats.copied == 1 && stats.failed == 0, stats)
+    assert(ChecksummedLocalFs.statusCalls.getOrElse(target, 0) - before == 1)
+    assert(fileBytes(dst.resolve("a.txt")).toSeq == Array.fill[Byte](2000)(3).toSeq)
+  }
+
+  test("a plan exported without -p executes under -pugp") {
+    // the export listed no owner/permission: the copy leaves them as created
+    val base = tmpDir("export-p")
+    val src = mkTree(base.resolve("src"))
+    val dst = base.resolve("out")
+    val planDir = base.resolve("plan").toString
+    assert(quietly(graft.cli.Main.run(Array("-exportOnly", "-exportPath", planDir, src.toString, dst.toString), spark))._1 == 0)
+    val cfg = Args.parse(Seq("-pugp", src.toString, dst.toString)).toOption.get
+    val stats = Executor.execute(spark, Planner.loadPlan(spark, planDir), cfg)
+    assert(stats.copied == 8 && stats.failed == 0, stats)
+    assert(treeListing(src) == treeListing(dst))
+  }
 }
