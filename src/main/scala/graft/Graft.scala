@@ -81,11 +81,6 @@ object Graft {
       joinType: String = "inner"): DataFrame =
     operators.SaltedJoin.join(left, right, keys, salts, joinType)
 
-  /** Connected components over an edge list (near-dup clustering) — see
-    * [[graft.operators.ConnectedComponents.largeSmallStar]]. */
-  def connectedComponents(edges: DataFrame, src: String, dst: String): DataFrame =
-    operators.ConnectedComponents.largeSmallStar(edges, src, dst)
-
   /** Per-key top-k without sorting key groups (custom plan node) — see
     * [[graft.operators.TopK.perKey]]. */
   def topKPerKey(
@@ -104,26 +99,6 @@ object Graft {
       maxBucketsPerKey: Long = 10_000_000L): DataFrame =
     operators.GapFill.gapFill(df, keys, bucket, fills, maxBucketsPerKey)
 
-  /** Maximal cross-document duplicated token spans (exact-substring dedup,
-    * k-gram islands) — see [[graft.operators.DupSpans.find]]. */
-  def dupSpans(df: DataFrame, id: String, text: String, k: Int): DataFrame =
-    operators.DupSpans.find(df, id, text, k)
-
-  /** The cleaned corpus with duplicated spans removed — see
-    * [[graft.operators.DupSpans.strip]]. */
-  def dupStrip(df: DataFrame, id: String, text: String, k: Int): DataFrame =
-    operators.DupSpans.strip(df, id, text, k)
-
-  /** SCD type-2 dimension history on any (key, attribute, time) frame —
-    * see [[graft.operators.Scd2.history]]. */
-  def scd2History(
-      df: DataFrame,
-      keys: Seq[String],
-      attr: String,
-      time: String,
-      tieBreak: Seq[String] = Nil): DataFrame =
-    operators.Scd2.history(df, keys, attr, time, tieBreak)
-
   /** Fit a unigram LM on `train` and score `docs` by average per-token
     * negative log-likelihood in integer micro-nats (CCNet-style quality
     * filtering) — see [[graft.operators.LmScore]]. */
@@ -135,28 +110,6 @@ object Graft {
     val lm = operators.LmScore.vocab(operators.LmScore.tokens(train, id, text))
     operators.LmScore.score(docs, id, text, lm, operators.LmScore.totals(lm))
   }
-
-  /** DSIR importance weights: fit hashed-feature target/raw distributions
-    * and score `docs` — see [[graft.operators.Dsir.weights]]. */
-  def dsirWeights(
-      docs: DataFrame,
-      target: DataFrame,
-      raw: DataFrame,
-      id: String = "doc_id",
-      text: String = "text",
-      buckets: Int = 256): DataFrame =
-    operators.Dsir.weights(docs, target, raw, id, text, buckets)
-
-  /** DSIR weights when target/raw partition the scored corpus by a row
-    * predicate — one tokenize pass fits both distributions; see
-    * [[graft.operators.Dsir.weightsSplit]]. */
-  def dsirWeightsSplit(
-      docs: DataFrame,
-      targetPred: org.apache.spark.sql.Column,
-      id: String = "doc_id",
-      text: String = "text",
-      buckets: Int = 256): DataFrame =
-    operators.Dsir.weightsSplit(docs, targetPred, id, text, buckets)
 
   /** 8×8 average-hash signatures of a GRFT1-raster (id, payload) frame —
     * one shuffle-free partition-wise decode pass; see
@@ -206,16 +159,6 @@ object Graft {
     require(sliceDocs >= 2, s"need at least 2 docs in the slice, got $sliceDocs")
     queries.Similarity.lshRecallCadenceDocs(docs, sliceDocs)
   }
-
-  /** Sketch-accuracy certification (HLL++ / approx-percentile vs exact
-    * arms) over a lineitem-shaped frame; `sequentialArms = true` trades
-    * ~25% wall for the isolated-arm memory profile on memory-tight
-    * clusters — see [[graft.operators.SketchCertify.sketchAccuracy]]. */
-  def sketchCertification(
-      li: DataFrame,
-      parallelism: Int,
-      sequentialArms: Boolean = false): DataFrame =
-    operators.SketchCertify.sketchAccuracy(li, parallelism, sequentialArms)
 
   /** Inject the graft_* SQL functions into a live session — see
     * [[GraftExtensions.register]] (builder-time sessions can use

@@ -119,11 +119,7 @@ object StageProbe {
     * t153_full (+ flagged-component closure and the full-outer report). */
   private def t153Arms(): Seq[(String, (SparkSession, String) => DataFrame)] = {
     def pairs(s: SparkSession, d: String) =
-      graft.operators.SetSimJoin.join(
-          Tables.documents(s, d)
-            .select(col("doc_id"),
-              graft.functions.ArrayFns.wordNgramHashes(lower(col("text")), 2).as("t")),
-          "doc_id", "t", tauPct = 80)
+      graft.queries.Similarity.bigramPairs(s, d)
         .select(col("doc_id1"), col("doc_id2"))
     Seq(
       "direct_hits" -> ((s, d) => {

@@ -207,14 +207,19 @@ object Executor {
     }
 
     val copyFn = resolveCopyFunction(cfg)
-    val bucketed = graft.plan.Planner.assignBuckets(planned.tasks, numBuckets)
+    // a zero-byte plan (directories and empty files, as in a no-op sync)
+    // puts every task in bucket 0 — what the packer computes at total 0 —
+    // without paying its PrefixSum jobs
+    val bucketed =
+      if (totals.bytes == 0) planned.tasks.rdd.map(task => (0, task))
+      else graft.plan.Planner.assignBuckets(planned.tasks, numBuckets).rdd
+        .map { case (task, b) => (b, task) }
     val tRun0 = System.nanoTime()
     // IDENTITY partitioner, not repartition(n, col): hash-partitioning the
     // bucket id collides distinct buckets into one task (≈1/e of partitions
     // empty at scale) and the equal-bytes-per-task packing the bucketer
     // just computed is destroyed — bucket i must BE partition i
-    val partitioned = bucketed.rdd
-      .map { case (task, b) => (b, task) }
+    val partitioned = bucketed
       .partitionBy(new org.apache.spark.Partitioner {
         override def numPartitions: Int = numBuckets
         override def getPartition(key: Any): Int = key.asInstanceOf[Int]

@@ -333,26 +333,55 @@ object Similarity {
           .orderBy("dims")
       }
 
+  /** Every document pair whose lowercased word-bigram sets have Jaccard
+    * >= 0.8, as (doc_id1, doc_id2, jac): t147's exact PPJoin
+    * ([[graft.operators.SetSimJoin]]), the guaranteed-complete pair set the
+    * closure, triangle, datasheet and triage queries build on. */
+  private[graft] def bigramPairs(s: SparkSession, d: String): DataFrame =
+    graft.operators.SetSimJoin.join(
+      Tables.documents(s, d)
+        .select(col("doc_id"), ArrayFns.wordNgramHashes(lower(col("text")), 2).as("t")),
+      "doc_id", "t", tauPct = 80)
+
   /** Verified MinHash near-dup pairs — candidate generation (4×8 banding,
     * bucket cap [2,20]) plus exact Jaccard verify at 0.8 — shared by t31
-    * (pair report) and t49 (cluster assignment). Returns
+    * (pair report), t89 and, through [[minhashDupEdges]], every graph and
+    * recall consumer. Returns
     * (doc_id1, doc_id2, jac) with jac unrounded. See t31's comment for the
     * full scale rationale.
     */
   private def minhashDupPairs(s: SparkSession, d: String): DataFrame = {
     val sh = shingled(s, d).localCheckpoint()
-    val cand = minhashCandPairs(sh)
-    val s1 = sh.select(col("doc_id").as("doc_id1"), col("shingles").as("s1"))
-    val s2 = sh.select(col("doc_id").as("doc_id2"), col("shingles").as("s2"))
+    verify(minhashCandPairs(sh), sh, sh).filter(col("jac") >= 0.8)
+  }
+
+  /** [[minhashDupPairs]] as checkpointed (doc_id1, doc_id2) edges — the
+    * input every graph consumer (connected components, PageRank) and every
+    * recall arm takes. The checkpoint comes BEFORE the hand-over: a graph
+    * operator unions the edge list with its flip, and both branches would
+    * otherwise each carry (and execute) the full bucket-join + exact
+    * Jaccard verify subtree. */
+  private def minhashDupEdges(s: SparkSession, d: String): DataFrame =
+    minhashDupPairs(s, d).select("doc_id1", "doc_id2").localCheckpoint()
+
+  /** Exact Jaccard of candidate pairs (doc_id1, doc_id2): doc_id1's shingle
+    * set comes from `left`, doc_id2's from `right`, both (doc_id, shingles)
+    * frames — the same frame for a self-join, the batch and the corpus for
+    * [[admission]]. Returns (doc_id1, doc_id2, jac) unthresholded: callers
+    * apply their own cut (t133 sweeps three). */
+  private def verify(cand: DataFrame, left: DataFrame, right: DataFrame): DataFrame = {
+    val s1 = left.select(col("doc_id").as("doc_id1"), col("shingles").as("s1"))
+    val s2 = right.select(col("doc_id").as("doc_id2"), col("shingles").as("s2"))
     jaccardPairs(cand.join(s1, "doc_id1").join(s2, "doc_id2"))
-      .filter(col("jac") >= 0.8)
   }
 
   /** The candidate half of [[minhashDupPairs]]: distinct LSH pairs
     * (doc_id1 < doc_id2) from 4×8 banding with the [2,20] bucket cap, for
     * an already-shingled (and checkpointed) frame — BEFORE any verify, so
     * the same candidate set can feed different verification arms (exact
-    * Jaccard for t31/t49, edit distance for t130). */
+    * Jaccard for t31/t49, edit distance for t130). The one definition of
+    * the cap: t102 prices it over its restricted population, t161/t170/t171
+    * over the full corpus. */
   private def minhashCandPairs(sh: DataFrame): DataFrame = {
     // Bucket cap as a WINDOW over (band, sig) instead of the former
     // groupBy-then-join-back (round-14 shuffle diet, guide §2.4): the count
@@ -363,12 +392,7 @@ object Similarity {
     // and the eager bands checkpoint that glued them together disappears.
     // Same rows out: bsize is the bucket's intrinsic size either way.
     val wB = Window.partitionBy(col("band"), col("sig"))
-    val kept = sh
-      .withColumn("mins", ArrayFns.minhashSig(col("shingles")))
-      .withColumn("band", explode(expr("sequence(0, 3)")))
-      .withColumn("sig", expr(
-        "array_join(transform(slice(mins, band*8 + 1, 8), v -> CAST(v AS STRING)), '-')"))
-      .select(col("doc_id"), col("band"), col("sig"))
+    val kept = bandSignatures(sh)
       .withColumn("bsize", count(lit(1)).over(wB))
       .filter(col("bsize") >= 2 && col("bsize") <= 20)
       .select(col("band"), col("sig"), col("doc_id"))
@@ -454,9 +478,7 @@ object Similarity {
     val cand = minhashCandPairs(sh)
       .join(broadcast(ids.withColumnRenamed("doc_id", "doc_id1")), Seq("doc_id1"), "left_semi")
       .join(broadcast(ids.withColumnRenamed("doc_id", "doc_id2")), Seq("doc_id2"), "left_semi")
-    val s1 = sh.select(col("doc_id").as("doc_id1"), col("shingles").as("s1"))
-    val s2 = sh.select(col("doc_id").as("doc_id2"), col("shingles").as("s2"))
-    val lsh = jaccardPairs(cand.join(s1, "doc_id1").join(s2, "doc_id2"))
+    val lsh = verify(cand, sh, sh)
       .filter(col("jac") >= 0.8)
       .select(col("doc_id1"), col("doc_id2")).localCheckpoint()
     val hit = truth.join(lsh, Seq("doc_id1", "doc_id2"))
@@ -734,9 +756,7 @@ object Similarity {
     val kept = members.join(ok.select("band", "sig"), Seq("band", "sig"))
     val cand = probe.join(kept, Seq("band", "sig"))
       .select(col("doc_id1"), col("doc_id2")).distinct()
-    val s1 = batchSh.select(col("doc_id").as("doc_id1"), col("shingles").as("s1"))
-    val s2 = corpusSh.select(col("doc_id").as("doc_id2"), col("shingles").as("s2"))
-    val dups = jaccardPairs(cand.join(s1, "doc_id1").join(s2, "doc_id2"))
+    val dups = verify(cand, batchSh, corpusSh)
       .filter(col("jac") >= 0.8)
     val perDoc = dups.groupBy(col("doc_id1").as("doc_id"))
       .agg(count(lit(1)).as("n_dups"), round(max(col("jac")), 4).as("best_jac"))
@@ -1044,11 +1064,7 @@ object Similarity {
         // union-find, so the query pays an edge count, one collect and the
         // labeling join rather than several jobs per round;
         // ConnectedComponentsSpec forces both paths on every case.
-        // checkpoint pairs BEFORE handing them over: the operator unions the
-        // edge list with its flip, and both branches would otherwise each
-        // carry (and execute) the full bucket-join + exact Jaccard verify
-        // subtree.
-        val pairs = minhashDupPairs(s, d).select("doc_id1", "doc_id2").localCheckpoint()
+        val pairs = minhashDupEdges(s, d)
         graft.operators.ConnectedComponents
           .largeSmallStar(pairs, "doc_id1", "doc_id2")
           .select(col("id").as("doc_id"), col("component").as("cluster_id"))
@@ -1543,7 +1559,7 @@ object Similarity {
     Q(
       "t87_dedup_select",
       (s, d) => {
-        val pairs = minhashDupPairs(s, d).select("doc_id1", "doc_id2").localCheckpoint()
+        val pairs = minhashDupEdges(s, d)
         val comp = graft.operators.ConnectedComponents
           .largeSmallStar(pairs, "doc_id1", "doc_id2")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
@@ -1883,8 +1899,8 @@ object Similarity {
     // the DEDUP pipeline: against a bounded brute-force truth arm (all-pairs
     // Jaccard ≥ 0.8 over doc_id < 500 — the t30/t33 certifier convention),
     // measure what fraction of true near-dup pairs the production candidate
-    // stage (4×8 banding + the [2,20] bucket cap, stage-identical to
-    // t31/t49/t96) actually surfaces, and how many candidates are noise.
+    // stage (4×8 banding + the [2,20] bucket cap: t31/t49's own
+    // minhashCandPairs) actually surfaces, and how many candidates are noise.
     // The cap is deliberately INSIDE the measured pipeline: recall_bp prices
     // what mega-bucket skipping really costs, not just the banding S-curve.
     // Both arms restrict to the subset BEFORE bucket counts, so the two
@@ -1902,18 +1918,9 @@ object Similarity {
           .filter(col("jac") >= 0.8)
           .select(col("doc_id1"), col("doc_id2"))
           .localCheckpoint()
-        // candidate arm: the t31 candidate stage verbatim (band + cap)
-        val bands = bandSignatures(sh).localCheckpoint()
-        val okBuckets = bands.groupBy(col("band"), col("sig"))
-          .agg(count(lit(1)).as("bsize"))
-          .filter(col("bsize") >= 2 && col("bsize") <= 20)
-        val kept = bands.join(okBuckets.select("band", "sig"), Seq("band", "sig"))
-        val cand = kept.select(col("band"), col("sig"), col("doc_id").as("doc_id1"))
-          .join(kept.select(col("band"), col("sig"), col("doc_id").as("doc_id2")),
-            Seq("band", "sig"))
-          .filter(col("doc_id1") < col("doc_id2"))
-          .select(col("doc_id1"), col("doc_id2")).distinct()
-          .localCheckpoint()
+        // candidate arm: the shared t31 candidate stage (banding + the
+        // [2,20] cap) over the restricted population
+        val cand = minhashCandPairs(sh).localCheckpoint()
         val hit = truth.join(cand, Seq("doc_id1", "doc_id2"))
         truth.agg(count(lit(1)).as("n_true"))
           .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
@@ -2219,7 +2226,7 @@ object Similarity {
     Q(
       "t129_dup_centrality",
       (s, d) => {
-        val pairs = minhashDupPairs(s, d).select("doc_id1", "doc_id2").localCheckpoint()
+        val pairs = minhashDupEdges(s, d)
         val und = pairs.union(
           pairs.select(col("doc_id2").as("doc_id1"), col("doc_id1").as("doc_id2")))
         graft.operators.PageRank.ranks(und, "doc_id1", "doc_id2", iters = 4)
@@ -2321,7 +2328,7 @@ object Similarity {
     Q(
       "t131_leakage_split",
       (s, d) => {
-        val pairs = minhashDupPairs(s, d).select("doc_id1", "doc_id2").localCheckpoint()
+        val pairs = minhashDupEdges(s, d)
         val comp = graft.operators.ConnectedComponents
           .largeSmallStar(pairs, "doc_id1", "doc_id2")
           .select(col("id").as("doc_id"), col("component"))
@@ -2369,11 +2376,7 @@ object Similarity {
       "t133_dedup_sweep",
       (s, d) => {
         val sh = shingled(s, d).localCheckpoint()
-        val cand = minhashCandPairs(sh)
-        val s1 = sh.select(col("doc_id").as("doc_id1"), col("shingles").as("s1"))
-        val s2 = sh.select(col("doc_id").as("doc_id2"), col("shingles").as("s2"))
-        val jp = jaccardPairs(cand.join(s1, "doc_id1").join(s2, "doc_id2"))
-          .localCheckpoint()
+        val jp = verify(minhashCandPairs(sh), sh, sh).localCheckpoint()
         val sweep = jp
           .select(col("doc_id1"), col("doc_id2"), col("jac"),
             explode(array(lit(0.7), lit(0.8), lit(0.9))).as("tau"))
@@ -2410,7 +2413,7 @@ object Similarity {
     Q(
       "t136_split_audit",
       (s, d) => {
-        val pairs = minhashDupPairs(s, d).select("doc_id1", "doc_id2").localCheckpoint()
+        val pairs = minhashDupEdges(s, d)
         val comp = graft.operators.ConnectedComponents
           .largeSmallStar(pairs, "doc_id1", "doc_id2")
           .select(col("id").as("doc_id"), col("component"))
@@ -2476,12 +2479,15 @@ object Similarity {
     Q(
       "t137_cc_incremental",
       (s, d) => {
-        val pairs = minhashDupPairs(s, d).select("doc_id1", "doc_id2").localCheckpoint()
+        val pairs = minhashDupEdges(s, d)
         val isNew = (c: Column) => c % 5 === 0
         val oldPairs = pairs.filter(!isNew(col("doc_id1")) && !isNew(col("doc_id2")))
         val delta = pairs.filter(isNew(col("doc_id1")) || isNew(col("doc_id2")))
+        // checkpointed once: the fold reads the assignment in its edge
+        // count and again in its final node set
         val base = graft.operators.ConnectedComponents
           .largeSmallStar(oldPairs, "doc_id1", "doc_id2")
+          .localCheckpoint()
         graft.operators.ConnectedComponents
           .incremental(base, "id", "component", delta, "doc_id1", "doc_id2")
           .select(col("id").as("doc_id"), col("component").as("cluster_id"))
@@ -2545,7 +2551,7 @@ object Similarity {
     Q(
       "t142_soft_dedup",
       (s, d) => {
-        val pairs = minhashDupPairs(s, d).select("doc_id1", "doc_id2").localCheckpoint()
+        val pairs = minhashDupEdges(s, d)
         val cc = graft.operators.ConnectedComponents
           .largeSmallStar(pairs, "doc_id1", "doc_id2")
           .select(col("id").as("doc_id"), col("component").as("cid"))
@@ -2594,11 +2600,7 @@ object Similarity {
     Q(
       "t147_ppjoin",
       (s, d) =>
-        graft.operators.SetSimJoin.join(
-            Tables.documents(s, d)
-              .select(col("doc_id"),
-                ArrayFns.wordNgramHashes(lower(col("text")), 2).as("t")),
-            "doc_id", "t", tauPct = 80)
+        bigramPairs(s, d)
           .select(col("doc_id1"), col("doc_id2"), round(col("jac"), 4).as("jac"))
           .orderBy("doc_id1", "doc_id2"),
       Some("""WITH toks AS (
@@ -2677,11 +2679,7 @@ object Similarity {
     Q(
       "t151_dedup_triangles",
       (s, d) => {
-        val pairs = graft.operators.SetSimJoin.join(
-            Tables.documents(s, d)
-              .select(col("doc_id"),
-                ArrayFns.wordNgramHashes(lower(col("text")), 2).as("t")),
-            "doc_id", "t", tauPct = 80)
+        val pairs = bigramPairs(s, d)
           .select(col("doc_id1"), col("doc_id2"))
         graft.operators.Triangles.perNode(pairs, "doc_id1", "doc_id2")
           .select(col("node").as("doc_id"), col("n_tri"))
@@ -2739,11 +2737,7 @@ object Similarity {
           .filter(col("ns") >= 3)
           .select(col("doc_id"))
           .localCheckpoint()
-        val pairs = graft.operators.SetSimJoin.join(
-            Tables.documents(s, d)
-              .select(col("doc_id"),
-                ArrayFns.wordNgramHashes(lower(col("text")), 2).as("t")),
-            "doc_id", "t", tauPct = 80)
+        val pairs = bigramPairs(s, d)
           .select(col("doc_id1"), col("doc_id2"))
         val cc = graft.operators.ConnectedComponents
           .largeSmallStar(pairs, "doc_id1", "doc_id2")
@@ -2816,8 +2810,7 @@ object Similarity {
         val sh = shingled(s, d)
         val truth = graft.operators.SetSimJoin.join(sh, "doc_id", "shingles", tauPct = 80)
           .select(col("doc_id1"), col("doc_id2")).localCheckpoint()
-        val lsh = minhashDupPairs(s, d)
-          .select(col("doc_id1"), col("doc_id2")).localCheckpoint()
+        val lsh = minhashDupEdges(s, d)
         val hit = truth.join(lsh, Seq("doc_id1", "doc_id2"))
         truth.agg(count(lit(1)).as("n_true"))
           .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
@@ -2860,7 +2853,7 @@ object Similarity {
     // engines) — so its cost is O(200²) candidate pairs at ANY corpus
     // size, while the MEASURED arm stays the untouched production
     // pipeline (full-corpus banding with the REAL [2,20] bucket caps,
-    // then exact verify — minhashDupPairs, the t31 arm verbatim)
+    // then exact verify — minhashCandPairs + verify, the t31 arm)
     // restricted to slice-internal pairs. Estimating recall on the slice's
     // n_true pairs is a binomial proportion: the reported ci95_bp states
     // the statistical power explicitly — 1.96·√(r(1−r)/n_true)·10⁴ in the

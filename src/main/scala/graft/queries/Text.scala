@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -51,6 +51,22 @@ object Text {
   private def stopCntSql(tcol: String = "text"): String = wordHitCntSql(stopWords, tcol)
   private val zhPat = "[\\x{4e00}-\\x{9fff}]"
 
+  // The heuristic quality score (t27): word, punctuation and stopword-hit
+  // counts, weighted 0.5 length + 0.3 stopword ratio + 0.2 punctuation
+  // sparsity. ONE definition for every query that scores documents; the
+  // oracle SQL spells the same formula out per query.
+  private def withQualityCounts(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("n_words", regexp_count(col("text"), lit("[A-Za-z]+")).cast("long"))
+      .withColumn("n_punct", regexp_count(col("text"), lit("[.,!?;:]")).cast("long"))
+      .withColumn("n_stop", regexp_count(col("text"), lit(stopPat)).cast("long"))
+  private def qualityScore: Column =
+    (least(col("n_words") / 100.0, lit(1.0)) * 0.5
+      + (col("n_stop") * 1.0 / greatest(col("n_words"), lit(1L))) * 0.3
+      + (lit(1.0) - least(col("n_punct") * 1.0 / greatest(col("n_words"), lit(1L)), lit(1.0))) * 0.2)
+  // the score on t143's integer grid (1e-4 steps), exact under grouping
+  private def qualityGrid: Column = round(qualityScore * 10000).cast("long")
+
   // Duplicated-span mining K (tokens) for t110/t111: a span must repeat at
   // this length verbatim to count as duplicated text — ExactSubstr's
   // threshold role. Declared BEFORE `all`: the oracle SQL strings below
@@ -66,6 +82,23 @@ object Text {
   // round-count win (32 rules land in far fewer than 32 recount rounds),
   // small enough that the 32-round unrolled DuckDB oracle stays tractable.
   private val BpeBatchedSteps = 32
+
+  /** The BPE trainer's vocabulary: (w, freq) over a token frame's `w`
+    * column. */
+  private def wordFreq(toks: DataFrame): DataFrame =
+    toks.groupBy(col("w")).agg(count(lit(1)).as("freq"))
+
+  /** [[wordFreq]] of the corpus's lowercased [a-z]+ words. */
+  private def docWordFreq(s: SparkSession, d: String): DataFrame =
+    wordFreq(Tables.documents(s, d)
+      .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w")))
+
+  /** The BpeSteps-rule merge table trained on `wf`, collected to the
+    * driver as ordered (lhs, rhs) pairs for [[graft.operators.Bpe.encodeVocab]]. */
+  private def bpeMerges(s: SparkSession, wf: DataFrame): Seq[(String, String)] =
+    graft.operators.Bpe.train(s, wf, "w", "freq", steps = BpeSteps)
+      .select(col("lhs"), col("rhs")).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
 
   val all: Seq[Q] = Seq(
     // ----- Q23: per-language corpus stats -----
@@ -151,17 +184,9 @@ object Text {
     Q(
       "t27_quality_score",
       (s, d) =>
-        Tables.documents(s, d)
-          .withColumn("n_words", regexp_count(col("text"), lit("[A-Za-z]+")).cast("long"))
-          .withColumn("n_punct", regexp_count(col("text"), lit("[.,!?;:]")).cast("long"))
-          .withColumn("n_stop", regexp_count(col("text"), lit(stopPat)).cast("long"))
-          .select(
-            col("doc_id"), col("n_words"), col("n_punct"),
-            round(
-              least(col("n_words") / 100.0, lit(1.0)) * 0.5
-                + (col("n_stop") * 1.0 / greatest(col("n_words"), lit(1L))) * 0.3
-                + (lit(1.0) - least(col("n_punct") * 1.0 / greatest(col("n_words"), lit(1L)), lit(1.0))) * 0.2,
-              4).as("score"))
+        withQualityCounts(Tables.documents(s, d))
+          .select(col("doc_id"), col("n_words"), col("n_punct"),
+            round(qualityScore, 4).as("score"))
           .orderBy("doc_id"),
       Some(s"""WITH t AS (
              |  SELECT doc_id,
@@ -853,10 +878,7 @@ object Text {
     Q(
       "t105_bpe_pairs",
       (s, d) => {
-        val wf = Tables.documents(s, d)
-          .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-        wf.select(col("freq"), concat(lit("_"), col("w")).as("sym"))
+        docWordFreq(s, d).select(col("freq"), concat(lit("_"), col("w")).as("sym"))
           .select(col("freq"), explode(expr(
             "transform(sequence(1, length(sym) - 1), i -> substring(sym, i, 2))")).as("pair"))
           .groupBy(col("pair")).agg(sum(col("freq")).as("cnt"))
@@ -1446,12 +1468,7 @@ object Text {
     // the greedy-merge semantics in both engines by construction.
     Q(
       "t122_bpe_train",
-      (s, d) => {
-        val wf = Tables.documents(s, d)
-          .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-        graft.operators.Bpe.train(s, wf, "w", "freq", steps = BpeSteps)
-      },
+      (s, d) => graft.operators.Bpe.train(s, docWordFreq(s, d), "w", "freq", steps = BpeSteps),
       Some(graft.operators.Bpe.oracleSql(
         BpeSteps,
         """SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (
@@ -1483,11 +1500,8 @@ object Text {
           .select(col("doc_id"),
             explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
           .localCheckpoint()
-        val wf = toks.groupBy(col("w")).agg(count(lit(1)).cast("long").as("freq"))
-          .localCheckpoint()
-        val merges = graft.operators.Bpe.train(s, wf, "w", "freq", steps = BpeSteps)
-          .select(col("lhs"), col("rhs")).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
+        val wf = wordFreq(toks).localCheckpoint()
+        val merges = bpeMerges(s, wf)
         val enc = graft.operators.Bpe.encodeVocab(wf.select(col("w")), "w", merges)
           .select(col("w"), col("n_pieces"))
         toks.join(enc, "w")
@@ -1523,12 +1537,9 @@ object Text {
     // property-tests batched == sequential over random vocabularies.
     Q(
       "t159_bpe_batched",
-      (s, d) => {
-        val wf = Tables.documents(s, d)
-          .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-        graft.operators.Bpe.train(s, wf, "w", "freq", steps = BpeBatchedSteps, batch = 8)
-      },
+      (s, d) =>
+        graft.operators.Bpe.train(s, docWordFreq(s, d), "w", "freq",
+          steps = BpeBatchedSteps, batch = 8),
       Some(graft.operators.Bpe.oracleSql(
         BpeBatchedSteps,
         """SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (
@@ -1560,11 +1571,8 @@ object Text {
             posexplode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
               .as(Seq("pos", "w")))
           .localCheckpoint()
-        val wf = toks.groupBy(col("w")).agg(count(lit(1)).cast("long").as("freq"))
-          .localCheckpoint()
-        val merges = graft.operators.Bpe.train(s, wf, "w", "freq", steps = BpeSteps)
-          .select(col("lhs"), col("rhs")).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
+        val wf = wordFreq(toks).localCheckpoint()
+        val merges = bpeMerges(s, wf)
         val dec = graft.operators.Bpe.encodeVocab(wf.select(col("w")), "w", merges)
           .select(col("w"), col("n_pieces"),
             expr("substring(array_join(pieces, ''), 2)").as("dec"))
@@ -1621,11 +1629,8 @@ object Text {
           .select(col("doc_id"),
             explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
           .localCheckpoint()
-        val wf = toks.groupBy(col("w")).agg(count(lit(1)).cast("long").as("freq"))
-          .localCheckpoint()
-        val merges = graft.operators.Bpe.train(s, wf, "w", "freq", steps = BpeSteps)
-          .select(col("lhs"), col("rhs")).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
+        val wf = wordFreq(toks).localCheckpoint()
+        val merges = bpeMerges(s, wf)
         val dec = graft.operators.Bpe.encodeVocab(wf.select(col("w")), "w", merges)
           .select(col("w"), col("n_pieces"),
             expr("substring(array_join(pieces, ''), 2)").as("dec"))
@@ -2025,16 +2030,10 @@ object Text {
     Q(
       "t143_quality_tiers",
       (s, d) => {
-        def scored = Tables.documents(s, d)
-          .withColumn("n_words", regexp_count(col("text"), lit("[A-Za-z]+")).cast("long"))
-          .withColumn("n_punct", regexp_count(col("text"), lit("[.,!?;:]")).cast("long"))
-          .withColumn("n_stop", regexp_count(col("text"), lit(stopPat)).cast("long"))
+        def scored = withQualityCounts(Tables.documents(s, d))
           .select(col("doc_id"), col("source"),
             regexp_count(col("text"), lit("\\S+")).cast("long").as("tok"),
-            round((least(col("n_words") / 100.0, lit(1.0)) * 0.5
-              + (col("n_stop") * 1.0 / greatest(col("n_words"), lit(1L))) * 0.3
-              + (lit(1.0) - least(col("n_punct") * 1.0 / greatest(col("n_words"), lit(1L)), lit(1.0))) * 0.2)
-              * 10000).cast("long").as("se"))
+            qualityGrid.as("se"))
         val dist = scored.groupBy(col("source"), col("se"))
           .agg(count(lit(1)).as("freq"))
         val tot = dist.groupBy(col("source")).agg(sum(col("freq")).as("n"))
@@ -2232,21 +2231,11 @@ object Text {
     Q(
       "t155_datasheet",
       (s, d) => {
-        val stats = Tables.documents(s, d)
-          .withColumn("n_words", regexp_count(col("text"), lit("[A-Za-z]+")).cast("long"))
-          .withColumn("n_punct", regexp_count(col("text"), lit("[.,!?;:]")).cast("long"))
-          .withColumn("n_stop", regexp_count(col("text"), lit(stopPat)).cast("long"))
+        val stats = withQualityCounts(Tables.documents(s, d))
           .select(col("doc_id"), col("source"), col("lang"),
             regexp_count(col("text"), lit("\\S+")).cast("long").as("tok"),
-            round((least(col("n_words") / 100.0, lit(1.0)) * 0.5
-              + (col("n_stop") * 1.0 / greatest(col("n_words"), lit(1L))) * 0.3
-              + (lit(1.0) - least(col("n_punct") * 1.0 / greatest(col("n_words"), lit(1L)), lit(1.0))) * 0.2)
-              * 10000).cast("long").as("se"))
-        val pairs = graft.operators.SetSimJoin.join(
-            Tables.documents(s, d)
-              .select(col("doc_id"),
-                ArrayFns.wordNgramHashes(lower(col("text")), 2).as("t")),
-            "doc_id", "t", tauPct = 80)
+            qualityGrid.as("se"))
+        val pairs = graft.queries.Similarity.bigramPairs(s, d)
         val dupDocs = pairs.select(col("doc_id1").as("doc_id"))
           .union(pairs.select(col("doc_id2").as("doc_id")))
           .distinct()
@@ -2321,11 +2310,7 @@ object Text {
         val newDocs = fp.filter(col("doc_id") % 3 =!= 0)
         val exact = newDocs.join(oldFp, Seq("fp"), "semi")
           .select(col("doc_id")).withColumn("is_exact", lit(1))
-        val pairs = graft.operators.SetSimJoin.join(
-            Tables.documents(s, d)
-              .select(col("doc_id"),
-                ArrayFns.wordNgramHashes(lower(col("text")), 2).as("t")),
-            "doc_id", "t", tauPct = 80)
+        val pairs = graft.queries.Similarity.bigramPairs(s, d)
           .select(col("doc_id1"), col("doc_id2"))
         val near = pairs
           .select(when(col("doc_id1") % 3 === 0, col("doc_id2"))
@@ -2390,21 +2375,11 @@ object Text {
       "t160_datasheet_cells",
       (s, d) => {
         val K = 5L
-        val stats = Tables.documents(s, d)
-          .withColumn("n_words", regexp_count(col("text"), lit("[A-Za-z]+")).cast("long"))
-          .withColumn("n_punct", regexp_count(col("text"), lit("[.,!?;:]")).cast("long"))
-          .withColumn("n_stop", regexp_count(col("text"), lit(stopPat)).cast("long"))
+        val stats = withQualityCounts(Tables.documents(s, d))
           .select(col("doc_id"), col("source"), col("lang"),
             regexp_count(col("text"), lit("\\S+")).cast("long").as("tok"),
-            round((least(col("n_words") / 100.0, lit(1.0)) * 0.5
-              + (col("n_stop") * 1.0 / greatest(col("n_words"), lit(1L))) * 0.3
-              + (lit(1.0) - least(col("n_punct") * 1.0 / greatest(col("n_words"), lit(1L)), lit(1.0))) * 0.2)
-              * 10000).cast("long").as("se"))
-        val pairs = graft.operators.SetSimJoin.join(
-            Tables.documents(s, d)
-              .select(col("doc_id"),
-                ArrayFns.wordNgramHashes(lower(col("text")), 2).as("t")),
-            "doc_id", "t", tauPct = 80)
+            qualityGrid.as("se"))
+        val pairs = graft.queries.Similarity.bigramPairs(s, d)
         val dupDocs = pairs.select(col("doc_id1").as("doc_id"))
           .union(pairs.select(col("doc_id2").as("doc_id")))
           .distinct()
@@ -2756,15 +2731,8 @@ object Text {
     Q(
       "t168_calibration",
       (s, d) => {
-        val scored = Tables.documents(s, d)
-          .withColumn("n_words", regexp_count(col("text"), lit("[A-Za-z]+")).cast("long"))
-          .withColumn("n_punct", regexp_count(col("text"), lit("[.,!?;:]")).cast("long"))
-          .withColumn("n_stop", regexp_count(col("text"), lit(stopPat)).cast("long"))
-          .select(col("doc_id"),
-            round((least(col("n_words") / 100.0, lit(1.0)) * 0.5
-              + (col("n_stop") * 1.0 / greatest(col("n_words"), lit(1L))) * 0.3
-              + (lit(1.0) - least(col("n_punct") * 1.0 / greatest(col("n_words"), lit(1L)), lit(1.0))) * 0.2)
-              * 10000).cast("long").as("se"))
+        val scored = withQualityCounts(Tables.documents(s, d))
+          .select(col("doc_id"), qualityGrid.as("se"))
         val stats = Tables.documents(s, d)
           .select(col("doc_id"),
             explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
