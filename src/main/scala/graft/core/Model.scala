@@ -79,8 +79,7 @@ final case class CopyConfig(
     sizeLimit: Long = Long.MaxValue,
     skipCrc: Boolean = false,
     skipTs: Boolean = false,
-    maxTasks: Int = 0, // 0 = derive from totalBytes / bytesPerTask
-    bytesPerTask: Long = 256L * 1024 * 1024, // BYTES_PER_MAP, DistCPPlus.java:101
+    maxTasks: Int = 0, // 0 = derive from totalBytes / Executor.BytesPerTask
     exportOnly: Boolean = false,
     exportPath: Option[String] = None, // -exportPath <dir>: parquet plan manifest target
     flatRegex: Option[String] = None, // -rg  <src/regex>   (Arguments.java:184-201)

@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
+
 /** Pure path/size helpers (SURVEY.md §2.1 ops 20-22). */
 object PathUtils {
 
@@ -16,12 +18,10 @@ object PathUtils {
   private def segments(p: String): Vector[String] =
     p.split('/').filter(_.nonEmpty).toVector
 
-  /** True iff `ancestor` is a path prefix of `path` on segment boundaries
-    * (DistCpUtils.java:113-119). */
-  def isAncestorPath(ancestor: String, path: String): Boolean = {
-    val a = if (ancestor.endsWith("/")) ancestor else ancestor + "/"
-    path.startsWith(a)
-  }
+  /** The destination of a destination-relative path under `dstRoot`: the
+    * inverse of [[makeRelative]], "." being the root itself. */
+  def dstPath(dstRoot: String, relDst: String): Path =
+    if (relDst == ".") new Path(dstRoot) else new Path(dstRoot, relDst)
 
   /** Parse symbolic size literals: `1230k`, `891g`, ... with binary prefixes
     * k/m/g/t/p/e (Options.java:24-33, TraditionalBinaryPrefix). */

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.core.{FileMeta, Fs, PathUtils}
+import graft.core.{FileMeta, Fs}
 
 /** Parallel filesystem enumeration (SURVEY.md §2.1 ops 1-4, 18).
   *
@@ -60,19 +60,6 @@ object Enumerate {
 
   private def fs(conf: Configuration, path: String): FileSystem =
     new Path(path).getFileSystem(conf)
-
-  /** List the children of a set of directories, one listStatus RPC per dir
-    * (executor-side). */
-  private def listLevel(spark: SparkSession, dirs: Dataset[String]): Dataset[FileMeta] = {
-    import spark.implicits._
-    dirs.mapPartitions { paths =>
-      val conf = Fs.conf()
-      paths.flatMap { p =>
-        val f = fs(conf, p)
-        f.listStatus(new Path(p)).iterator.map(toMeta(_))
-      }
-    }
-  }
 
   /** Full recursive enumeration of every root in ONE level-synchronous
     * walk (each root's own entry included). Every entry is tagged with the
@@ -141,8 +128,8 @@ object Enumerate {
   }
 
   /** `-rg` flat source selection — all three reference branches
-    * (Arguments.java:184-201 parse; 306-346 getFilePaths). The combined path
-    * `dir/pattern` is resolved in order:
+    * (Arguments.java:184-201 parse; 306-346 getFilePaths), as the selected
+    * paths. The combined path `dir/pattern` is resolved in order:
     *   1. it IS a directory → its immediate FILES only (subdirectories are
     *      skipped), names filtered by `startsWith(prefix)`. The `-rg` CLI
     *      passes "" exactly as the reference's does (Arguments.java:196);
@@ -154,77 +141,41 @@ object Enumerate {
     *      whose NAME fully matches the trailing segment as a regex;
     *   4. a missing parent yields the empty set (reference returns an empty
     *      collection rather than failing).
+    * The one directory is listed on the driver, as the reference does: the
+    * selected paths become the walk's roots.
     */
-  def flatRegex(
-      spark: SparkSession,
-      dirAndPattern: String,
-      prefix: String = "",
-  ): Dataset[FileMeta] = {
-    import spark.implicits._
-    val conf = Fs.conf()
+  def flatRegex(dirAndPattern: String, prefix: String = ""): Seq[String] = {
     val full = new Path(dirAndPattern)
-    val f = full.getFileSystem(conf)
+    val f = full.getFileSystem(Fs.conf())
+    def children(dir: Path)(keep: FileStatus => Boolean): Seq[String] =
+      f.listStatus(dir).iterator.filter(keep).map(_.getPath.toString).toSeq
     val st =
       try Some(f.getFileStatus(full))
       catch { case _: java.io.FileNotFoundException => None }
     st match {
       case Some(s) if s.isDirectory =>
-        listLevel(spark, spark.createDataset(Seq(s.getPath.toString)))
-          .filter { m =>
-            val name = m.path.substring(m.path.lastIndexOf('/') + 1)
-            !m.isDir && name.startsWith(prefix)
-          }
-      case Some(s) =>
-        spark.createDataset(Seq(toMeta(s)))
+        children(s.getPath)(c => !c.isDirectory && c.getPath.getName.startsWith(prefix))
+      case Some(s) => Seq(s.getPath.toString)
       case None =>
         val idx = dirAndPattern.lastIndexOf('/')
         // no '/' at all (relative pattern with no parent): branch 4 — the
         // reference returns the empty selection; new Path("") would throw
-        if (idx < 0) return spark.emptyDataset[FileMeta]
+        if (idx < 0) return Nil
         // idx == 0 is a root-level pattern ("/part.*"): the parent is "/",
         // not the empty string new Path rejects
-        val dir = if (idx == 0) "/" else dirAndPattern.take(idx)
+        val dir = new Path(if (idx == 0) "/" else dirAndPattern.take(idx))
         val pattern = dirAndPattern.drop(idx + 1)
-        if (!f.exists(new Path(dir))) spark.emptyDataset[FileMeta]
-        else
-          listLevel(spark, spark.createDataset(Seq(dir))).filter { m =>
-            val name = m.path.substring(m.path.lastIndexOf('/') + 1)
-            Pattern.matches(pattern, name)
-          }
+        if (!f.exists(dir)) Nil
+        else children(dir)(c => Pattern.matches(pattern, c.getPath.getName))
     }
   }
 
-  /** `-regexPath` depth-wise regex selection (Arguments.java:363-437): the
-    * relative path segment at depth d must fully match `regexes(d)`; leaves
-    * are entries with exactly `regexes.length` matching segments. Returns
-    * (selected leaves, touched intermediate dirs). */
-  def depthRegex(
-      spark: SparkSession,
-      root: String,
-      regexes: Seq[String],
-  ): (Dataset[FileMeta], Dataset[FileMeta]) = {
-    val compiled = regexes.map(Pattern.compile(_))
-    val tree = listTree(spark, root)
-    val qRoot = qualify(root)
-    def relSegs(m: FileMeta): Option[Vector[String]] =
-      PathUtils.makeRelative(qRoot, m.path).filter(_ != ".").map(_.split('/').toVector)
-    def prefixMatches(segs: Vector[String]): Boolean =
-      segs.length <= compiled.length &&
-        segs.zip(compiled).forall { case (s, p) => p.matcher(s).matches() }
-    val leaves = tree.filter { m =>
-      relSegs(m).exists(s => s.length == compiled.length && prefixMatches(s))
-    }
-    val touched = tree.filter { m =>
-      m.isDir && relSegs(m).exists(s => s.length < compiled.length && prefixMatches(s))
-    }
-    (leaves, touched)
-  }
-
-  /** The `-regexPath` FILE selection [[graft.plan.Planner]] copies, as a
-    * predicate over an entry and its path relative to its root: leaf files
-    * at exactly `regexes.length` matching segments PLUS every file
-    * underneath a matched directory. The planner applies it while it maps
-    * the one walk to tasks: no driver-side dir collection, no re-walk. */
+  /** `-regexPath` depth-wise selection (Arguments.java:363-437): the FILES
+    * [[graft.plan.Planner]] copies, as a predicate over an entry and its
+    * path relative to its root — leaf files at exactly `regexes.length`
+    * matching segments PLUS every file underneath a matched directory. The
+    * planner applies it while it maps the one walk to tasks: no driver-side
+    * dir collection, no re-walk. */
   def depthRegexFiles(regexes: Seq[String]): (FileMeta, String) => Boolean = {
     val compiled = regexes.map(Pattern.compile(_))
     val len = compiled.length

@@ -27,6 +27,7 @@ import graft.plan.CopyPlan
 object Executor {
 
   val BufferSize = 128 * 1024 // copy.buf.size, DefaultCopyFilesMapper.java:33
+  val BytesPerTask: Long = 256L * 1024 * 1024 // BYTES_PER_MAP, DistCPPlus.java:101
 
   /** Job counters plus per-phase wall-clock — the reference records
     * SETUP/RUN/CLEANUP durations into the job conf (DistCPPlus.java:128-131,
@@ -76,7 +77,10 @@ object Executor {
       attempt: String,
   ): CopyResult = {
     val srcPath = new Path(task.src.path)
-    val dstPath = if (task.relDst == ".") new Path(dstRoot) else new Path(dstRoot, task.relDst)
+    val dstPath = PathUtils.dstPath(dstRoot, task.relDst)
+    // the attempt-scoped tmp file; lazy, as a directory task (the root
+    // among them, which has no parent) writes none
+    lazy val tmp = new Path(dstPath.getParent, s".graft.tmp.${dstPath.getName}.$attempt")
     val dfs = dstPath.getFileSystem(conf)
     val sfs = srcPath.getFileSystem(conf)
     try {
@@ -93,7 +97,6 @@ object Executor {
         // change between plan and execute (SURVEY.md §2.2).
         CopyResult(task.relDst, task.src.path, "SKIP", 0L, "")
       } else {
-        val tmp = new Path(dstPath.getParent, s".graft.tmp.${dstPath.getName}.$attempt")
         dfs.mkdirs(dstPath.getParent)
         var copied = 0L
         val in = sfs.open(srcPath)
@@ -127,7 +130,6 @@ object Executor {
     } catch {
       case e: Exception =>
         // tmp cleanup with bounded retry (DefaultCopyFilesMapper.java:266-282)
-        val tmp = new Path(dstPath.getParent, s".graft.tmp.${dstPath.getName}.$attempt")
         var tries = 0
         while (tries < 3 && scala.util.Try(dfs.exists(tmp)).getOrElse(false)) {
           scala.util.Try(dfs.delete(tmp, false))
@@ -137,9 +139,8 @@ object Executor {
     }
   }
 
-  /** Copy-time skip re-check: TS → length (checksum lazily only when lengths
-    * match), same predicate order as DistCpUtils.java:239-291. Null/unsupported
-    * checksum ⇒ treat as same. */
+  /** Copy-time skip re-check: stats `dst` and applies [[SameFile]] to it;
+    * a missing destination is never the same. */
   def sameAtCopyTime(
       sfs: FileSystem,
       src: Path,
@@ -151,12 +152,8 @@ object Executor {
     val d =
       try dfs.getFileStatus(dst)
       catch { case _: FileNotFoundException => return false }
-    if (!cfg.skipTs && d.getModificationTime != task.src.mtime) return false
-    if (d.getLen != task.src.length) return false
-    if (cfg.skipCrc) return true
-    val sc = sfs.getFileChecksum(src)
-    val dc = dfs.getFileChecksum(dst)
-    sc == null || dc == null || sc == dc
+    SameFile(task.src, d.getLen, d.getModificationTime, cfg,
+      (sfs.getFileChecksum(src), dfs.getFileChecksum(dst)))
   }
 
   /** Apply the preserved attributes of `src` to `p`, which the copy made
@@ -201,7 +198,7 @@ object Executor {
 
     val totals = planned.totals
     val numBuckets = {
-      val derived = math.max(1L, totals.bytes / cfg.bytesPerTask).toInt
+      val derived = math.max(1L, totals.bytes / BytesPerTask).toInt
       if (cfg.maxTasks > 0) math.min(cfg.maxTasks, math.max(derived, 1))
       else math.max(derived, spark.sparkContext.defaultParallelism)
     }
@@ -256,7 +253,7 @@ object Executor {
     if (totals.deletes > 0) planned.deletes.foreachPartition { (it: Iterator[String]) =>
       val c = Fs.conf()
       val pfs = new Path(dstRoot).getFileSystem(c)
-      it.foreach(rel => pfs.delete(new Path(dstRoot, rel), true))
+      it.foreach(rel => pfs.delete(PathUtils.dstPath(dstRoot, rel), true))
     }
 
     // dir-attribute finalize pass (DistCPPlus.java:264-297): of what
@@ -269,7 +266,7 @@ object Executor {
         val c = Fs.conf()
         val pfs = new Path(dstRoot).getFileSystem(c)
         it.foreach { t =>
-          val p = if (t.relDst == ".") new Path(dstRoot) else new Path(dstRoot, t.relDst)
+          val p = PathUtils.dstPath(dstRoot, t.relDst)
           if (pfs.exists(p)) preserveAttrs(pfs, p, t.src, cfg.preserve)
         }
       }

@@ -74,6 +74,13 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object ArrayFns {
+  /** The corpus word tokenizer: the lowercased text's maximal `[a-z]+`
+    * runs, in order. */
+  def words(text: Column): Column = {
+    import org.apache.spark.sql.functions.{lit, lower, regexp_extract_all}
+    regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))
+  }
+
   /** Column wrapper for [[SortedIntersectCount]]. */
   def sortedIntersectCount(a: Column, b: Column): Column =
     GraftColumnBridge.column(

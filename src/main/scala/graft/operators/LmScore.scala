@@ -41,9 +41,7 @@ object LmScore {
   def tokensWith(docs: DataFrame, text: String, carry: Seq[String]): DataFrame =
     docs.select(
       (carry.map(q) :+
-        explode(expr(s"regexp_extract_all(lower(${quoted(text)}), '[a-z]+', 0)")).as("w")): _*)
-
-  private def quoted(c: String): String = s"`${c.replace("`", "``")}`"
+        explode(graft.functions.ArrayFns.words(q(text))).as("w")): _*)
 
   /** The LM itself: unigram counts of a token frame. */
   def vocab(toks: DataFrame): DataFrame =

@@ -40,7 +40,7 @@ object TemplateGrams {
     // their own gram strings), and the t165 store is always written and
     // read by this same kernel.
     docs
-      .withColumn("__t", expr(s"regexp_extract_all(lower($tc), '[a-z]+', 0)"))
+      .withColumn("__t", graft.functions.ArrayFns.words(col(tc)))
       .filter(size(col("__t")) >= k)
       .select(keep :+ explode(
         graft.functions.ArrayFns.kgramHashes(col("__t"), k, distinct = true)).as("h"): _*)

@@ -17,8 +17,8 @@ import graft.operators.PrefixSum
   * (RDD API, so its shuffles run as ONE Spark job): every source task, every
   * destination entry and every prefix the source manifest keeps meets the
   * others under its destination-relative path, and each key decides
-  *   - update diff   → task unless the destination is length/mtime-equal,
-  *                     CRC-compared on the executor when it is   (op 6)
+  *   - update diff   → task unless [[graft.core.SameFile]] holds, its
+  *                     checksums fetched on the executor         (op 6)
   *   - dup check     → two or more sources on one key           (op 8)
   *   - delete sync   → destination-only and not kept, then
   *                     ancestor suppression by parent key       (op 9)
@@ -33,9 +33,11 @@ import graft.operators.PrefixSum
 final case class CopyPlan(
     tasks: Dataset[CopyTask],
     deletes: Dataset[String],
-    dirs: Dataset[CopyTask],
     planned: Option[CopyPlan.Totals] = None,
 ) {
+  /** The directory tasks: directories pass limits and the diff alike. */
+  def dirs: Dataset[CopyTask] = tasks.filter(_.src.isDir)
+
   /** Planned file copies, their bytes and the deletes: the planning pass's
     * own summary, or for a plan built elsewhere (a loaded one) one job per
     * manifest. */
@@ -153,13 +155,9 @@ object Planner {
         val out = spark.sparkContext.runJob(
           rdd,
           (it: Iterator[CopyTask]) => {
-            var fc = fc0
-            var bc = bc0
-            it.foreach { t =>
-              val len = math.max(t.src.length, 0L)
-              if (!(fc == fileLimit || bc + len > sizeLimit)) { fc += 1; bc += len }
-            }
-            (fc, bc)
+            val admit = new Admission(fileLimit, sizeLimit, fc0, bc0)
+            it.foreach(admit(_))
+            (admit.files, admit.bytes)
           },
           Seq(p))
         entry(p + 1) = out.head
@@ -170,13 +168,8 @@ object Planner {
       // stage whose task partition ids are OFFSET by the other side's
       // partitions, while the RDD index stays the checkpointed partition's.
       val keptRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-        var (fc, bc) = bEntry.value(pid)
-        it.filter { t =>
-          val len = math.max(t.src.length, 0L)
-          val skip = fc == fileLimit || bc + len > sizeLimit
-          if (!skip) { fc += 1; bc += len }
-          !skip
-        }
+        val (fc, bc) = bEntry.value(pid)
+        it.filter(new Admission(fileLimit, sizeLimit, fc, bc))
       }
       // materialize the admitted manifest so the intermediate ranged blocks
       // and the entry-state broadcast can be released NOW — a long-lived
@@ -187,6 +180,18 @@ object Planner {
       ranged.unpersist(blocking = false)
       bEntry.destroy()
       out
+    }
+  }
+
+  /** The admission walk from `files` admitted files of `bytes` bytes: a
+    * file is admitted unless it would pass `fileLimit` or `sizeLimit`. */
+  private final class Admission(fileLimit: Long, sizeLimit: Long, var files: Long, var bytes: Long)
+      extends (CopyTask => Boolean) {
+    def apply(t: CopyTask): Boolean = {
+      val len = math.max(t.src.length, 0L)
+      val admitted = !(files == fileLimit || bytes + len > sizeLimit)
+      if (admitted) { files += 1; bytes += len }
+      admitted
     }
   }
 
@@ -238,10 +243,9 @@ object Planner {
     *     admitted manifest BEFORE the diff: diffing first would hide a
     *     collision whenever one colliding source is up to date, and the two
     *     sources would ping-pong the destination between runs with exit 0;
-    *   - a source is a task unless `-update` finds a destination entry of
-    *     equal length and (unless `-skiptscheck`) mtime; such a
-    *     metadata-equal pair is CRC-compared on the executor unless
-    *     `-skipcrccheck` (null/unsupported checksum ⇒ same ⇒ skipped);
+    *   - a source is a task unless `-update` finds a destination entry
+    *     that [[SameFile]] holds; it fetches the checksums on the executor,
+    *     and only for a metadata-equal pair;
     *   - a destination entry with no source that is not kept is doomed.
     * The doomed set is closed under descendants, so suppressing doomed
     * paths whose parent is doomed (`subtractByKey` on the parent key)
@@ -254,7 +258,7 @@ object Planner {
       cfg: CopyConfig,
   ): (RDD[Row], Summary) = {
     val sc = tasks.sparkContext
-    val (update, skipTs, skipCrc, dstRoot) = (cfg.update, cfg.skipTs, cfg.skipCrc, cfg.dst)
+    val (update, dstRoot) = (cfg.update, cfg.dst)
     val deleting = keep.isDefined
     val sources = tasks.map(t => t.relDst -> Slot(1, Some(t), None, kept = false))
     val kept = keep.toSeq.map(_.flatMap { t =>
@@ -265,18 +269,15 @@ object Planner {
     val slots = sc.union(sources +: (kept ++ dsts)).reduceByKey(_ + _, sc.defaultParallelism)
     val decided: RDD[(String, Row)] = slots.mapPartitions({ it =>
       val conf = Fs.conf()
-      def crcDiffers(t: CopyTask): Boolean = {
-        val sp = new Path(t.src.path)
-        val dp = if (t.relDst == ".") new Path(dstRoot) else new Path(dstRoot, t.relDst)
-        val srcSum = sp.getFileSystem(conf).getFileChecksum(sp)
-        val dstSum = dp.getFileSystem(conf).getFileChecksum(dp)
-        srcSum != null && dstSum != null && srcSum != dstSum
+      def checksums(t: CopyTask) = {
+        val (sp, dp) = (new Path(t.src.path), PathUtils.dstPath(dstRoot, t.relDst))
+        (sp.getFileSystem(conf).getFileChecksum(sp), dp.getFileSystem(conf).getFileChecksum(dp))
       }
       it.flatMap {
         case (rel, s) if s.srcs > 1 => Some(rel -> Duplicate(rel))
         case (rel, Slot(_, Some(t), d, _)) =>
           val changed = !update || t.src.isDir || d.forall { case (len, mtime) =>
-            t.src.length != len || (!skipTs && t.src.mtime != mtime) || (!skipCrc && crcDiffers(t))
+            !SameFile(t.src, len, mtime, cfg, checksums(t))
           }
           Option.when(changed)(rel -> Copy(t))
         case (rel, Slot(_, None, Some(_), false)) if deleting => Some(rel -> Delete(rel))
@@ -323,14 +324,13 @@ object Planner {
   }
 
   /** Plan serialization (ref §3.3 `generateConf` / export-only: plan now,
-    * execute later, possibly from another process): the three manifests
+    * execute later, possibly from another process): the two manifests
     * persist as parquet — the Spark-native analog of the reference's
     * SequenceFile staging manifests (DistCPPlus.java:577-595).
     */
   def savePlan(plan: CopyPlan, path: String): Unit = {
     plan.tasks.write.mode("overwrite").parquet(s"$path/tasks")
     plan.deletes.toDF("relDst").write.mode("overwrite").parquet(s"$path/deletes")
-    plan.dirs.write.mode("overwrite").parquet(s"$path/dirs")
   }
 
   def loadPlan(spark: SparkSession, path: String): CopyPlan = {
@@ -338,7 +338,6 @@ object Planner {
     CopyPlan(
       tasks = spark.read.parquet(s"$path/tasks").as[CopyTask],
       deletes = spark.read.parquet(s"$path/deletes").select(col("relDst")).as[String],
-      dirs = spark.read.parquet(s"$path/dirs").as[CopyTask],
     )
   }
 
@@ -348,8 +347,7 @@ object Planner {
     import spark.implicits._
     val roots = cfg.flatRegex match {
       case Some(rg) =>
-        val sel = Enumerate.flatRegex(spark, rg).collect().map(_.path).toSeq
-        cfg.srcs ++ sel
+        cfg.srcs ++ Enumerate.flatRegex(rg)
       case None =>
         cfg.srcs ++ cfg.fileList.toSeq.flatMap(f => Enumerate.fileList(spark, f).collect())
     }
@@ -375,12 +373,9 @@ object Planner {
     }
     val (rows, summary) = keyedPass(limited, Option.when(withDst && cfg.delete)(all), dst, cfg)
     if (summary.dups > 0) throw new DuplicationException(s"duplicate destination: ${summary.dupExample}")
-    val tasks = spark.createDataset(rows.collect { case Copy(t) => t })
     CopyPlan(
-      tasks = tasks,
+      tasks = spark.createDataset(rows.collect { case Copy(t) => t }),
       deletes = spark.createDataset(rows.collect { case Delete(rel) => rel }),
-      // directories pass limits and the diff alike
-      dirs = tasks.filter(_.src.isDir),
       planned = Some(CopyPlan.Totals(summary.files, summary.bytes, summary.deletes)),
     )
   }

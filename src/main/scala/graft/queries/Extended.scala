@@ -44,7 +44,7 @@ object Extended {
     * harness never does this (Verify and Bench are run sequentially by the
     * driver); if concurrent same-dir runs ever become possible, add a
     * per-process component (e.g. PID) to the path and unique table names. */
-  private def sinkDir(name: String, d: String): String =
+  private[queries] def sinkDir(name: String, d: String): String =
     sys.props("java.io.tmpdir") + "/graft_" + name + "_" + d.replaceAll("[^A-Za-z0-9]", "_")
 
   /** Synthetic in-range "as-of" timestamp derived from the event's raw nanos
@@ -1139,7 +1139,7 @@ object Extended {
           .agg(
             count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("n_chars_total"),
-            sum(expr("CAST(size(regexp_extract_all(lower(text), '[a-z]+', 0)) AS BIGINT)"))
+            sum(size(graft.functions.ArrayFns.words(col("text"))).cast("bigint"))
               .as("n_tokens"))
           .orderBy("split")
       },

@@ -1729,8 +1729,7 @@ object Similarity {
         val sh = shingled(s, d)
           .withColumn("is_batch", (col("doc_id") % 10) === 0)
           .localCheckpoint()
-        val base =
-          sys.props("java.io.tmpdir") + "/graft_t96_wh_" + d.replaceAll("[^A-Za-z0-9]", "_")
+        val base = Extended.sinkDir("t96_wh", d)
         writeBandIndex(sh.filter(!col("is_batch")), "t96_band_index", base,
           overwrite = true)
         admission(sh.filter(col("is_batch")).select("doc_id", "shingles"),
@@ -2948,8 +2947,7 @@ object Similarity {
           .filter(scorableVec(col("embedding")))
         val cents = e.filter(col("vec_id") < 16)
           .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
-        val base =
-          sys.props("java.io.tmpdir") + "/graft_t162_wh_" + d.replaceAll("[^A-Za-z0-9]", "_")
+        val base = Extended.sinkDir("t162_wh", d)
         writeIvfIndex(ivfAssign(e.filter(col("vec_id") % 3 =!= 0), cents),
           "t162_ivf_index", base, overwrite = true)
         writeIvfIndex(ivfAssign(e.filter(col("vec_id") % 3 === 0), cents),

@@ -91,7 +91,7 @@ object Text {
   /** [[wordFreq]] of the corpus's lowercased [a-z]+ words. */
   private def docWordFreq(s: SparkSession, d: String): DataFrame =
     wordFreq(Tables.documents(s, d)
-      .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w")))
+      .select(explode(ArrayFns.words(col("text"))).as("w")))
 
   /** The BpeSteps-rule merge table trained on `wf`, collected to the
     * driver as ordered (lhs, rhs) pairs for [[graft.operators.Bpe.encodeVocab]]. */
@@ -226,7 +226,7 @@ object Text {
       "t46_bigram_topk",
       (s, d) =>
         Tables.documents(s, d)
-          .select(expr("regexp_extract_all(lower(text), '[a-z]+', 0)").as("toks"))
+          .select(ArrayFns.words(col("text")).as("toks"))
           .filter(size(col("toks")) >= 2)
           .select(explode(expr(
             "transform(sequence(1, size(toks) - 1), i -> concat(toks[i-1], ' ', toks[i]))")).as("bigram"))
@@ -453,7 +453,7 @@ object Text {
       (s, d) => {
         val toks = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
-            explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("term"))
+            explode(ArrayFns.words(col("text"))).as("term"))
         val tf = toks.groupBy(col("doc_id"), col("source"), col("term"))
           .agg(count(lit(1)).as("tf"))
         val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -675,7 +675,7 @@ object Text {
           }
           Tables.documents(s, d)
             .select(col("doc_id"), col("source"),
-              expr("regexp_extract_all(lower(text), '[a-z]+', 0)").as("toks"))
+              ArrayFns.words(col("text")).as("toks"))
             .filter(size(col("toks")) >= n)
             .select(col("doc_id"), col("source"),
               explode(sequence(lit(1), size(col("toks")) - (n - 1))).as("i"),
@@ -748,7 +748,7 @@ object Text {
       (s, d) => {
         val toks = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
-            explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+            explode(ArrayFns.words(col("text"))).as("w"))
         val freq = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
         toks.join(freq, Seq("w"))
           .groupBy(col("doc_id"), col("source"))
@@ -823,7 +823,7 @@ object Text {
           conv(substring(md5(concat(lit("cms"), j.cast("string"), lit(":"), tok)
             .cast("binary")), 1, 8), 16, 10).cast("long") % 1024
         val toks = Tables.documents(s, d)
-          .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("tok"))
+          .select(explode(ArrayFns.words(col("text"))).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
           .localCheckpoint()
         val cells = toks
@@ -1114,7 +1114,7 @@ object Text {
       (s, d) => {
         val freq = Tables.documents(s, d)
           .select(col("lang"),
-            explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+            explode(ArrayFns.words(col("text"))).as("w"))
           .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("cnt"))
         val cw = org.apache.spark.sql.expressions.Window
           .partitionBy(col("lang")).orderBy(col("cnt").desc, col("w"))
@@ -1294,7 +1294,7 @@ object Text {
       (s, d) => {
         import s.implicits._
         val tok = Tables.documents(s, d)
-          .select(col("doc_id"), posexplode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")))
+          .select(col("doc_id"), posexplode(ArrayFns.words(col("text"))))
           .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"), col("col").as("w"))
         val vocab = tok.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
           .select(col("cnt"), col("w")).as[(Long, String)]
@@ -1498,7 +1498,7 @@ object Text {
         // — the same consumed-N-times materialization SemDeDup uses.
         val toks = Tables.documents(s, d)
           .select(col("doc_id"),
-            explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+            explode(ArrayFns.words(col("text"))).as("w"))
           .localCheckpoint()
         val wf = wordFreq(toks).localCheckpoint()
         val merges = bpeMerges(s, wf)
@@ -1568,7 +1568,7 @@ object Text {
       (s, d) => {
         val toks = Tables.documents(s, d)
           .select(col("doc_id"),
-            posexplode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
+            posexplode(ArrayFns.words(col("text")))
               .as(Seq("pos", "w")))
           .localCheckpoint()
         val wf = wordFreq(toks).localCheckpoint()
@@ -1578,7 +1578,7 @@ object Text {
             expr("substring(array_join(pieces, ''), 2)").as("dec"))
         val canon = Tables.documents(s, d)
           .select(col("doc_id"),
-            array_join(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"), " ")
+            array_join(ArrayFns.words(col("text")), " ")
               .as("canon"))
         toks.join(dec, "w")
           .groupBy(col("doc_id"))
@@ -1627,7 +1627,7 @@ object Text {
       (s, d) => {
         val toks = Tables.documents(s, d)
           .select(col("doc_id"),
-            explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+            explode(ArrayFns.words(col("text"))).as("w"))
           .localCheckpoint()
         val wf = wordFreq(toks).localCheckpoint()
         val merges = bpeMerges(s, wf)
@@ -1855,7 +1855,7 @@ object Text {
       (s, d) => {
         val words = Tables.documents(s, d)
           .select(col("doc_id"),
-            explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+            explode(ArrayFns.words(col("text"))).as("w"))
         val stats = words
           .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
           .groupBy(col("doc_id"))
@@ -2166,7 +2166,7 @@ object Text {
       (s, d) => {
         val words = Tables.documents(s, d)
           .select(col("source"),
-            explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+            explode(ArrayFns.words(col("text"))).as("w"))
         val corpus = words.groupBy(col("w")).agg(count(lit(1)).as("cq"))
         val tq = corpus.agg(sum(col("cq")).as("tq"))
         val src = words.groupBy(col("source"), col("w")).agg(count(lit(1)).as("cs"))
@@ -2589,8 +2589,7 @@ object Text {
         def partial(part: org.apache.spark.sql.DataFrame, tag: String) =
           graft.operators.TemplateGrams.partialDf(part, "doc_id", "text", 4)
             .withColumn("batch", lit(tag))
-        val base =
-          sys.props("java.io.tmpdir") + "/graft_t165_wh_" + d.replaceAll("[^A-Za-z0-9]", "_")
+        val base = Extended.sinkDir("t165_wh", d)
         partial(docs.filter(col("doc_id") % 10 =!= 0), "base")
           .write.mode("overwrite").option("path", base)
           .bucketBy(8, "h").saveAsTable("t165_gram_df")
@@ -2735,7 +2734,7 @@ object Text {
           .select(col("doc_id"), qualityGrid.as("se"))
         val stats = Tables.documents(s, d)
           .select(col("doc_id"),
-            explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+            explode(ArrayFns.words(col("text"))).as("w"))
           .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
           .groupBy(col("doc_id"))
           .agg(

@@ -237,14 +237,11 @@ class CopyLayerSpec extends SparkTestBase {
     // passes "" (as the reference's does at :196), but programmatic callers
     // filter immediate files by name prefix.
     val src = mkTree(tmpDir("src"))
-    val all = graft.enumerate.Enumerate.flatRegex(spark, s"$src/sub1")
-      .collect().map(_.path.split('/').last).toSet
-    val pref = graft.enumerate.Enumerate.flatRegex(spark, s"$src/sub1", prefix = "b")
-      .collect().map(_.path.split('/').last).toSet
+    val all = Enumerate.flatRegex(s"$src/sub1").map(_.split('/').last).toSet
+    val pref = Enumerate.flatRegex(s"$src/sub1", prefix = "b").map(_.split('/').last).toSet
     assert(all.contains("b.log"))
     assert(pref == all.filter(_.startsWith("b")))
-    assert(graft.enumerate.Enumerate.flatRegex(spark, s"$src/sub1", prefix = "zz")
-      .collect().isEmpty)
+    assert(Enumerate.flatRegex(s"$src/sub1", prefix = "zz").isEmpty)
   }
 
   test("-rg at a concrete file selects it directly") {
@@ -433,7 +430,7 @@ class CopyLayerSpec extends SparkTestBase {
   test("flat regex with no slash and no such file yields the empty selection") {
     // reference branch 4: a missing parent is an empty set, not a crash —
     // and a relative pattern with no '/' must not build Path(\"\")
-    assert(graft.enumerate.Enumerate.flatRegex(spark, "part.*").isEmpty)
+    assert(Enumerate.flatRegex("part.*").isEmpty)
   }
 
   test("file-list source (-f)") {
@@ -599,17 +596,18 @@ class CopyLayerSpec extends SparkTestBase {
         } catch { case _: Exception => }
       }
       val regexes = Seq.fill(2)(Seq("a.*", "b.*", "log-.*", ".*a.*")(rnd.nextInt(4)))
-      val (leaves, _) = Enumerate.depthRegex(spark, root.toString, regexes)
-      val got = leaves.collect()
-        .map(m => root.relativize(Paths.get(new HPath(m.path).toUri.getPath)).toString).toSet
-      // naive oracle: full walk, keep entries whose rel segments all match
-      import scala.jdk.CollectionConverters._
+      val cfg = Args.parse(Seq("-regexPath", root.toString, regexes.mkString("/"),
+        tmpDir(s"rx$round-dst").toString)).toOption.get
+      val got = Planner.plan(spark, cfg).tasks.collect()
+        .map(t => root.relativize(Paths.get(new HPath(t.src.path).toUri.getPath)).toString).toSet
+      // naive oracle: full walk, keep the files whose first n rel segments
+      // match the n regexes, at depth n or below
       val expect = Files.walk(root).iterator().asScala
-        .filter(_ != root)
+        .filter(p => p != root && Files.isRegularFile(p))
         .map(p => root.relativize(p).toString)
         .filter { rel =>
           val segs = rel.split('/')
-          segs.length == regexes.length &&
+          segs.length >= regexes.length &&
             segs.zip(regexes).forall { case (s, rx) => s.matches(rx) }
         }.toSet
       assert(got == expect, s"regexes=$regexes")
@@ -1185,15 +1183,18 @@ class CopyLayerSpec extends SparkTestBase {
   test("listing reads owner, group and permission only under -pu/-pg/-pp") {
     val src = mkTree(tmpDir("src"))
     val dst = tmpDir("dst").resolve("out")
-    def reads(flags: String*): Int = {
+    def reads(args: String*): Int = {
       val before = ChecksummedLocalFs.attributeCalls.values.sum
-      val (rc, report) = quietly(graft.cli.Main.run((flags ++ Seq(s"chkfile://$src", s"chkfile://$dst")).toArray, spark))
+      val (rc, report) = quietly(graft.cli.Main.run(args.toArray, spark))
       assert(rc == 0, report)
       ChecksummedLocalFs.attributeCalls.values.sum - before
     }
-    assert(reads("-pt") == 0)
-    assert(reads("-update", "-delete", "-pt") == 0)
-    assert(reads("-update", "-delete", "-pugp") > 0)
+    val (s, d) = (s"chkfile://$src", s"chkfile://$dst")
+    assert(reads("-pt", s, d) == 0)
+    assert(reads("-update", "-delete", "-pt", s, d) == 0)
+    assert(reads("-update", "-delete", "-pugp", s, d) > 0)
+    // -rg lists its one directory for the names in it
+    assert(reads("-rg", s"$s/sub1", s"$d-rg") == 0)
   }
 
   test("BYTESEXPECTED reports the planned file bytes") {

@@ -29,13 +29,6 @@ class CoreSpec extends AnyFunSuite {
     }
   }
 
-  // --- isAncestorPath (DistCpUtils.java:113-119) ---
-  test("isAncestorPath on segment boundaries only") {
-    assert(PathUtils.isAncestorPath("/a/b", "/a/b/c"))
-    assert(!PathUtils.isAncestorPath("/a/b", "/a/bc"))
-    assert(!PathUtils.isAncestorPath("/a/b/c", "/a/b"))
-  }
-
   // --- size literals (Options.java:24-33) ---
   test("size literal parse") {
     assert(PathUtils.parseSizeLiteral("1230k") == Right(1230L * 1024))

@@ -19,10 +19,7 @@ class GuardsSpec extends SparkTestBase {
       s"f$i")
 
   private def planOf(tasks: Seq[CopyTask]): CopyPlan =
-    CopyPlan(
-      tasks.toDS(),
-      spark.emptyDataset[String],
-      spark.emptyDataset[CopyTask])
+    CopyPlan(tasks.toDS(), spark.emptyDataset[String])
 
   test("sourceFilesForTransfer under the cap returns every planned file") {
     val plan = planOf((1 to 5).map(fakeTask(_)) :+ fakeTask(99, dir = true))
