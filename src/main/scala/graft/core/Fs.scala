@@ -9,9 +9,14 @@ import org.apache.hadoop.conf.Configuration
   * FileSystem is unaffected. Checksum comparison then returns null locally,
   * which the update-diff treats as "same" — exactly the reference's
   * null-checksum contract (DistCpUtils.java:257-291).
+  *
+  * Each call copies one template parsed once per JVM: a fresh
+  * `new Configuration()` re-parses core-default.xml and core-site.xml from
+  * the classpath on first access, and the driver, every walk task, the
+  * keyed pass and every copy task each ask for one.
   */
 object Fs {
-  def conf(): Configuration = {
+  private[graft] lazy val template: Configuration = {
     val c = new Configuration()
     c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
     // FileSystem.CACHE is keyed by (scheme, authority), NOT by conf — if any
@@ -22,4 +27,7 @@ object Fs {
     c.setBoolean("fs.file.impl.disable.cache", true)
     c
   }
+
+  /** A copy of the template: a `set` on it stays with the caller. */
+  def conf(): Configuration = new Configuration(template)
 }

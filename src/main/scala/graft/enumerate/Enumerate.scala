@@ -2,10 +2,13 @@ package graft.enumerate
 
 import java.util.regex.Pattern
 
+import scala.collection.mutable
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.LongAccumulator
 
 import graft.core.{FileMeta, Fs}
 
@@ -14,11 +17,13 @@ import graft.core.{FileMeta, Fs}
   * The reference walks each source tree with a driver-side stack
   * (DistCPPlus.java:611-750) and batches metadata RPCs by parent dir
   * (FileStatusClusterOptimizer.java:50-115). Here the walk is a distributed
-  * level-by-level BFS over all roots at once: each round lists the current
-  * frontier of directories with one `listStatus` per dir executed inside
-  * `mapPartitions`, so a 1000-executor cluster fans the metadata RPCs out
-  * instead of serializing them on the driver — the reference's worst
-  * scalability bottleneck (SURVEY.md §2.2). The result is metadata-scale
+  * round-by-round BFS over all roots at once: each round's tasks list their
+  * part of the current frontier with one `listStatus` per dir inside
+  * `mapPartitions`, and descend into the subtrees below it up to a fixed
+  * number of directories per task, so a small tree costs one Spark job and
+  * a 1000-executor cluster fans a large tree's metadata RPCs out instead of
+  * serializing them on the driver — the reference's worst scalability
+  * bottleneck (SURVEY.md §2.2). The result is metadata-scale
   * (one row per file), so collect-free unions stay cheap relative to the
   * data being copied.
   */
@@ -61,21 +66,32 @@ object Enumerate {
   private def fs(conf: Configuration, path: String): FileSystem =
     new Path(path).getFileSystem(conf)
 
-  /** Full recursive enumeration of every root in ONE level-synchronous
+  /** Directories one walk task lists: all it was given, then the
+    * subdirectories it finds, breadth-first, until it has listed this
+    * many. A root of at most this many directories is listed in one task
+    * of the walk's first round (the sweep is in CHANGES.md). */
+  private[graft] val DirsPerTask: Int = 64
+
+  /** Full recursive enumeration of every root in ONE round-synchronous
     * walk (each root's own entry included). Every entry is tagged with the
     * INDEX of the root it was listed under, not matched to a root by path
     * prefix, so equal or nested roots each get their complete listing.
     * Permission, owner and group are read only when `owners` is set (see
     * [[toMeta]]).
     *
-    * Each level is one Spark job, the eager local checkpoint of its
-    * listing, spread over min(dirs, defaultParallelism) tasks. The same job
-    * counts the next frontier's dirs in an accumulator; a retried task can
-    * only over-count, which costs one empty round. The result is one flat
-    * union of the checkpointed levels, so its lineage does not grow with
-    * depth, coalesced to defaultParallelism partitions: a deep or wide
-    * walk holds up to depth × defaultParallelism small ones, and every
-    * scan of it would run a task per partition.
+    * Each round is one Spark job, the eager local checkpoint of its
+    * listing, spread over min(frontier dirs, defaultParallelism) tasks.
+    * Each task lists its part of the frontier and then descends into what
+    * it found until it has listed [[DirsPerTask]] directories
+    * ([[listSubtrees]]), so a tree of at most that many directories per
+    * root lists in one job, and no tree takes more rounds than it has
+    * directory levels. The directories found but not listed are the next
+    * round's frontier; the same job counts them in an accumulator, where a
+    * retried task can only over-count, which costs one empty round. The
+    * result is one flat union of the checkpointed rounds, so its lineage
+    * does not grow with depth, coalesced to defaultParallelism partitions:
+    * a deep or wide walk holds up to rounds × defaultParallelism small
+    * ones, and every scan of it would run a task per partition.
     */
   def listRoots(spark: SparkSession, roots: Seq[String], owners: Boolean): RDD[(Int, FileMeta)] = {
     val sc = spark.sparkContext
@@ -83,32 +99,52 @@ object Enumerate {
     val top = roots.zipWithIndex.map { case (r, i) =>
       (i, toMeta(fs(conf, r).getFileStatus(new Path(r)), owners))
     }
-    val levels = Vector.newBuilder[RDD[(Int, FileMeta)]]
-    levels += sc.parallelize(top, 1)
+    val parts = Vector.newBuilder[RDD[(Int, FileMeta)]]
+    parts += sc.parallelize(top, 1)
     val topDirs = top.collect { case (i, m) if m.isDir => (i, m.path) }
     var dirs = topDirs.length.toLong
     // dirs to list, spread over `width` partitions: the roots straight from
-    // the driver, later levels by a shuffle inside the level's own job
+    // the driver, later frontiers by a shuffle inside the round's own job
     var frontier = (width: Int) => sc.parallelize(topDirs, width)
     while (dirs > 0) {
-      val found = sc.longAccumulator("enumerate.dirs")
-      val level = frontier(math.min(dirs, sc.defaultParallelism.toLong).toInt).mapPartitions { it =>
-        val conf = Fs.conf()
-        it.flatMap { case (i, p) =>
-          fs(conf, p).listStatus(new Path(p)).iterator.map { st =>
-            if (st.isDirectory) found.add(1)
-            (i, toMeta(st, owners))
-          }
-        }
-      }
-      level.localCheckpoint()
-      level.count() // the level's one job: pins its blocks and fills `found`
-      levels += level
-      dirs = found.value
-      val next = level.filter(_._2.isDir).map { case (i, m) => (i, m.path) }
+      val queued = sc.longAccumulator("enumerate.dirs")
+      val round = frontier(math.min(dirs, sc.defaultParallelism.toLong).toInt)
+        .mapPartitions(listSubtrees(_, owners, queued))
+      round.localCheckpoint()
+      round.count() // the round's one job: pins its blocks and fills `queued`
+      parts += round.collect { case (i, Right(m)) => (i, m) }
+      dirs = queued.value
+      val next = round.collect { case (i, Left(p)) => (i, p) }
       frontier = width => next.repartition(width)
     }
-    sc.union(levels.result()).coalesce(sc.defaultParallelism)
+    sc.union(parts.result()).coalesce(sc.defaultParallelism)
+  }
+
+  /** One walk task: list every (root index, directory) it was given, then
+    * keep listing the directories found, breadth-first, until
+    * [[DirsPerTask]] are listed. Emits each listed entry as `Right` and
+    * each directory found but not listed as `Left`, counted in `queued`. */
+  private def listSubtrees(
+      given: Iterator[(Int, String)],
+      owners: Boolean,
+      queued: LongAccumulator,
+  ): Iterator[(Int, Either[String, FileMeta])] = {
+    val conf = Fs.conf()
+    val queue = mutable.Queue.from(given)
+    val quota = math.max(queue.size, DirsPerTask)
+    val out = mutable.ArrayBuffer.empty[(Int, Either[String, FileMeta])]
+    var listed = 0
+    while (queue.nonEmpty && listed < quota) {
+      val (i, p) = queue.dequeue()
+      listed += 1
+      fs(conf, p).listStatus(new Path(p)).foreach { st =>
+        val m = toMeta(st, owners)
+        if (m.isDir) queue.enqueue(i -> m.path)
+        out += i -> Right(m)
+      }
+    }
+    queued.add(queue.size.toLong)
+    out.iterator ++ queue.iterator.map { case (i, p) => i -> Left(p) }
   }
 
   /** Full recursive enumeration of `root` (the root entry itself included),
@@ -131,10 +167,8 @@ object Enumerate {
     * (Arguments.java:184-201 parse; 306-346 getFilePaths), as the selected
     * paths. The combined path `dir/pattern` is resolved in order:
     *   1. it IS a directory → its immediate FILES only (subdirectories are
-    *      skipped), names filtered by `startsWith(prefix)`. The `-rg` CLI
-    *      passes "" exactly as the reference's does (Arguments.java:196);
-    *      the parameter exists for parity with getFilePaths' programmatic
-    *      surface, where callers pass a real name prefix;
+    *      skipped); the reference's `-rg` passes getFilePaths an empty name
+    *      prefix (Arguments.java:196), so no name filter applies;
     *   2. it IS a file → that file alone;
     *   3. otherwise, if the parent exists → the parent's children — files
     *      AND directories, the reference's regex branch has no isDir skip —
@@ -144,7 +178,7 @@ object Enumerate {
     * The one directory is listed on the driver, as the reference does: the
     * selected paths become the walk's roots.
     */
-  def flatRegex(dirAndPattern: String, prefix: String = ""): Seq[String] = {
+  def flatRegex(dirAndPattern: String): Seq[String] = {
     val full = new Path(dirAndPattern)
     val f = full.getFileSystem(Fs.conf())
     def children(dir: Path)(keep: FileStatus => Boolean): Seq[String] =
@@ -154,7 +188,7 @@ object Enumerate {
       catch { case _: java.io.FileNotFoundException => None }
     st match {
       case Some(s) if s.isDirectory =>
-        children(s.getPath)(c => !c.isDirectory && c.getPath.getName.startsWith(prefix))
+        children(s.getPath)(!_.isDirectory)
       case Some(s) => Seq(s.getPath.toString)
       case None =>
         val idx = dirAndPattern.lastIndexOf('/')

@@ -7,7 +7,7 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{RawLocalFileSystem, Path => HPath}
 import org.apache.spark.GraftListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -230,18 +230,6 @@ class CopyLayerSpec extends SparkTestBase {
     val plan = Planner.plan(spark, cfg)
     Executor.execute(spark, plan, cfg)
     assert(treeListing(dst).keySet == Set("b.log"))
-  }
-
-  test("flatRegex dir branch honors a programmatic name prefix") {
-    // getFilePaths' prefix parameter (Arguments.java:307,320): the -rg CLI
-    // passes "" (as the reference's does at :196), but programmatic callers
-    // filter immediate files by name prefix.
-    val src = mkTree(tmpDir("src"))
-    val all = Enumerate.flatRegex(s"$src/sub1").map(_.split('/').last).toSet
-    val pref = Enumerate.flatRegex(s"$src/sub1", prefix = "b").map(_.split('/').last).toSet
-    assert(all.contains("b.log"))
-    assert(pref == all.filter(_.startsWith("b")))
-    assert(Enumerate.flatRegex(s"$src/sub1", prefix = "zz").isEmpty)
   }
 
   test("-rg at a concrete file selects it directly") {
@@ -768,9 +756,10 @@ class CopyLayerSpec extends SparkTestBase {
   }
 
   test("listTree enumerates a pathologically deep tree (lineage stays flat)") {
-    // depth 80: a Dataset union chain would grow one plan node per level;
-    // the walk's result is one flat union of its 81 checkpointed levels —
-    // this pins both correctness at depth and the flat plan
+    // depth 80, deeper than one task's DirsPerTask: a Dataset union chain
+    // would grow one plan node per level; the walk's result is one flat
+    // union of its checkpointed rounds — this pins both correctness at
+    // depth and the flat plan
     val base = tmpDir("deep")
     var cur = base
     val depth = 80
@@ -822,19 +811,24 @@ class CopyLayerSpec extends SparkTestBase {
     (out, metrics(group), finals.values.asScala.toSeq)
   }
 
-  test("listTree runs one job per directory level, spread over min(dirs, defaultParallelism) tasks") {
-    // four directory levels: the root; a..f; a/x and b/x; a/x/y (empty)
+  test("a tree of <= DirsPerTask dirs lists in one job over min(roots, P) tasks") {
+    // ten directories on four levels: the root; a..f; a/x and b/x; a/x/y (empty)
     val root = tmpDir("levels")
     ('a' to 'f').foreach { c =>
       Files.write(Files.createDirectories(root.resolve(c.toString)).resolve("f"), Array[Byte](1))
     }
     Files.createDirectories(root.resolve("a/x/y"))
     Files.createDirectories(root.resolve("b/x"))
-    val (listed, totals, finals) = jobsIn("walk-levels")(Enumerate.listTree(spark, root.toString))
-    val dp = spark.sparkContext.defaultParallelism
-    assert(totals.jobs == 4, finals)
-    assert(finals.map(_._2) == Seq(1, math.min(6, dp), math.min(2, dp), 1), finals)
+    assert(Enumerate.DirsPerTask >= 10)
+    val (listed, totals, finals) = jobsIn("walk-one-root")(Enumerate.listTree(spark, root.toString))
+    assert(totals.jobs == 1 && finals.map(_._2) == Seq(1), finals)
     assert(listed.count() == 1 + 6 + 6 + 3)
+    // a..f as six roots: still one job, its tasks capped by defaultParallelism
+    val dp = spark.sparkContext.defaultParallelism
+    val subs = ('a' to 'f').map(c => root.resolve(c.toString).toString)
+    val (walk, totals6, finals6) = jobsIn("walk-six-roots")(Enumerate.listRoots(spark, subs, owners = false))
+    assert(totals6.jobs == 1 && finals6.map(_._2) == Seq(math.min(6, dp)), finals6)
+    assert(walk.count() == 6 + 6 + 3)
   }
 
   test("an -update -delete plan over two -f roots walks them and the destination together") {
@@ -865,14 +859,67 @@ class CopyLayerSpec extends SparkTestBase {
       p.deletes.collect() // forces the lazy delete set
       p
     }
-    // the destination nests s1 one level down: 4 levels, where one walk
-    // per tree would take 3 + 2 + 4 rounds
-    assert(finals.count(_._1.contains("Enumerate.scala")) == 4, finals)
+    // the destination nests s1 one level down: its 4 levels list in one
+    // round, where one walk per tree would take 3 + 2 + 4
+    assert(finals.count(_._1.contains("Enumerate.scala")) == 1, finals)
     val after = ChecksummedLocalFs.listStatusCalls
     val dirs = Seq(s1, s2, dst).flatMap(r => Files.walk(r).iterator().asScala.filter(Files.isDirectory(_)))
     val delta = after.map { case (k, v) => k -> (v - before.getOrElse(k, 0)) }.filter(_._2 != 0)
     assert(delta == dirs.map(_.toString -> 1).toMap)
     assert(plan.tasks.filter(!_.src.isDir).isEmpty && plan.deletes.isEmpty)
+  }
+
+  test("the walk matches a java.nio walk and lists each directory once, above and below DirsPerTask") {
+    val b = Enumerate.DirsPerTask
+    val base = tmpDir("walk-eq")
+    val chk = new HPath("chkfile:///").getFileSystem(Fs.conf())
+    // `dirs` directories under `root`, each hung under a random earlier one
+    // (a chain when `chain`), each holding 0-2 files of 0-4 bytes
+    def tree(root: Path, dirs: Int, seed: Int, chain: Boolean = false): Path = {
+      val rnd = new Random(seed)
+      val made = scala.collection.mutable.ArrayBuffer(Files.createDirectories(root))
+      while (made.length < dirs) {
+        val parent = if (chain) made.last else made(rnd.nextInt(made.length))
+        made += Files.createDirectories(parent.resolve(s"d${made.length}"))
+      }
+      for (d <- made; k <- 0 until rnd.nextInt(3)) Files.write(d.resolve(s"f$k"), Array.fill[Byte](rnd.nextInt(5))(1))
+      root
+    }
+    def entries(root: Path): Seq[Path] = Files.walk(root).iterator().asScala.toSeq
+    // what the walk should report for `p`: ChecksummedLocalFs's status,
+    // without owners; atime is left out because listing a directory may
+    // move it
+    def nioMeta(p: Path): FileMeta = {
+      val dir = Files.isDirectory(p)
+      FileMeta(chk.makeQualified(new HPath(p.toString)).toString, if (dir) 0L else Files.size(p), dir,
+        1, chk.getDefaultBlockSize(new HPath(p.toString)), Files.getLastModifiedTime(p).toMillis, 0L, "", "", "")
+    }
+    def bag[T](xs: Seq[T]): Map[T, Int] = xs.groupMapReduce(identity)(_ => 1)(_ + _)
+    val big = tree(base.resolve("big"), 2 * b + 7, seed = 3)
+    val cases = Seq(
+      "small" -> Seq(tree(base.resolve("small"), b / 2, seed = 1)),
+      "at-budget" -> Seq(tree(base.resolve("at"), b, seed = 2)),
+      "over-budget" -> Seq(big),
+      "chain" -> Seq(tree(base.resolve("chain"), b + 9, seed = 4, chain = true)),
+      "nested" -> Seq(big, big.resolve("d1")),
+      "many-roots" -> (1 to 6).map(k => tree(base.resolve(s"r$k"), k * b / 3, seed = 10 + k)),
+    )
+    for ((label, roots) <- cases) {
+      val before = ChecksummedLocalFs.listStatusCalls
+      val (walk, totals, _) = jobsIn(s"walk-eq-$label")(
+        Enumerate.listRoots(spark, roots.map(r => s"chkfile://$r"), owners = false))
+      val calls = ChecksummedLocalFs.listStatusCalls.map { case (k, v) => k -> (v - before.getOrElse(k, 0)) }
+        .filter(_._2 != 0)
+      val got = walk.collect().toSeq.map { case (i, m) => i -> m.copy(atime = 0L) }
+      val want = roots.zipWithIndex.flatMap { case (r, i) => entries(r).map(p => i -> nioMeta(p)) }
+      assert(bag(got) == bag(want), label)
+      // each directory once per root it lies under
+      assert(calls == bag(roots.flatMap(entries(_).filter(Files.isDirectory(_)).map(_.toString))), label)
+      val dirs = roots.map(entries(_).count(Files.isDirectory(_)))
+      val depth = roots.flatMap(r => entries(r).filter(Files.isDirectory(_)).map(_.getNameCount - r.getNameCount)).max
+      assert(totals.jobs <= depth + 1, s"$label: ${totals.jobs} rounds at depth $depth")
+      if (roots.length == 1) assert((totals.jobs == 1) == (dirs.head <= b), s"$label: ${totals.jobs} rounds, $dirs dirs")
+    }
   }
 
   test("overlapping roots plan like separate per-root walks") {
@@ -1165,19 +1212,34 @@ class CopyLayerSpec extends SparkTestBase {
     (r, out.toString(StandardCharsets.UTF_8))
   }
 
-  test("a no-op -update -delete -pt sync runs at most (tree depth + 1) + 3 Spark jobs") {
+  test("a no-op -update -delete -pt sync runs at most 3 Spark jobs") {
     val src = mkTree(tmpDir("src"))
     val dst = tmpDir("dst").resolve("out")
     quietly(graft.cli.Main.run(Array("-pt", src.toString, dst.toString), spark))
-    val depth = Files.walk(src).iterator().asScala.map(p => src.relativize(p).getNameCount).max
     val ((rc, report), totals, finals) = jobsIn("noop-sync") {
       quietly(graft.cli.Main.run(Array("-update", "-delete", "-pt", src.toString, dst.toString), spark))
     }
     assert(rc == 0 && report.contains("COPY=0 "), report)
-    // the walk's depth + 1 level jobs, one planning job and the executor's
-    // copy pass; a zero-byte plan skips the bucket packer's jobs (the
-    // Dataset-join planner ran 25 here)
-    assert(totals.jobs <= depth + 1 + 3, finals)
+    // one walk round (both trees are under DirsPerTask directories), the
+    // keyed pass and the executor's copy pass; a zero-byte plan skips the
+    // bucket packer's jobs (the Dataset-join planner ran 25 here)
+    assert(totals.jobs <= 3, finals)
+  }
+
+  test("Fs.conf hands out isolated copies of one raw-local, uncached template") {
+    val a = Fs.conf()
+    a.set("graft.fs.probe", "a")
+    assert(Fs.template.get("graft.fs.probe") == null)
+    val b = Fs.conf()
+    assert(b.get("graft.fs.probe") == null)
+    assert(b.get("fs.file.impl") == classOf[RawLocalFileSystem].getName)
+    assert(b.getBoolean("fs.file.impl.disable.cache", false))
+    assert(new HPath("file:///").getFileSystem(b).getClass == classOf[RawLocalFileSystem])
+    // so a local copy grows no ChecksumFileSystem .crc shadow files
+    val src = mkTree(tmpDir("src"))
+    val dst = tmpDir("dst").resolve("out")
+    assert(runCopy(Nil, src, dst).copied == 8)
+    assert(!Files.walk(dst).iterator().asScala.exists(_.getFileName.toString.endsWith(".crc")))
   }
 
   test("listing reads owner, group and permission only under -pu/-pg/-pp") {
