@@ -13,7 +13,7 @@ import graft.plan.{CopyPlan, Planner}
   * Copy layer:
   * {{{
   *   val cfg   = Graft.parseArgs(Seq("-update", "-delete", "-pt", src, dst))
-  *   val plan  = Graft.plan(spark, cfg)       // lazy: inspect before running
+  *   val plan  = Graft.plan(spark, cfg)       // planned, not run: inspect first
   *   if (plan.hasFileCopied) Graft.execute(spark, plan, cfg)
   * }}}
   *

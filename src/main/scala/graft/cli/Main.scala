@@ -52,7 +52,7 @@ object Main {
             // for exactly the >1M-file plans this flag is recommended for,
             // so it must not be on this path
             val out = cfg.exportPath.getOrElse(s"${cfg.dst}/_graft_plan")
-            Planner.savePlan(plan, out)
+            Planner.savePlan(spark, plan, out)
             println(s"planned ${plan.totals.files} file copies; plan exported to $out")
             0
           } else {

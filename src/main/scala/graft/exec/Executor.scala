@@ -20,9 +20,12 @@ import graft.plan.CopyPlan
   * is off, DistCPPlus.java:459-461), tmp paths here are task-attempt-scoped
   * so Spark task retries stay idempotent (SURVEY.md §7 risks).
   *
-  * Tasks are bucketed by the size-weighted packer before mapPartitions, so
-  * each partition carries ~equal bytes — the reference's 256 MiB/map model
-  * (DistCPPlus.java:101,442-451) — rather than ~equal file counts.
+  * A plan with bytes to copy is bucketed by the size-weighted packer
+  * before mapPartitions, so each partition carries ~equal bytes — the
+  * reference's 256 MiB/map model (DistCPPlus.java:101,442-451) — rather
+  * than ~equal file counts. A zero-byte plan (directories and empty files)
+  * runs over the plan's own partitions, coalesced to the bucket count, so
+  * `-m` bounds the copy pass's tasks on both paths.
   */
 object Executor {
 
@@ -204,27 +207,31 @@ object Executor {
     }
 
     val copyFn = resolveCopyFunction(cfg)
-    // a zero-byte plan (directories and empty files, as in a no-op sync)
-    // puts every task in bucket 0 — what the packer computes at total 0 —
-    // without paying its PrefixSum jobs
-    val bucketed =
-      if (totals.bytes == 0) planned.tasks.rdd.map(task => (0, task))
-      else graft.plan.Planner.assignBuckets(planned.tasks, numBuckets).rdd
-        .map { case (task, b) => (b, task) }
+    val partitioned =
+      // a zero-byte plan (directories and empty files, as in a no-op sync)
+      // has no bytes to balance: it copies over its own partitions, at most
+      // numBuckets of them, without the packer's jobs or a shuffle
+      if (totals.bytes == 0) planned.tasks.coalesce(numBuckets)
+      else {
+        import spark.implicits._
+        // IDENTITY partitioner, not repartition(n, col): hash-partitioning
+        // the bucket id collides distinct buckets into one task (≈1/e of
+        // partitions empty at scale) and the equal-bytes-per-task packing
+        // the bucketer just computed is destroyed — bucket i must BE
+        // partition i
+        graft.plan.Planner.assignBuckets(spark.createDataset(planned.tasks), numBuckets).rdd
+          .map { case (task, b) => (b, task) }
+          .partitionBy(new org.apache.spark.Partitioner {
+            override def numPartitions: Int = numBuckets
+            override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+          })
+          .values
+      }
     val tRun0 = System.nanoTime()
-    // IDENTITY partitioner, not repartition(n, col): hash-partitioning the
-    // bucket id collides distinct buckets into one task (≈1/e of partitions
-    // empty at scale) and the equal-bytes-per-task packing the bucketer
-    // just computed is destroyed — bucket i must BE partition i
-    val partitioned = bucketed
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = numBuckets
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
     val results = partitioned.mapPartitions { iter =>
       val c = Fs.conf()
       val attempt = Option(TaskContext.get()).map(_.taskAttemptId().toString).getOrElse("0")
-      iter.map { case (_, task) => copyFn(c, task, dstRoot, cfg, attempt) }
+      iter.map(copyFn(c, _, dstRoot, cfg, attempt))
     }
     results.localCheckpoint()
 

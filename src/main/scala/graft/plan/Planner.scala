@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core._
 import graft.enumerate.Enumerate
@@ -14,29 +13,37 @@ import graft.operators.PrefixSum
   *
   * What the reference does with hand-rolled external sorts and merge loops
   * (DistCpUtils.java:84-223) becomes one keyed pass over the listing walk
-  * (RDD API, so its shuffles run as ONE Spark job): every source task, every
+  * (RDD API, so its shuffle runs as ONE Spark job): every source task, every
   * destination entry and every prefix the source manifest keeps meets the
   * others under its destination-relative path, and each key decides
   *   - update diff   → task unless [[graft.core.SameFile]] holds, its
   *                     checksums fetched on the executor         (op 6)
   *   - dup check     → two or more sources on one key           (op 8)
   *   - delete sync   → destination-only and not kept, then
-  *                     ancestor suppression by parent key       (op 9)
+  *                     ancestor suppression by parent key, a
+  *                     second job only when something is doomed (op 9)
   * around it:
   *   - limits        → chained per-partition skip-and-continue  (op 5)
   *   - split packing → range-partitioned cumsum bucketing      (op 10)
   *
   * Every source root and the destination are listed in ONE walk
-  * ([[graft.enumerate.Enumerate.listRoots]]); the destination's part of it
-  * feeds both the update diff and the delete sync.
+  * ([[graft.enumerate.Enumerate.listRoots]]), which the keyed pass reads
+  * once: each entry contributes its source, kept-prefix or destination
+  * slots.
+  *
+  * A plan's two manifests are RDDs over the keyed pass's checkpointed
+  * blocks, which [[graft.exec.Executor.execute]] copies from as they are.
+  * A Dataset is built only at the parquet boundary ([[Planner.savePlan]],
+  * [[Planner.loadPlan]]) and as the byte packer's input
+  * ([[Planner.assignBuckets]]) for a plan with bytes to pack.
   */
 final case class CopyPlan(
-    tasks: Dataset[CopyTask],
-    deletes: Dataset[String],
+    tasks: RDD[CopyTask],
+    deletes: RDD[String],
     planned: Option[CopyPlan.Totals] = None,
 ) {
   /** The directory tasks: directories pass limits and the diff alike. */
-  def dirs: Dataset[CopyTask] = tasks.filter(_.src.isDir)
+  def dirs: RDD[CopyTask] = tasks.filter(_.src.isDir)
 
   /** Planned file copies, their bytes and the deletes: the planning pass's
     * own summary, or for a plan built elsewhere (a loaded one) one job per
@@ -49,22 +56,20 @@ final case class CopyPlan(
     * in-driver manifest walk, `d/DistCPPlus.java:580-607`) — valid for
     * manifest-scale plans, so it FAILS FAST past [[CopyPlan.DryRunListCap]]
     * paths instead of silently OOMing the driver; memory is bounded by
-    * collecting at most cap+1 rows. A plan too big to list belongs in
-    * the parquet plan export (`-exportOnly`), not a driver Seq. */
+    * taking at most cap+1 rows. A plan too big to list belongs in the
+    * parquet plan export (`-exportOnly`), not a driver Seq. */
   def sourceFilesForTransfer: Seq[String] =
     sourceFilesForTransfer(CopyPlan.DryRunListCap)
 
   private[graft] def sourceFilesForTransfer(cap: Int): Seq[String] = {
-    val paths =
-      tasks.filter(!_.src.isDir).map(_.src.path)(tasks.sparkSession.implicits.newStringEncoder)
-        .limit(cap + 1).collect().toSeq
+    val paths = tasks.filter(!_.src.isDir).map(_.src.path).take(cap + 1).toSeq
     require(
       paths.length <= cap,
       s"dry-run file list exceeds $cap entries; use the parquet plan export " +
         "(-exportOnly) for plans too large to hold on the driver")
     paths
   }
-  def hasFileCopied: Boolean = tasks.filter(!_.src.isDir).limit(1).count() > 0
+  def hasFileCopied: Boolean = !tasks.filter(!_.src.isDir).isEmpty()
 }
 
 object CopyPlan {
@@ -77,25 +82,21 @@ object CopyPlan {
   final case class Totals(files: Long, bytes: Long, deletes: Long)
 
   object Totals {
-    def of(tasks: Dataset[CopyTask], deletes: Dataset[String]): Totals = {
-      val (files, bytes) = tasks.rdd.filter(!_.src.isDir).map(t => (1L, t.src.length))
+    def of(tasks: RDD[CopyTask], deletes: RDD[String]): Totals = {
+      val (files, bytes) = tasks.filter(!_.src.isDir).map(t => (1L, t.src.length))
         .fold((0L, 0L)) { case ((f1, b1), (f2, b2)) => (f1 + f2, b1 + b2) }
-      Totals(files, bytes, deletes.rdd.count())
+      Totals(files, bytes, deletes.count())
     }
   }
 }
 
 object Planner {
 
-  /** CopyTasks for the source roots: every entry the walk listed under
-    * root i < roots.length, keyed by its dest-relative path. With multiple
-    * roots each root nests under its basename (distcp semantics). One pass
-    * over the walk whatever the root count. */
-  private[graft] def sourceTasks(
-      walk: RDD[(Int, FileMeta)],
-      roots: Seq[String],
-      cfg: CopyConfig,
-  ): RDD[CopyTask] = {
+  /** The CopyTask of one walk entry under root i < roots.length, keyed by
+    * its dest-relative path; None for the destination's entries, a
+    * directory root itself and what `-regexPath` does not select. With
+    * multiple roots each root nests under its basename (distcp semantics). */
+  private def sourceTask(roots: Seq[String], cfg: CopyConfig): ((Int, FileMeta)) => Option[CopyTask] = {
     // relativize against each root's FS-qualified rendering: enumerated
     // metas carry full qualified URIs, the user-typed root may not
     val qRoots = roots.map(Enumerate.qualify).toArray
@@ -105,7 +106,7 @@ object Planner {
       case Nil => (_, _) => true
       case rx => Enumerate.depthRegexFiles(rx)
     }
-    walk.flatMap { case (i, m) =>
+    { case (i, m) =>
       // indexes past the roots belong to the destination's listing
       if (i >= qRoots.length) None
       else PathUtils.makeRelative(qRoots(i), m.path).filter(selected(m, _)).flatMap { rel =>
@@ -115,6 +116,15 @@ object Planner {
       }
     }
   }
+
+  /** CopyTasks for the source roots: every entry the walk listed under
+    * root i < roots.length (see [[sourceTask]]). One pass over the walk
+    * whatever the root count. */
+  private[graft] def sourceTasks(
+      walk: RDD[(Int, FileMeta)],
+      roots: Seq[String],
+      cfg: CopyConfig,
+  ): RDD[CopyTask] = walk.flatMap(sourceTask(roots, cfg))
 
   /** File/size limits with the reference's skip-and-continue admission
     * (DistCPPlus.java:675-705): walking files in traversal (relDst) order, a
@@ -203,13 +213,13 @@ object Planner {
     def +(o: Slot): Slot = Slot(srcs + o.srcs, task.orElse(o.task), dst.orElse(o.dst), kept || o.kept)
   }
 
-  /** One row of a materialized plan. */
+  /** One decided key of the keyed pass. */
   private sealed trait Row extends Serializable
   private final case class Copy(task: CopyTask) extends Row
   private final case class Delete(relDst: String) extends Row
   private final case class Duplicate(relDst: String) extends Row
 
-  /** Per-partition tally of the plan rows, summed on the driver. */
+  /** Per-partition tally of the decided keys, summed on the driver. */
   private final case class Summary(dups: Long, dupExample: String, files: Long, bytes: Long, deletes: Long) {
     def +(r: Row): Summary = r match {
       case Copy(t) if !t.src.isDir => copy(files = files + 1, bytes = bytes + t.src.length)
@@ -227,22 +237,27 @@ object Planner {
   }
 
   /** The keyed pass: duplicate check, update diff and delete sync over one
-    * shuffle of the walk, materialized with its [[Summary]] in ONE job.
+    * shuffle of the walk, decided and tallied by its [[Summary]] in ONE
+    * job. Ancestor suppression is a second job, run only when that summary
+    * counted a doomed path; it recounts the deletes.
     *
-    * Keys are destination-relative paths. `tasks` (the admitted source
-    * manifest) contributes one source per relDst; with a destination,
-    * `dst` contributes its entries; under `-delete`, every prefix of every
-    * relDst in `keep` (the whole manifest, before limits and diff) is kept:
-    * a file-only manifest (-regexPath, -f with file URIs) would otherwise
-    * doom the parent directories of the files it copies, and the recursive
-    * delete would take the files along. The reduce combines map-side into
+    * Keys are destination-relative paths. One `flatMap` reads the walk
+    * once: a source entry emits its source slot, and under `-delete` with
+    * a destination a kept slot for every prefix of its relDst (the whole
+    * manifest before limits and diff is kept: a file-only manifest —
+    * -regexPath, -f with file URIs — would otherwise doom the parent
+    * directories of the files it copies, and the recursive delete would
+    * take the files along); a destination entry emits its destination
+    * slot. Under `-filelimit`/`-sizelimit` the `admitted` manifest is
+    * unioned in as the sources instead. The reduce combines map-side into
     * one [[Slot]] per key, so no key's state grows with its directory.
     *
     * Per key (DistCpUtils.java:84-291):
-    *   - two or more sources is a duplicate (exit -2). It is checked on the
-    *     admitted manifest BEFORE the diff: diffing first would hide a
-    *     collision whenever one colliding source is up to date, and the two
-    *     sources would ping-pong the destination between runs with exit 0;
+    *   - two or more sources is a duplicate: [[DuplicationException]]
+    *     (exit -2). It is checked on the admitted manifest BEFORE the diff:
+    *     diffing first would hide a collision whenever one colliding
+    *     source is up to date, and the two sources would ping-pong the
+    *     destination between runs with exit 0;
     *   - a source is a task unless `-update` finds a destination entry
     *     that [[SameFile]] holds; it fetches the checksums on the executor,
     *     and only for a metadata-equal pair;
@@ -250,23 +265,38 @@ object Planner {
     * The doomed set is closed under descendants, so suppressing doomed
     * paths whose parent is doomed (`subtractByKey` on the parent key)
     * leaves one recursive delete per doomed subtree.
+    *
+    * Returns the tasks and the deletes as RDDs over the pass's
+    * checkpointed blocks, with the summary of both.
     */
   private def keyedPass(
-      tasks: RDD[CopyTask],
-      keep: Option[RDD[CopyTask]],
-      dst: Option[RDD[(String, FileMeta)]],
+      walk: RDD[(Int, FileMeta)],
+      roots: Seq[String],
+      admitted: Option[RDD[CopyTask]],
+      withDst: Boolean,
       cfg: CopyConfig,
-  ): (RDD[Row], Summary) = {
-    val sc = tasks.sparkContext
+  ): (RDD[CopyTask], RDD[String], Summary) = {
+    val sc = walk.sparkContext
     val (update, dstRoot) = (cfg.update, cfg.dst)
-    val deleting = keep.isDefined
-    val sources = tasks.map(t => t.relDst -> Slot(1, Some(t), None, kept = false))
-    val kept = keep.toSeq.map(_.flatMap { t =>
-      val segs = t.relDst.split('/')
-      (1 to segs.length).iterator.map(i => segs.take(i).mkString("/") -> Slot(0, None, None, kept = true))
-    })
-    val dsts = dst.toSeq.map(_.map { case (rel, m) => rel -> Slot(0, None, Some((m.length, m.mtime)), kept = false) })
-    val slots = sc.union(sources +: (kept ++ dsts)).reduceByKey(_ + _, sc.defaultParallelism)
+    val deleting = withDst && cfg.delete
+    val walkSources = admitted.isEmpty
+    val source = sourceTask(roots, cfg)
+    // the destination's entries carry index roots.length
+    val (dstIdx, qDstRoot) = (roots.length, if (withDst) Enumerate.qualify(dstRoot) else "")
+    val fromWalk = walk.flatMap { case e @ (i, m) =>
+      if (i == dstIdx)
+        PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").iterator
+          .map(_ -> Slot(0, None, Some((m.length, m.mtime)), kept = false))
+      else source(e).iterator.flatMap { t =>
+        val own = Slot(if (walkSources) 1 else 0, Option.when(walkSources)(t), None, kept = deleting)
+        val segs = if (deleting) t.relDst.split('/') else Array.empty[String]
+        Iterator.single(t.relDst -> own) ++
+          (1 until segs.length).iterator.map(i => segs.take(i).mkString("/") -> Slot(0, None, None, kept = true))
+      }
+    }
+    val slots = admitted
+      .fold(fromWalk)(a => fromWalk.union(a.map(t => t.relDst -> Slot(1, Some(t), None, kept = false))))
+      .reduceByKey(_ + _, sc.defaultParallelism)
     val decided: RDD[(String, Row)] = slots.mapPartitions({ it =>
       val conf = Fs.conf()
       def checksums(t: CopyTask) = {
@@ -284,20 +314,24 @@ object Planner {
         case _ => None
       }
     }, preservesPartitioning = true)
-    // read by the parent-keyed shuffle, the subtract and the output alike
-    decided.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    // read by the summary, the tasks and the suppression alike
+    decided.localCheckpoint()
+    val summary = sc.runJob(decided, (it: Iterator[(String, Row)]) => it.foldLeft(Summary.Empty)(_ + _._2))
+      .foldLeft(Summary.Empty)(_ ++ _)
+    if (summary.dups > 0) throw new DuplicationException(s"duplicate destination: ${summary.dupExample}")
+    val tasks = decided.values.collect { case Copy(t) => t }
+    if (summary.deletes == 0) (tasks, sc.emptyRDD[String], summary)
+    else {
+      // the doomed side is already partitioned by the pass: only the
+      // parent-keyed side shuffles
       val doomed = decided.filter(_._2.isInstanceOf[Delete])
       val deletes = doomed
-        .map { case (rel, r) => rel.take(math.max(rel.lastIndexOf('/'), 0)) -> r } // top level: ""
+        .map { case (rel, _) => rel.take(math.max(rel.lastIndexOf('/'), 0)) -> rel } // top level: ""
         .subtractByKey(doomed, slots.partitioner.get)
         .values
-      val rows = decided.values.filter(!_.isInstanceOf[Delete]).union(deletes)
-      rows.localCheckpoint()
-      val summary = sc.runJob(rows, (it: Iterator[Row]) => it.foldLeft(Summary.Empty)(_ + _))
-        .foldLeft(Summary.Empty)(_ ++ _)
-      (rows, summary)
-    } finally decided.unpersist(blocking = false)
+      deletes.localCheckpoint()
+      (tasks, deletes, summary.copy(deletes = deletes.count()))
+    }
   }
 
   /** Size-weighted bucket assignment (CopyInputFormat.java:33-79): in
@@ -328,16 +362,17 @@ object Planner {
     * persist as parquet — the Spark-native analog of the reference's
     * SequenceFile staging manifests (DistCPPlus.java:577-595).
     */
-  def savePlan(plan: CopyPlan, path: String): Unit = {
-    plan.tasks.write.mode("overwrite").parquet(s"$path/tasks")
-    plan.deletes.toDF("relDst").write.mode("overwrite").parquet(s"$path/deletes")
+  def savePlan(spark: SparkSession, plan: CopyPlan, path: String): Unit = {
+    import spark.implicits._
+    spark.createDataset(plan.tasks).write.mode("overwrite").parquet(s"$path/tasks")
+    spark.createDataset(plan.deletes).toDF("relDst").write.mode("overwrite").parquet(s"$path/deletes")
   }
 
   def loadPlan(spark: SparkSession, path: String): CopyPlan = {
     import spark.implicits._
     CopyPlan(
-      tasks = spark.read.parquet(s"$path/tasks").as[CopyTask],
-      deletes = spark.read.parquet(s"$path/deletes").select(col("relDst")).as[String],
+      tasks = spark.read.parquet(s"$path/tasks").as[CopyTask].rdd,
+      deletes = spark.read.parquet(s"$path/deletes").select(col("relDst")).as[String].rdd,
     )
   }
 
@@ -357,26 +392,14 @@ object Planner {
     val withDst = (cfg.update || cfg.delete) && dstPath.getFileSystem(Fs.conf()).exists(dstPath)
     val walk = Enumerate.listRoots(spark, if (withDst) roots :+ cfg.dst else roots,
       owners = cfg.preserve.exists(FileAttribute.Ownership))
-    val all = sourceTasks(walk, roots, cfg)
     // Under -update the reference OVERWRITES the limit-skip decision with the
     // same-file check (DistCPPlus.java:681-700: `skipfile = isSame`), so
     // -filelimit/-sizelimit are effectively ignored — reproduced here by
     // bypassing applyLimits when updating.
-    val limited =
-      if (cfg.update || (cfg.fileLimit == Long.MaxValue && cfg.sizeLimit == Long.MaxValue)) all
-      else applyLimits(spark.createDataset(all), cfg.fileLimit, cfg.sizeLimit).rdd
-    val dst = Option.when(withDst) {
-      val (idx, qDstRoot) = (roots.length, Enumerate.qualify(cfg.dst))
-      walk.flatMap { case (i, m) =>
-        if (i != idx) None else PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(_ -> m)
-      }
+    val admitted = Option.when(!cfg.update && (cfg.fileLimit != Long.MaxValue || cfg.sizeLimit != Long.MaxValue)) {
+      applyLimits(spark.createDataset(sourceTasks(walk, roots, cfg)), cfg.fileLimit, cfg.sizeLimit).rdd
     }
-    val (rows, summary) = keyedPass(limited, Option.when(withDst && cfg.delete)(all), dst, cfg)
-    if (summary.dups > 0) throw new DuplicationException(s"duplicate destination: ${summary.dupExample}")
-    CopyPlan(
-      tasks = spark.createDataset(rows.collect { case Copy(t) => t }),
-      deletes = spark.createDataset(rows.collect { case Delete(rel) => rel }),
-      planned = Some(CopyPlan.Totals(summary.files, summary.bytes, summary.deletes)),
-    )
+    val (tasks, deletes, summary) = keyedPass(walk, roots, admitted, withDst, cfg)
+    CopyPlan(tasks, deletes, Some(CopyPlan.Totals(summary.files, summary.bytes, summary.deletes)))
   }
 }

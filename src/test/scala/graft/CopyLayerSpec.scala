@@ -459,7 +459,7 @@ class CopyLayerSpec extends SparkTestBase {
     val dst = base.resolve("out")
     val cfg = Args.parse(Seq(src.toString, dst.toString)).toOption.get
     val plan = Planner.plan(spark, cfg)
-    Planner.savePlan(plan, base.resolve("manifests").toString)
+    Planner.savePlan(spark, plan, base.resolve("manifests").toString)
     val reloaded = Planner.loadPlan(spark, base.resolve("manifests").toString)
     assert(reloaded.tasks.count() == plan.tasks.count())
     val stats = Executor.execute(spark, reloaded, cfg)
@@ -866,7 +866,7 @@ class CopyLayerSpec extends SparkTestBase {
     val dirs = Seq(s1, s2, dst).flatMap(r => Files.walk(r).iterator().asScala.filter(Files.isDirectory(_)))
     val delta = after.map { case (k, v) => k -> (v - before.getOrElse(k, 0)) }.filter(_._2 != 0)
     assert(delta == dirs.map(_.toString -> 1).toMap)
-    assert(plan.tasks.filter(!_.src.isDir).isEmpty && plan.deletes.isEmpty)
+    assert(plan.tasks.filter(!_.src.isDir).isEmpty() && plan.deletes.isEmpty())
   }
 
   test("the walk matches a java.nio walk and lists each directory once, above and below DirsPerTask") {
@@ -1113,6 +1113,8 @@ class CopyLayerSpec extends SparkTestBase {
     )
     val names = Vector("a", "b", "c", "log-1", "log-2")
     var (updateFileTasks, crcTasks, deletes) = (0, 0, 0)
+    // plans without a doomed path skip the suppression job, plans with one run it
+    var (undoomed, doomed) = (0, 0)
     for (seed <- 1 to 12) {
       val rnd = new Random(seed)
       val base = tmpDir(s"keyed-$seed")
@@ -1198,12 +1200,15 @@ class CopyLayerSpec extends SparkTestBase {
       got.foreach { case (t, d) =>
         if (c.update) updateFileTasks += t.count { case (_, p) => Files.isRegularFile(Paths.get(new HPath(p).toUri.getPath)) }
         deletes += d.size
+        if (d.isEmpty) undoomed += 1 else doomed += 1
         if (c.update && !c.skipCrc) crcTasks += crcOnly.count(f => t.exists(_._1 == dst.relativize(f).toString))
       }
     }
     // the drift reached the diff, its CRC compare and the delete sync
     assert(updateFileTasks > 0 && crcTasks > 0 && deletes > 0, (updateFileTasks, crcTasks, deletes))
-    info(s"$updateFileTasks file tasks under -update ($crcTasks found by CRC), $deletes deletes")
+    assert(undoomed > 0 && doomed > 0, (undoomed, doomed))
+    info(s"$updateFileTasks file tasks under -update ($crcTasks found by CRC), $deletes deletes; " +
+      s"$undoomed plans without a doomed path, $doomed with")
   }
 
   private def quietly[T](body: => T): (T, String) = {
@@ -1212,7 +1217,7 @@ class CopyLayerSpec extends SparkTestBase {
     (r, out.toString(StandardCharsets.UTF_8))
   }
 
-  test("a no-op -update -delete -pt sync runs at most 3 Spark jobs") {
+  test("a no-op -update -delete -pt sync runs at most 3 Spark jobs and 4 stages") {
     val src = mkTree(tmpDir("src"))
     val dst = tmpDir("dst").resolve("out")
     quietly(graft.cli.Main.run(Array("-pt", src.toString, dst.toString), spark))
@@ -1222,8 +1227,60 @@ class CopyLayerSpec extends SparkTestBase {
     assert(rc == 0 && report.contains("COPY=0 "), report)
     // one walk round (both trees are under DirsPerTask directories), the
     // keyed pass and the executor's copy pass; a zero-byte plan skips the
-    // bucket packer's jobs (the Dataset-join planner ran 25 here)
+    // bucket packer's jobs (the Dataset-join planner ran 25 here). Stages:
+    // the walk's, the keyed pass's map and reduce sides, and the copy
+    // pass over the plan's own partitions; nothing is doomed, so no
+    // suppression shuffle runs
     assert(totals.jobs <= 3, finals)
+    assert(totals.stages <= 4, (totals, finals))
+  }
+
+  test("-m bounds the copy pass's tasks, with bytes to pack and without") {
+    // P + 2 directories at local[4], one of them holding a one-byte file
+    val src = tmpDir("m-src")
+    (1 to 6).foreach(i => Files.createDirectories(src.resolve(s"d$i")))
+    Files.write(src.resolve("d1/f"), Array[Byte](1))
+    val dst = tmpDir("m-dst").resolve("out")
+    // the copy pass's final-stage tasks and the partitions that copied a task
+    def copyPass(copied: Int, flags: String*): (Int, Set[Int]) = {
+      PartitionsCopyFunction.seen.clear()
+      val argv = flags ++ Seq("-pt", "-mapper", "graft.PartitionsCopyFunction", src.toString, dst.toString)
+      val ((rc, report), _, finals) = jobsIn(s"m ${flags.mkString(" ")}")(quietly(graft.cli.Main.run(argv.toArray, spark)))
+      assert(rc == 0 && report.contains(s"COPY=$copied "), report)
+      val pass = finals.filter(_._1.startsWith("runJob at Executor.scala"))
+      assert(pass.length == 1, finals)
+      (pass.head._2, PartitionsCopyFunction.seen.asScala.toSet)
+    }
+    // a plan with bytes: the packer's buckets, one per partition
+    assert(copyPass(1, "-m", "1")._1 == 1)
+    // a no-op sync's plan has no bytes: directories only
+    assert(copyPass(0, "-update", "-delete", "-m", "1")._1 == 1)
+    val (tasks, used) = copyPass(0, "-update", "-delete")
+    assert(tasks > 1 && used.size > 1, (tasks, used))
+  }
+
+  test("ancestor suppression runs only when something is doomed, one delete per doomed top") {
+    val base = tmpDir("suppress")
+    val (src, dst) = (base.resolve("src"), base.resolve("dst"))
+    Files.createDirectories(src.resolve("keep"))
+    Files.write(src.resolve("keep/a"), Array[Byte](1))
+    runCopy(Seq("-pt"), src, dst)
+    val cfg = Args.parse(Seq("-update", "-delete", "-pt", src.toString, dst.toString)).toOption.get
+    // the tasks, the deletes and the suppression jobs run
+    def planned(): (Set[String], Set[String], Int) = {
+      val (p, _, finals) = jobsIn(s"suppress-${System.nanoTime()}")(Planner.plan(spark, cfg))
+      val (tasks, deletes) = (p.tasks.collect().map(_.relDst).toSet, p.deletes.collect().toSet)
+      assert(JoinPlanner.plan(cfg).map { case (t, d) => (t.map(_._1), d) }.contains((tasks, deletes)))
+      (tasks, deletes, finals.count(_._1.startsWith("count at Planner.scala")))
+    }
+    assert(planned() == ((Set("keep"), Set.empty[String], 0)))
+    // the doomed subtree gone/sub under the doomed directory gone, a
+    // sibling of the kept directory keep, and a doomed file inside keep
+    Files.createDirectories(dst.resolve("gone/sub"))
+    Files.write(dst.resolve("gone/sub/x"), Array[Byte](1))
+    Files.write(dst.resolve("gone/y"), Array[Byte](1))
+    Files.write(dst.resolve("keep/stale"), Array[Byte](1))
+    assert(planned() == ((Set("keep"), Set("gone", "keep/stale"), 1)))
   }
 
   test("Fs.conf hands out isolated copies of one raw-local, uncached template") {
@@ -1306,4 +1363,18 @@ class CopyLayerSpec extends SparkTestBase {
     assert(stats.copied == 8 && stats.failed == 0, stats)
     assert(treeListing(src) == treeListing(dst))
   }
+}
+
+/** A copy function that records the partition of every task it copies,
+  * for the spec that checks how the copy pass spreads its tasks. */
+class PartitionsCopyFunction extends Executor.CopyFunction {
+  def apply(conf: org.apache.hadoop.conf.Configuration, task: CopyTask, dstRoot: String, cfg: CopyConfig,
+      attempt: String): CopyResult = {
+    PartitionsCopyFunction.seen.add(org.apache.spark.TaskContext.getPartitionId())
+    Executor.copyOne(conf, task, dstRoot, cfg, attempt)
+  }
+}
+
+object PartitionsCopyFunction {
+  val seen: java.util.Set[Int] = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 }

@@ -107,4 +107,17 @@ class GraftFacadeSpec extends SparkTestBase {
     assert(stats.copied == 1)
     assert(Files.readAllBytes(base.resolve("out/x.txt")).sameElements("facade".getBytes))
   }
+
+  test("plan, inspect, execute through the facade") {
+    val base = Paths.get("target/fixtures", "facade-plan-" + System.nanoTime()).toAbsolutePath
+    val src = base.resolve("src")
+    Files.createDirectories(src)
+    Files.write(src.resolve("x.txt"), "facade".getBytes)
+    val cfg = Graft.parseArgs(Seq("-update", "-pt", src.toString, base.resolve("out").toString)).toOption.get
+    val plan = Graft.plan(spark, cfg)
+    assert(plan.hasFileCopied)
+    assert(plan.sourceFilesForTransfer.map(_.split('/').last) == Seq("x.txt"))
+    assert(Graft.execute(spark, plan, cfg).copied == 1)
+    assert(!Graft.plan(spark, cfg).hasFileCopied) // the destination is up to date now
+  }
 }

@@ -11,15 +11,13 @@ import graft.queries.Relational
   */
 class GuardsSpec extends SparkTestBase {
 
-  import spark.implicits._
-
   private def fakeTask(i: Int, dir: Boolean = false): CopyTask =
     CopyTask(
       FileMeta(s"/src/f$i", 10L, dir, 1, 128L, 0L, 0L, "rw-r--r--", "u", "g"),
       s"f$i")
 
   private def planOf(tasks: Seq[CopyTask]): CopyPlan =
-    CopyPlan(tasks.toDS(), spark.emptyDataset[String])
+    CopyPlan(spark.sparkContext.parallelize(tasks), spark.sparkContext.emptyRDD[String])
 
   test("sourceFilesForTransfer under the cap returns every planned file") {
     val plan = planOf((1 to 5).map(fakeTask(_)) :+ fakeTask(99, dir = true))
