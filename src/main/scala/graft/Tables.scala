@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -39,8 +40,51 @@ object Tables {
         s"events.$tsCol has unsupported type $other (expected Long ns or Timestamp µs/NTZ)")
     }
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session settings that change what parquet schema inference returns
+    * (`nanosAsLong` turns a NANOS column into a Long). */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Most table paths [[schemas]] holds before it starts over. */
+  private val MaxSchemas = 256
+
+  /** Parquet schemas inferred so far, per qualified table path and values
+    * of [[InferenceConfs]], with the listing (name, length, modification
+    * time of every file) they were inferred from: inference runs a
+    * one-task Spark job per read, and a query reads the same few tables
+    * over and over. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), (Seq[(String, Long, Long)], StructType)]()
+
+  /** The parquet table `name` under `dir`. A read whose table files are
+    * listed as the last inference saw them reuses that schema and runs no
+    * Spark job; a first read, or one after any file was rewritten, added
+    * or removed, infers it as Spark does. A missing table fails as Spark
+    * reports it. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listing =
+      try {
+        val it = fs.listFiles(path, true)
+        val files = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) { val st = it.next(); files += ((st.getPath.toString, st.getLen, st.getModificationTime)) }
+        Some(files.result().sortBy(_._1))
+      } catch { case _: java.io.FileNotFoundException => None }
+    val key = (fs.makeQualified(path).toString, InferenceConfs.map(spark.conf.getOption(_).toString))
+    listing.flatMap(l => Option(schemas.get(key)).filter(_._1 == l)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path.toString)
+      case None =>
+        val df = spark.read.parquet(path.toString)
+        listing.foreach { l =>
+          if (schemas.size >= MaxSchemas) schemas.clear()
+          schemas.put(key, (l, df.schema))
+        }
+        df
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -12,8 +12,8 @@ import org.apache.hadoop.conf.Configuration
   *
   * Each call copies one template parsed once per JVM: a fresh
   * `new Configuration()` re-parses core-default.xml and core-site.xml from
-  * the classpath on first access, and the driver, every walk task, the
-  * keyed pass and every copy task each ask for one.
+  * the classpath on first access, and the driver, every walk task and
+  * every copy task each ask for one.
   */
 object Fs {
   private[graft] lazy val template: Configuration = {

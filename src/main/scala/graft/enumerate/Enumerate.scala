@@ -3,12 +3,13 @@ package graft.enumerate
 import java.util.regex.Pattern
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.util.LongAccumulator
 
 import graft.core.{FileMeta, Fs}
 
@@ -26,17 +27,13 @@ import graft.core.{FileMeta, Fs}
   * bottleneck (SURVEY.md §2.2). The result is metadata-scale
   * (one row per file), so collect-free unions stay cheap relative to the
   * data being copied.
+  *
+  * [[rounds]] is the one round loop: [[listRoots]]/[[listTree]] are its
+  * list-only use, and the copy planner's co-walk, which lists each source
+  * directory beside its destination twin and decides the plan there, is
+  * the other.
   */
 object Enumerate {
-
-  /** Canonical rendering of a root path for prefix-relativization against
-    * enumerated [[FileMeta.path]]s: qualified by the path's OWN filesystem,
-    * so user-typed roots ("/a/b", "hdfs://nn/a") and status paths
-    * ("file:/a/b", "hdfs://nn/a/x") agree segment-for-segment. */
-  def qualify(root: String): String = {
-    val p = new Path(root)
-    p.getFileSystem(Fs.conf()).makeQualified(p).toString
-  }
 
   /** `st` as a [[FileMeta]]. Permission, owner and group are read only
     * when `owners` is set and are empty strings otherwise: on a local file
@@ -69,83 +66,115 @@ object Enumerate {
   /** Directories one walk task lists: all it was given, then the
     * subdirectories it finds, breadth-first, until it has listed this
     * many. A root of at most this many directories is listed in one task
-    * of the walk's first round (the sweep is in CHANGES.md). */
+    * of the list-only walk's first round (the sweep is in CHANGES.md). */
   private[graft] val DirsPerTask: Int = 64
 
-  /** Full recursive enumeration of every root in ONE round-synchronous
-    * walk (each root's own entry included). Every entry is tagged with the
-    * INDEX of the root it was listed under, not matched to a root by path
-    * prefix, so equal or nested roots each get their complete listing.
-    * Permission, owner and group are read only when `owners` is set (see
-    * [[toMeta]]).
-    *
-    * Each round is one Spark job, the eager local checkpoint of its
-    * listing, spread over min(frontier dirs, defaultParallelism) tasks.
-    * Each task lists its part of the frontier and then descends into what
-    * it found until it has listed [[DirsPerTask]] directories
-    * ([[listSubtrees]]), so a tree of at most that many directories per
-    * root lists in one job, and no tree takes more rounds than it has
-    * directory levels. The directories found but not listed are the next
-    * round's frontier; the same job counts them in an accumulator, where a
-    * retried task can only over-count, which costs one empty round. The
-    * result is one flat union of the checkpointed rounds, so its lineage
-    * does not grow with depth, coalesced to defaultParallelism partitions:
-    * a deep or wide walk holds up to rounds × defaultParallelism small
-    * ones, and every scan of it would run a task per partition.
-    */
-  def listRoots(spark: SparkSession, roots: Seq[String], owners: Boolean): RDD[(Int, FileMeta)] = {
-    val sc = spark.sparkContext
-    val conf = Fs.conf()
-    val top = roots.zipWithIndex.map { case (r, i) =>
-      (i, toMeta(fs(conf, r).getFileStatus(new Path(r)), owners))
+  /** One walk task's breadth-first budget: visits every unit it was
+    * given, then the units those visits return, until it has visited
+    * `quota` units. Returns the units found but not visited. */
+  private[graft] def budgeted[U](given: Seq[U], quota: Int)(visit: U => Iterable[U]): Seq[U] = {
+    val queue = mutable.Queue.from(given)
+    var visited = 0
+    while (queue.nonEmpty && visited < quota) {
+      visited += 1
+      queue ++= visit(queue.dequeue())
     }
-    val parts = Vector.newBuilder[RDD[(Int, FileMeta)]]
-    parts += sc.parallelize(top, 1)
-    val topDirs = top.collect { case (i, m) if m.isDir => (i, m.path) }
-    var dirs = topDirs.length.toLong
-    // dirs to list, spread over `width` partitions: the roots straight from
-    // the driver, later frontiers by a shuffle inside the round's own job
-    var frontier = (width: Int) => sc.parallelize(topDirs, width)
-    while (dirs > 0) {
-      val queued = sc.longAccumulator("enumerate.dirs")
-      val round = frontier(math.min(dirs, sc.defaultParallelism.toLong).toInt)
-        .mapPartitions(listSubtrees(_, owners, queued))
-      round.localCheckpoint()
-      round.count() // the round's one job: pins its blocks and fills `queued`
-      parts += round.collect { case (i, Right(m)) => (i, m) }
-      dirs = queued.value
-      val next = round.collect { case (i, Left(p)) => (i, p) }
-      frontier = width => next.repartition(width)
-    }
-    sc.union(parts.result()).coalesce(sc.defaultParallelism)
+    queue.toSeq
   }
 
-  /** One walk task: list every (root index, directory) it was given, then
-    * keep listing the directories found, breadth-first, until
-    * [[DirsPerTask]] are listed. Emits each listed entry as `Right` and
-    * each directory found but not listed as `Left`, counted in `queued`. */
-  private def listSubtrees(
-      given: Iterator[(Int, String)],
-      owners: Boolean,
-      queued: LongAccumulator,
-  ): Iterator[(Int, Either[String, FileMeta])] = {
-    val conf = Fs.conf()
-    val queue = mutable.Queue.from(given)
-    val quota = math.max(queue.size, DirsPerTask)
-    val out = mutable.ArrayBuffer.empty[(Int, Either[String, FileMeta])]
-    var listed = 0
-    while (queue.nonEmpty && listed < quota) {
-      val (i, p) = queue.dequeue()
-      listed += 1
-      fs(conf, p).listStatus(new Path(p)).foreach { st =>
-        val m = toMeta(st, owners)
-        if (m.isDir) queue.enqueue(i -> m.path)
-        out += i -> Right(m)
-      }
+  /** `units` over min(their number, defaultParallelism) partitions. */
+  private[graft] def spread[U: ClassTag](sc: SparkContext, units: Seq[U]): RDD[U] =
+    if (units.isEmpty) sc.emptyRDD[U] else sc.parallelize(units, math.min(units.size, sc.defaultParallelism))
+
+  /** The walk's round loop, shared by the list-only walk ([[listRoots]])
+    * and the planner's co-walk ([[graft.plan.Planner.plan]]). `top` is
+    * what the driver emitted (the roots' own entries) and `first` the
+    * first round's `units` units, partitioned by the caller (as [[spread]]
+    * does).
+    *
+    * Each round is ONE Spark job; after the first, over
+    * min(frontier, defaultParallelism) tasks. A task runs `task` over its
+    * part of the frontier, which visits its units and descends up to
+    * [[DirsPerTask]] units ([[budgeted]]), and emits its rows as `Right` and the units found but
+    * not visited as `Left`: the next round's frontier, spread by a shuffle
+    * inside that round's job. The round is locally checkpointed, and its
+    * job returns per task the frontier count and `tally` of the rows (a
+    * fold that reads every row), merged on the driver with `merge`; `top`
+    * is tallied on the driver. A tree whose units fit the round-1 tasks'
+    * budgets walks in one job, and no tree takes more rounds than it has
+    * directory levels.
+    *
+    * Returns the rows, one flat union of `top` and the checkpointed
+    * rounds, so its lineage does not grow with depth, coalesced to
+    * defaultParallelism partitions (a deep walk would otherwise hold up to
+    * rounds × defaultParallelism small ones), and the merged tally.
+    */
+  private[graft] def rounds[U: ClassTag, R: ClassTag, S](
+      sc: SparkContext,
+      top: Seq[R],
+      first: RDD[U],
+      units: Long,
+      tally: Iterator[R] => S,
+      merge: (S, S) => S,
+  )(task: Iterator[U] => Iterator[Either[U, R]]): (RDD[R], S) = {
+    val parts = Vector.newBuilder[RDD[R]]
+    if (top.nonEmpty) parts += sc.parallelize(top, 1)
+    var summary = tally(top.iterator)
+    var width = (_: Long) => first
+    var left = units
+    while (left > 0) {
+      val round = width(left).mapPartitions(task)
+      round.localCheckpoint()
+      // the round's one job: pins its blocks, counts the frontier, tallies
+      val perTask = sc.runJob(round, (it: Iterator[Either[U, R]]) => {
+        var left = 0L
+        val s = tally(it.flatMap {
+          case Left(_) => left += 1; None
+          case Right(r) => Some(r)
+        })
+        (left, s)
+      })
+      summary = perTask.foldLeft(summary)((a, p) => merge(a, p._2))
+      left = perTask.map(_._1).sum
+      parts += round.collect { case Right(r) => r }
+      val next = round.collect { case Left(u) => u }
+      width = n => next.repartition(math.min(n, sc.defaultParallelism.toLong).toInt)
     }
-    queued.add(queue.size.toLong)
-    out.iterator ++ queue.iterator.map { case (i, p) => i -> Left(p) }
+    (sc.union(parts.result()).coalesce(sc.defaultParallelism), summary)
   }
+
+  /** Full recursive enumeration of every root in ONE walk (each root's own
+    * entry included). Every entry is tagged with the INDEX of the root it
+    * was listed under, not matched to a root by path prefix, so equal or
+    * nested roots each get their complete listing. Permission, owner and
+    * group are read only when `owners` is set (see [[toMeta]]).
+    *
+    * The driver stats the roots; the directory roots are the first round
+    * of [[rounds]], whose tasks list one directory per unit, so a root of
+    * at most [[DirsPerTask]] directories lists in one task.
+    */
+  def listRoots(spark: SparkSession, roots: Seq[String], owners: Boolean): RDD[(Int, FileMeta)] = {
+    val conf = Fs.conf()
+    val top = roots.zipWithIndex.map { case (r, i) => i -> toMeta(fs(conf, r).getFileStatus(new Path(r)), owners) }
+    val first = top.collect { case (i, m) if m.isDir => i -> m.path }
+    rounds(spark.sparkContext, top, spread(spark.sparkContext, first), first.size,
+      (_: Iterator[(Int, FileMeta)]).foreach(_ => ()), (_: Unit, _: Unit) => ()) { given =>
+      val (conf, units) = (Fs.conf(), given.toSeq)
+      val out = mutable.ArrayBuffer.empty[(Int, FileMeta)]
+      val left = budgeted(units, math.max(units.size, DirsPerTask))(listDir(conf, owners, out))
+      out.iterator.map(Right(_)) ++ left.iterator.map(Left(_))
+    }._1
+  }
+
+  /** Lists `dir`, a (root index, directory) pair, into `out`; returns its
+    * subdirectories. */
+  private def listDir(conf: Configuration, owners: Boolean, out: mutable.Growable[(Int, FileMeta)])(
+      dir: (Int, String)): Seq[(Int, String)] =
+    fs(conf, dir._2).listStatus(new Path(dir._2)).toSeq.flatMap { st =>
+      val m = toMeta(st, owners)
+      out += dir._1 -> m
+      Option.when(m.isDir)(dir._1 -> m.path)
+    }
 
   /** Full recursive enumeration of `root` (the root entry itself included),
     * without permission, owner and group. */

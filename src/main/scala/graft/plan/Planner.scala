@@ -1,8 +1,11 @@
 package graft.plan
 
-import org.apache.hadoop.fs.Path
+import scala.collection.mutable
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -11,31 +14,35 @@ import graft.operators.PrefixSum
 
 /** The copy planner (SURVEY.md §7 step 3).
   *
-  * What the reference does with hand-rolled external sorts and merge loops
-  * (DistCpUtils.java:84-223) becomes one keyed pass over the listing walk
-  * (RDD API, so its shuffle runs as ONE Spark job): every source task, every
-  * destination entry and every prefix the source manifest keeps meets the
-  * others under its destination-relative path, and each key decides
+  * What the reference does with a two-cursor merge of the sorted source
+  * and destination listings (DistCpUtils.java:84-223) happens here inside
+  * the listing walk: each unit of the walk is one destination-relative
+  * directory with every physical directory that maps to it (each source
+  * root's, and the destination's when `-update`/`-delete` need it). A walk
+  * task lists every member of its unit once, merges the children by name,
+  * and decides each child where it was listed:
+  *   - dup check     → two or more source tasks on one name    (op 8)
   *   - update diff   → task unless [[graft.core.SameFile]] holds, its
-  *                     checksums fetched on the executor         (op 6)
-  *   - dup check     → two or more sources on one key           (op 8)
-  *   - delete sync   → destination-only and not kept, then
-  *                     ancestor suppression by parent key, a
-  *                     second job only when something is doomed (op 9)
+  *                     checksums fetched in the same task      (op 6)
+  *   - delete sync   → a destination-only child is one delete;
+  *                     its subtree is never listed, so ancestor
+  *                     suppression holds by construction       (op 9)
   * around it:
+  *   - guards        → a source directory that is no task over a
+  *                     destination entry is kept only if a task lies
+  *                     below it: one job after the walk, run only when
+  *                     the walk tagged such a directory
   *   - limits        → chained per-partition skip-and-continue  (op 5)
   *   - split packing → range-partitioned cumsum bucketing      (op 10)
   *
-  * Every source root and the destination are listed in ONE walk
-  * ([[graft.enumerate.Enumerate.listRoots]]), which the keyed pass reads
-  * once: each entry contributes its source, kept-prefix or destination
-  * slots.
-  *
-  * A plan's two manifests are RDDs over the keyed pass's checkpointed
-  * blocks, which [[graft.exec.Executor.execute]] copies from as they are.
-  * A Dataset is built only at the parquet boundary ([[Planner.savePlan]],
-  * [[Planner.loadPlan]]) and as the byte packer's input
-  * ([[Planner.assignBuckets]]) for a plan with bytes to pack.
+  * A plan's two manifests are RDDs over the walk's checkpointed decided
+  * rows (unchanged entries are never emitted), which
+  * [[graft.exec.Executor.execute]] copies from as they are: a plan runs
+  * one Spark job per walk round, and a walk of one round no shuffle. A
+  * Dataset is built only at the parquet boundary ([[Planner.savePlan]], [[Planner.loadPlan]]), for
+  * `-filelimit`/`-sizelimit` admission ([[Planner.applyLimits]]) and as the
+  * byte packer's input ([[Planner.assignBuckets]]) for a plan with bytes to
+  * pack.
   */
 final case class CopyPlan(
     tasks: RDD[CopyTask],
@@ -48,7 +55,7 @@ final case class CopyPlan(
   /** Planned file copies, their bytes and the deletes: the planning pass's
     * own summary, or for a plan built elsewhere (a loaded one) one job per
     * manifest. */
-  lazy val totals: CopyPlan.Totals = planned.getOrElse(CopyPlan.Totals.of(tasks, deletes))
+  lazy val totals: CopyPlan.Totals = planned.getOrElse(CopyPlan.Totals.of(tasks, deletes.count()))
 
   /** Dry-run surface (op 19): planned file copies without executing.
     *
@@ -82,49 +89,15 @@ object CopyPlan {
   final case class Totals(files: Long, bytes: Long, deletes: Long)
 
   object Totals {
-    def of(tasks: RDD[CopyTask], deletes: RDD[String]): Totals = {
+    def of(tasks: RDD[CopyTask], deletes: Long): Totals = {
       val (files, bytes) = tasks.filter(!_.src.isDir).map(t => (1L, t.src.length))
         .fold((0L, 0L)) { case ((f1, b1), (f2, b2)) => (f1 + f2, b1 + b2) }
-      Totals(files, bytes, deletes.count())
+      Totals(files, bytes, deletes)
     }
   }
 }
 
 object Planner {
-
-  /** The CopyTask of one walk entry under root i < roots.length, keyed by
-    * its dest-relative path; None for the destination's entries, a
-    * directory root itself and what `-regexPath` does not select. With
-    * multiple roots each root nests under its basename (distcp semantics). */
-  private def sourceTask(roots: Seq[String], cfg: CopyConfig): ((Int, FileMeta)) => Option[CopyTask] = {
-    // relativize against each root's FS-qualified rendering: enumerated
-    // metas carry full qualified URIs, the user-typed root may not
-    val qRoots = roots.map(Enumerate.qualify).toArray
-    val baseNames = qRoots.map(_.split('/').filter(_.nonEmpty).lastOption.getOrElse(""))
-    val nest = roots.length > 1
-    val selected: (FileMeta, String) => Boolean = cfg.depthRegexes match {
-      case Nil => (_, _) => true
-      case rx => Enumerate.depthRegexFiles(rx)
-    }
-    { case (i, m) =>
-      // indexes past the roots belong to the destination's listing
-      if (i >= qRoots.length) None
-      else PathUtils.makeRelative(qRoots(i), m.path).filter(selected(m, _)).flatMap { rel =>
-        if (rel == ".") {
-          if (m.isDir) None else Some(CopyTask(m, baseNames(i))) // single-file source keeps its name
-        } else Some(CopyTask(m, if (nest) s"${baseNames(i)}/$rel" else rel))
-      }
-    }
-  }
-
-  /** CopyTasks for the source roots: every entry the walk listed under
-    * root i < roots.length (see [[sourceTask]]). One pass over the walk
-    * whatever the root count. */
-  private[graft] def sourceTasks(
-      walk: RDD[(Int, FileMeta)],
-      roots: Seq[String],
-      cfg: CopyConfig,
-  ): RDD[CopyTask] = walk.flatMap(sourceTask(roots, cfg))
 
   /** File/size limits with the reference's skip-and-continue admission
     * (DistCPPlus.java:675-705): walking files in traversal (relDst) order, a
@@ -205,133 +178,214 @@ object Planner {
     }
   }
 
-  /** What the keyed pass knows about one destination-relative path. Fixed
-    * size whatever the tree: the number of source entries mapped here, one
-    * of them, the destination entry's length/mtime, and whether the source
-    * manifest's path closure keeps the path. */
-  private final case class Slot(srcs: Int, task: Option[CopyTask], dst: Option[(Long, Long)], kept: Boolean) {
-    def +(o: Slot): Slot = Slot(srcs + o.srcs, task.orElse(o.task), dst.orElse(o.dst), kept || o.kept)
-  }
+  /** One unit of the co-walk: the destination-relative directory `rel`
+    * ("" for the destination root) and the physical directories that map
+    * to it: each source root's directory there (several only when roots
+    * share a basename), and the destination's, when it exists and
+    * `-update`/`-delete` need it. `own` holds the copy tasks of the
+    * directory's own name, emitted by the task that lists it, so a plan's
+    * directories spread like the walk. `guarded` marks a source directory
+    * that is no task itself over a destination entry, which is deleted
+    * unless a task lies below it; `under` is the nearest guard above the
+    * unit. A shard of the root level, which the driver lists, carries
+    * its entries in `level` instead (see [[CoWalk.rootUnits]]). */
+  private final case class Dir(
+      rel: String,
+      srcs: Seq[(Int, String)],
+      dst: Option[String],
+      own: List[CopyTask] = Nil,
+      guarded: Boolean = false,
+      under: Option[String] = None,
+      level: Option[Level] = None,
+  )
 
-  /** One decided key of the keyed pass. */
+  /** Listed children of one directory: source entries with their root
+    * index (`top`: the roots themselves, when they are the destination
+    * root's children) and the destination's entries. */
+  private final case class Level(srcs: Seq[(Int, FileMeta)], dsts: Seq[FileMeta], top: Boolean)
+
+  /** Root-level entries (source and destination) per shard of the root
+    * level, on average: the shards are their count over this, rounded up,
+    * and each name's entries go to the shard of its hash. A shard is one
+    * first-round task, so this bounds what the driver ships in one task. */
+  private[graft] val ShardEntries = 4096
+
+  private def nameOf(m: FileMeta): String = m.path.substring(m.path.lastIndexOf('/') + 1)
+
+  /** One decided row of the co-walk. A row with `under` set lies below
+    * that guard: see [[Planner.resolve]]. */
   private sealed trait Row extends Serializable
   private final case class Copy(task: CopyTask) extends Row
-  private final case class Delete(relDst: String) extends Row
-  private final case class Duplicate(relDst: String) extends Row
+  private final case class Delete(rel: String, under: Option[String] = None) extends Row
+  private final case class Duplicate(rel: String) extends Row
+  /** A guarded directory: deleted unless some task keeps it. */
+  private final case class Guard(rel: String, under: Option[String]) extends Row
+  /** A task lies below the guard `rel`. */
+  private final case class Keep(rel: String) extends Row
 
-  /** Per-partition tally of the decided keys, summed on the driver. */
-  private final case class Summary(dups: Long, dupExample: String, files: Long, bytes: Long, deletes: Long) {
+  /** Per-partition tally of the decided rows, summed on the driver.
+    * `deletes` counts the deletes below no guard, `guards` the guards. */
+  private final case class Summary(dups: Long, dupExample: String, files: Long, bytes: Long, deletes: Long,
+      guards: Long) {
     def +(r: Row): Summary = r match {
       case Copy(t) if !t.src.isDir => copy(files = files + 1, bytes = bytes + t.src.length)
-      case Copy(_) => this
-      case Delete(_) => copy(deletes = deletes + 1)
+      case Delete(_, None) => copy(deletes = deletes + 1)
+      case Guard(_, _) => copy(guards = guards + 1)
       case Duplicate(rel) => copy(dups = dups + 1, dupExample = if (dups == 0) rel else dupExample)
+      case _ => this
     }
     def ++(o: Summary): Summary =
       Summary(dups + o.dups, if (dups > 0) dupExample else o.dupExample,
-        files + o.files, bytes + o.bytes, deletes + o.deletes)
+        files + o.files, bytes + o.bytes, deletes + o.deletes, guards + o.guards)
   }
 
   private object Summary {
-    val Empty: Summary = Summary(0, "", 0, 0, 0)
+    val Empty: Summary = Summary(0, "", 0, 0, 0, 0)
+    def of(rows: Iterator[Row]): Summary = rows.foldLeft(Empty)(_ + _)
   }
 
-  /** The keyed pass: duplicate check, update diff and delete sync over one
-    * shuffle of the walk, decided and tallied by its [[Summary]] in ONE
-    * job. Ancestor suppression is a second job, run only when that summary
-    * counted a doomed path; it recounts the deletes.
+  /** The co-walk of one task (or of the driver, for the root level's
+    * source directories: [[rootUnits]]), given each root's basename, the
+    * flags, and whether it decides duplicates (not under limits, where the
+    * admitted manifest does).
     *
-    * Keys are destination-relative paths. One `flatMap` reads the walk
-    * once: a source entry emits its source slot, and under `-delete` with
-    * a destination a kept slot for every prefix of its relDst (the whole
-    * manifest before limits and diff is kept: a file-only manifest —
-    * -regexPath, -f with file URIs — would otherwise doom the parent
-    * directories of the files it copies, and the recursive delete would
-    * take the files along); a destination entry emits its destination
-    * slot. Under `-filelimit`/`-sizelimit` the `admitted` manifest is
-    * unioned in as the sources instead. The reduce combines map-side into
-    * one [[Slot]] per key, so no key's state grows with its directory.
-    *
-    * Per key (DistCpUtils.java:84-291):
-    *   - two or more sources is a duplicate: [[DuplicationException]]
-    *     (exit -2). It is checked on the admitted manifest BEFORE the diff:
-    *     diffing first would hide a collision whenever one colliding
-    *     source is up to date, and the two sources would ping-pong the
-    *     destination between runs with exit 0;
-    *   - a source is a task unless `-update` finds a destination entry
-    *     that [[SameFile]] holds; it fetches the checksums on the executor,
-    *     and only for a metadata-equal pair;
-    *   - a destination entry with no source that is not kept is doomed.
-    * The doomed set is closed under descendants, so suppressing doomed
-    * paths whose parent is doomed (`subtractByKey` on the parent key)
-    * leaves one recursive delete per doomed subtree.
-    *
-    * Returns the tasks and the deletes as RDDs over the pass's
-    * checkpointed blocks, with the summary of both.
-    */
-  private def keyedPass(
-      walk: RDD[(Int, FileMeta)],
-      roots: Seq[String],
-      admitted: Option[RDD[CopyTask]],
-      withDst: Boolean,
-      cfg: CopyConfig,
-  ): (RDD[CopyTask], RDD[String], Summary) = {
-    val sc = walk.sparkContext
-    val (update, dstRoot) = (cfg.update, cfg.dst)
-    val deleting = withDst && cfg.delete
-    val walkSources = admitted.isEmpty
-    val source = sourceTask(roots, cfg)
-    // the destination's entries carry index roots.length
-    val (dstIdx, qDstRoot) = (roots.length, if (withDst) Enumerate.qualify(dstRoot) else "")
-    val fromWalk = walk.flatMap { case e @ (i, m) =>
-      if (i == dstIdx)
-        PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").iterator
-          .map(_ -> Slot(0, None, Some((m.length, m.mtime)), kept = false))
-      else source(e).iterator.flatMap { t =>
-        val own = Slot(if (walkSources) 1 else 0, Option.when(walkSources)(t), None, kept = deleting)
-        val segs = if (deleting) t.relDst.split('/') else Array.empty[String]
-        Iterator.single(t.relDst -> own) ++
-          (1 until segs.length).iterator.map(i => segs.take(i).mkString("/") -> Slot(0, None, None, kept = true))
+    * [[visit]] lists a unit's members and [[merge]]s their children by
+    * name. A directory that is no task is kept only if a task lies below
+    * it (the reference's rule); the walk only tags what that needs, and
+    * [[resolve]] decides it: a guarded directory is a [[Guard]] row under
+    * the nearest guard above it, a task below a guard is one [[Keep]] of
+    * that guard per walk task, and a delete below a guard carries it. */
+  private final class CoWalk(baseNames: Array[String], cfg: CopyConfig, dupsInWalk: Boolean, conf: Configuration) {
+    private val nest = baseNames.length > 1 // each root nests under its basename (distcp semantics)
+    private val owners = cfg.preserve.exists(FileAttribute.Ownership)
+    private val out = mutable.ArrayBuffer.empty[Row]
+    private val keeps = mutable.Set.empty[String]
+    private val selected = cfg.depthRegexes match {
+      case Nil => None
+      case rx => Some(Enumerate.depthRegexFiles(rx))
+    }
+
+    def rows: Iterator[Row] = out.iterator
+
+    /** The children of directory `p`, with permission, owner and group
+      * read only for a source listed under `-pu`/`-pg`/`-pp`. */
+    def list(p: String, source: Boolean): Seq[FileMeta] = {
+      val path = new Path(p)
+      path.getFileSystem(conf).listStatus(path).toSeq.map(Enumerate.toMeta(_, source && owners))
+    }
+
+    def visit(d: Dir): Seq[Dir] = {
+      d.own.foreach(out += Copy(_))
+      val scope = if (d.guarded) { out += Guard(d.rel, d.under); Some(d.rel) } else d.under
+      merge(d.rel, scope, d.level.getOrElse(Level(
+        d.srcs.flatMap { case (i, p) => list(p, source = true).map(i -> _) },
+        d.dst.toSeq.flatMap(list(_, source = false)), top = false)))
+    }
+
+    /** The first round's units, from the root level as the driver listed
+      * it: the other names in shards ([[ShardEntries]]), which the walk's
+      * tasks merge and decide, and the units of the names with a source
+      * directory, made here (which decides only what those names need: a
+      * duplicate, or the diff of a file root beside a directory root of
+      * the same name). */
+    def rootUnits(level: Level): (Seq[Dir], Seq[Dir]) = {
+      val dirNames = level.srcs.collect { case (_, m) if m.isDir => nameOf(m) }.toSet
+      val (dirSrcs, srcs) = level.srcs.partition(s => dirNames(nameOf(s._2)))
+      val (dirDsts, dsts) = level.dsts.partition(m => dirNames(nameOf(m)))
+      val n = (srcs.size + dsts.size + ShardEntries - 1) / ShardEntries
+      def shard(m: FileMeta): Int = Math.floorMod(nameOf(m).hashCode, n)
+      val (srcBy, dstBy) = (srcs.groupBy(s => shard(s._2)), dsts.groupBy(shard))
+      ((0 until n).map(k => Dir("", Nil, None, level = Some(Level(srcBy.getOrElse(k, Nil), dstBy.getOrElse(k, Nil),
+        level.top)))), merge("", None, Level(dirSrcs, dirDsts, level.top)))
+    }
+
+    /** Decides the children of `rel` below guard `scope`, given by
+      * `level`. Returns the units to descend into. */
+    private def merge(rel: String, scope: Option[String], level: Level): Seq[Dir] = {
+      val bySrc = level.srcs.groupBy(s => nameOf(s._2))
+      val byDst = level.dsts.map(m => nameOf(m) -> m).toMap
+      (bySrc.keySet ++ byDst.keySet).toSeq.flatMap { n =>
+        val r = if (rel.isEmpty) n else s"$rel/$n"
+        val here = bySrc.getOrElse(n, Nil)
+        val d = byDst.get(n)
+        val tasks = here.flatMap { case (i, m) => task(i, m, r, level.top) }
+        if (tasks.length > 1 && dupsInWalk) out += Duplicate(r)
+        if (tasks.nonEmpty) scope.filter(keeps.add).foreach(out += Keep(_))
+        val copies = tasks.filter(t => t.src.isDir || changed(t, d))
+        val dirs = here.collect { case (i, m) if m.isDir => (i, m.path) }
+        val dstDir = d.filter(_.isDir).map(_.path)
+        if (dirs.nonEmpty)
+          Some(Dir(r, dirs, dstDir, copies.toList, guarded = tasks.isEmpty && d.nonEmpty && cfg.delete, under = scope))
+        else {
+          copies.foreach(out += Copy(_))
+          if (d.isEmpty || !cfg.delete) None
+          else if (tasks.isEmpty) { out += Delete(r, scope); None }
+          // a source file over a destination directory: its children go
+          else dstDir.map(p => Dir(r, Nil, Some(p), under = scope))
+        }
       }
     }
-    val slots = admitted
-      .fold(fromWalk)(a => fromWalk.union(a.map(t => t.relDst -> Slot(1, Some(t), None, kept = false))))
-      .reduceByKey(_ + _, sc.defaultParallelism)
-    val decided: RDD[(String, Row)] = slots.mapPartitions({ it =>
-      val conf = Fs.conf()
-      def checksums(t: CopyTask) = {
-        val (sp, dp) = (new Path(t.src.path), PathUtils.dstPath(dstRoot, t.relDst))
-        (sp.getFileSystem(conf).getFileChecksum(sp), dp.getFileSystem(conf).getFileChecksum(dp))
-      }
-      it.flatMap {
-        case (rel, s) if s.srcs > 1 => Some(rel -> Duplicate(rel))
-        case (rel, Slot(_, Some(t), d, _)) =>
-          val changed = !update || t.src.isDir || d.forall { case (len, mtime) =>
-            !SameFile(t.src, len, mtime, cfg, checksums(t))
-          }
-          Option.when(changed)(rel -> Copy(t))
-        case (rel, Slot(_, None, Some(_), false)) if deleting => Some(rel -> Delete(rel))
-        case _ => None
-      }
-    }, preservesPartitioning = true)
-    // read by the summary, the tasks and the suppression alike
-    decided.localCheckpoint()
-    val summary = sc.runJob(decided, (it: Iterator[(String, Row)]) => it.foldLeft(Summary.Empty)(_ + _._2))
-      .foldLeft(Summary.Empty)(_ ++ _)
-    if (summary.dups > 0) throw new DuplicationException(s"duplicate destination: ${summary.dupExample}")
-    val tasks = decided.values.collect { case Copy(t) => t }
-    if (summary.deletes == 0) (tasks, sc.emptyRDD[String], summary)
-    else {
-      // the doomed side is already partitioned by the pass: only the
-      // parent-keyed side shuffles
-      val doomed = decided.filter(_._2.isInstanceOf[Delete])
-      val deletes = doomed
-        .map { case (rel, _) => rel.take(math.max(rel.lastIndexOf('/'), 0)) -> rel } // top level: ""
-        .subtractByKey(doomed, slots.partitioner.get)
-        .values
-      deletes.localCheckpoint()
-      (tasks, deletes, summary.copy(deletes = deletes.count()))
+
+    /** The copy task of source entry `m` of root `i` at `r`, if any: a
+      * directory root is none, and under `-regexPath` only the selected
+      * files are. */
+    private def task(i: Int, m: FileMeta, r: String, top: Boolean): Option[CopyTask] = {
+      val rel = if (top) "." else if (nest) r.drop(baseNames(i).length + 1) else r
+      Option.when(!(top && m.isDir) && selected.forall(_(m, rel)))(CopyTask(m, r))
     }
+
+    /** A file task is a copy unless `-update` finds that [[SameFile]]
+      * holds against the destination entry; checksums are fetched only for
+      * a metadata-equal pair. */
+    private def changed(t: CopyTask, d: Option[FileMeta]): Boolean =
+      !cfg.update || d.forall { m =>
+        !SameFile(t.src, m.length, m.mtime, cfg, {
+          val (sp, dp) = (new Path(t.src.path), new Path(m.path))
+          (sp.getFileSystem(conf).getFileChecksum(sp), dp.getFileSystem(conf).getFileChecksum(dp))
+        })
+      }
+  }
+
+  /** What [[resolve]] gathers from the rows: each guard and the guard
+    * above it, the guards a task lies below, and the number of deletes
+    * below each guard. */
+  private final case class GuardRows(
+      guards: Map[String, Option[String]] = Map.empty,
+      keeps: Set[String] = Set.empty,
+      waiting: Map[String, Long] = Map.empty,
+  ) {
+    def +(r: Row): GuardRows = r match {
+      case Guard(g, under) => copy(guards = guards.updated(g, under))
+      case Keep(g) => copy(keeps = keeps + g)
+      case Delete(_, Some(g)) => copy(waiting = waiting.updated(g, waiting.getOrElse(g, 0L) + 1))
+      case _ => this
+    }
+    def ++(o: GuardRows): GuardRows =
+      GuardRows(guards ++ o.guards, keeps ++ o.keeps,
+        o.waiting.foldLeft(waiting) { case (m, (g, n)) => m.updated(g, m.getOrElse(g, 0L) + n) })
+  }
+
+  /** The deletes of a walk that tagged guards, and their count, in one job
+    * that gathers their [[GuardRows]]. A guard is kept when a task lies
+    * below it or below a guard inside it; a delete below a kept guard goes,
+    * and a guard that is not kept goes when the guard above it is kept or
+    * it has none. */
+  private def resolve(rows: RDD[Row], undelayed: Long): (RDD[String], Long) = {
+    val p = rows.aggregate(GuardRows())(_ + _, _ ++ _)
+    val kept = mutable.Set.empty[String]
+    for (k <- p.keeps) {
+      var g = Option(k)
+      while (g.exists(kept.add)) g = g.flatMap(p.guards.getOrElse(_, None))
+    }
+    val keptSet = kept.toSet
+    val gone = p.guards.collect { case (g, u) if !keptSet(g) && u.forall(keptSet) => g }.toSet
+    val deletes = rows.flatMap {
+      case Delete(r, None) => Some(r)
+      case Delete(r, Some(g)) if keptSet(g) => Some(r)
+      case Guard(g, _) if gone(g) => Some(g)
+      case _ => None
+    }
+    (deletes, undelayed + p.waiting.collect { case (g, n) if keptSet(g) => n }.sum + gone.size)
   }
 
   /** Size-weighted bucket assignment (CopyInputFormat.java:33-79): in
@@ -376,30 +430,75 @@ object Planner {
     )
   }
 
-  /** Full plan: enumerate → limits → the keyed pass (dup check, update
-    * diff, delete set). Throws [[DuplicationException]] before it returns. */
+  /** Full plan: the co-walk (dup check, update diff, delete set), then
+    * `-filelimit`/`-sizelimit` admission and the dup check on the admitted
+    * manifest. Throws [[DuplicationException]] before it returns.
+    *
+    * The driver stats the roots and lists the root level (the one
+    * directory root's children, or the roots themselves, beside the
+    * destination's children): its source subdirectories' units and its
+    * other names, in shards ([[CoWalk.rootUnits]]), are the walk's first
+    * round, which spreads the units over min(their number,
+    * defaultParallelism) tasks and gives each shard a task of its own, so
+    * no root-level file is diffed on the driver and no task carries more
+    * than a shard of its listing. Each round is one Spark job whose tasks
+    * return the [[Summary]] of their rows. A walk that tagged a guard runs
+    * one more job ([[resolve]]).
+    */
   def plan(spark: SparkSession, cfg: CopyConfig): CopyPlan = {
-    import spark.implicits._
+    val sc = spark.sparkContext
     val roots = cfg.flatRegex match {
       case Some(rg) =>
         cfg.srcs ++ Enumerate.flatRegex(rg)
       case None =>
         cfg.srcs ++ cfg.fileList.toSeq.flatMap(f => Enumerate.fileList(spark, f).collect())
     }
-    // the destination joins the ONE walk when a diff or delete needs it and
-    // it exists: index roots.length
-    val dstPath = new Path(cfg.dst)
-    val withDst = (cfg.update || cfg.delete) && dstPath.getFileSystem(Fs.conf()).exists(dstPath)
-    val walk = Enumerate.listRoots(spark, if (withDst) roots :+ cfg.dst else roots,
-      owners = cfg.preserve.exists(FileAttribute.Ownership))
+    val conf = Fs.conf()
+    def status(p: String): FileStatus = new Path(p).getFileSystem(conf).getFileStatus(new Path(p))
+    val owners = cfg.preserve.exists(FileAttribute.Ownership)
+    val tops = roots.map(r => Enumerate.toMeta(status(r), owners))
+    // the destination joins the walk when a diff or delete needs it and it
+    // is a directory
+    val dst = Option.when(cfg.update || cfg.delete) {
+      try Some(status(cfg.dst)).filter(_.isDirectory).map(_.getPath.toString)
+      catch { case _: java.io.FileNotFoundException => None }
+    }.flatten
     // Under -update the reference OVERWRITES the limit-skip decision with the
     // same-file check (DistCPPlus.java:681-700: `skipfile = isSame`), so
     // -filelimit/-sizelimit are effectively ignored — reproduced here by
     // bypassing applyLimits when updating.
-    val admitted = Option.when(!cfg.update && (cfg.fileLimit != Long.MaxValue || cfg.sizeLimit != Long.MaxValue)) {
-      applyLimits(spark.createDataset(sourceTasks(walk, roots, cfg)), cfg.fileLimit, cfg.sizeLimit).rdd
+    val limited = !cfg.update && (cfg.fileLimit != Long.MaxValue || cfg.sizeLimit != Long.MaxValue)
+    val baseNames = tops.map(m => new Path(m.path).getName).toArray
+    val co = new CoWalk(baseNames, cfg, !limited, conf)
+    // one directory root is the destination root; otherwise the roots are
+    // the destination root's children
+    val single = tops.length == 1 && tops.head.isDir
+    val (shards, dirs) = co.rootUnits(Level(
+      if (single) co.list(tops.head.path, source = true).map(0 -> _) else tops.zipWithIndex.map(_.swap),
+      dst.toSeq.flatMap(co.list(_, source = false)), top = !single))
+    co.rows.collectFirst { case Duplicate(rel) => throw new DuplicationException(s"duplicate destination: $rel") }
+    // each shard is a task of its own, so no task carries more than one
+    // shard of the driver's listing
+    val first = sc.union(Enumerate.spread(sc, dirs) +: shards.map(u => sc.parallelize(Seq(u), 1)))
+    val (rows, summary) = Enumerate.rounds(sc, Seq.empty[Row], first, shards.size + dirs.size, Summary.of,
+        (_: Summary) ++ (_: Summary)) { given =>
+      val (co, units) = (new CoWalk(baseNames, cfg, !limited, Fs.conf()), given.toSeq)
+      val left = Enumerate.budgeted(units, math.max(units.size, Enumerate.DirsPerTask))(co.visit)
+      co.rows.map(Right(_)) ++ left.iterator.map(Left(_))
     }
-    val (tasks, deletes, summary) = keyedPass(walk, roots, admitted, withDst, cfg)
-    CopyPlan(tasks, deletes, Some(CopyPlan.Totals(summary.files, summary.bytes, summary.deletes)))
+    if (summary.dups > 0) throw new DuplicationException(s"duplicate destination: ${summary.dupExample}")
+    val tasks = rows.collect { case Copy(t) => t }
+    val (deletes, nDeletes) =
+      if (summary.guards == 0) (rows.collect { case Delete(r, None) => r }, summary.deletes)
+      else resolve(rows, summary.deletes)
+    if (!limited) CopyPlan(tasks, deletes, Some(CopyPlan.Totals(summary.files, summary.bytes, nDeletes)))
+    else {
+      val admitted =
+        applyLimits(spark.createDataset(tasks)(Encoders.product[CopyTask]), cfg.fileLimit, cfg.sizeLimit).rdd
+      admitted.map(_.relDst -> 1).reduceByKey(_ + _).filter(_._2 > 1).keys.take(1).foreach { rel =>
+        throw new DuplicationException(s"duplicate destination: $rel")
+      }
+      CopyPlan(admitted, deletes, Some(CopyPlan.Totals.of(admitted, nDeletes)))
+    }
   }
 }

@@ -31,7 +31,8 @@ import org.apache.hadoop.fs.{FileChecksum, FileStatus, Path, RawLocalFileSystem}
   * plane (open/create/rename/delete/setTimes) is inherited — those paths
   * resolve through the URI's path component and are scheme-agnostic.
   * Every listStatus is tallied per path in [[ChecksummedLocalFs.listStatusCalls]],
-  * every getFileStatus and exists in [[ChecksummedLocalFs.statusCalls]], and
+  * every getFileStatus and exists in [[ChecksummedLocalFs.statusCalls]],
+  * every getFileChecksum per thread in [[ChecksummedLocalFs.checksumCalls]], and
   * every getPermission/getOwner/getGroup on a status this FS returned in
   * [[ChecksummedLocalFs.attributeCalls]] (RawLocalFileSystem forks `ls -ld`
   * for those without the native Hadoop library).
@@ -78,6 +79,7 @@ class ChecksummedLocalFs extends RawLocalFileSystem {
   }
 
   override def getFileChecksum(p: Path): FileChecksum = {
+    ChecksummedLocalFs.tally(ChecksummedLocalFs.checksummed, Thread.currentThread.getName)
     val st = getFileStatus(p)
     if (st.isDirectory) null
     else {
@@ -95,7 +97,7 @@ class ChecksummedLocalFs extends RawLocalFileSystem {
 
 object ChecksummedLocalFs {
   private type Tally = java.util.concurrent.ConcurrentHashMap[String, Integer]
-  private val listed, statused, attributed = new Tally
+  private val listed, statused, attributed, checksummed = new Tally
 
   private def tally(t: Tally, p: java.nio.file.Path): Unit = tally(t, p.toString)
 
@@ -111,6 +113,10 @@ object ChecksummedLocalFs {
 
   /** getFileStatus + exists calls per local path, JVM-wide. */
   def statusCalls: Map[String, Int] = calls(statused)
+
+  /** getFileChecksum calls per calling thread, JVM-wide: local-mode
+    * executor threads are named apart from the driver's. */
+  def checksumCalls: Map[String, Int] = calls(checksummed)
 
   /** getPermission + getOwner + getGroup calls per local path, JVM-wide. */
   def attributeCalls: Map[String, Int] = calls(attributed)

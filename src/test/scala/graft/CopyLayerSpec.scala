@@ -23,6 +23,13 @@ import graft.plan.Planner
   */
 class CopyLayerSpec extends SparkTestBase {
 
+  /** `root` qualified by its own file system, as the walk renders the
+    * paths it lists, so a root and its entries agree segment for segment. */
+  private def qualify(root: String): String = {
+    val p = new HPath(root)
+    p.getFileSystem(Fs.conf()).makeQualified(p).toString
+  }
+
   private def mkTree(base: Path): Path = {
     val rnd = new Random(7)
     def write(rel: String, n: Int): Unit = {
@@ -925,7 +932,7 @@ class CopyLayerSpec extends SparkTestBase {
   test("overlapping roots plan like separate per-root walks") {
     // relDst -> meta of one standalone listTree of `root`
     def rels(root: Path): Map[String, FileMeta] = {
-      val q = Enumerate.qualify(root.toString)
+      val q = qualify(root.toString)
       Enumerate.listTree(spark, root.toString).collect()
         .flatMap(m => PathUtils.makeRelative(q, m.path).filter(_ != ".").map(_ -> m)).toMap
     }
@@ -1003,8 +1010,8 @@ class CopyLayerSpec extends SparkTestBase {
     mine.unpersist()
   }
 
-  /** The Dataset-join planner the keyed pass replaced, kept as the oracle
-    * the keyed pass is compared against: the same walk and source manifest,
+  /** A Dataset-join planner, kept as the oracle the co-walk is compared
+    * against: the list-only walk and its source manifest,
     * then a groupBy duplicate check, a left-join update diff and a
     * left-anti-join delete sync with a parent-membership anti-join. */
   private object JoinPlanner {
@@ -1020,7 +1027,7 @@ class CopyLayerSpec extends SparkTestBase {
       val withDst = (cfg.update || cfg.delete) && dstPath.getFileSystem(Fs.conf()).exists(dstPath)
       val walk = spark.createDataset(
         Enumerate.listRoots(spark, if (withDst) roots :+ cfg.dst else roots, owners = false))
-      val all = spark.createDataset(Planner.sourceTasks(walk.rdd, roots, cfg))
+      val all = spark.createDataset(walk.rdd.flatMap(sourceTask(roots, cfg)))
       val limited = if (cfg.update) all else Planner.applyLimits(all, cfg.fileLimit, cfg.sizeLimit)
       if (duplicated(limited)) None
       else {
@@ -1037,8 +1044,30 @@ class CopyLayerSpec extends SparkTestBase {
       }
     }
 
+    /** The CopyTask of one walk entry under root i < roots.length, keyed by
+      * its dest-relative path; None for the destination's entries, a
+      * directory root itself and what `-regexPath` does not select. With
+      * multiple roots each root nests under its basename. */
+    private def sourceTask(roots: Seq[String], cfg: CopyConfig): ((Int, FileMeta)) => Option[CopyTask] = {
+      val qRoots = roots.map(qualify).toArray
+      val baseNames = qRoots.map(_.split('/').filter(_.nonEmpty).lastOption.getOrElse(""))
+      val nest = roots.length > 1
+      val selected: (FileMeta, String) => Boolean = cfg.depthRegexes match {
+        case Nil => (_, _) => true
+        case rx => Enumerate.depthRegexFiles(rx)
+      }
+      { case (i, m) =>
+        if (i >= qRoots.length) None
+        else PathUtils.makeRelative(qRoots(i), m.path).filter(selected(m, _)).flatMap { rel =>
+          if (rel == ".") {
+            if (m.isDir) None else Some(CopyTask(m, baseNames(i)))
+          } else Some(CopyTask(m, if (nest) s"${baseNames(i)}/$rel" else rel))
+        }
+      }
+    }
+
     private def listDestination(walk: Dataset[(Int, FileMeta)], idx: Int, dstRoot: String): DataFrame = {
-      val qDstRoot = Enumerate.qualify(dstRoot)
+      val qDstRoot = qualify(dstRoot)
       walk.flatMap { case (i, m) =>
         if (i != idx) None
         else PathUtils.makeRelative(qDstRoot, m.path).filter(_ != ".").map(r => (r, m.length, m.mtime, m.isDir))
@@ -1101,9 +1130,24 @@ class CopyLayerSpec extends SparkTestBase {
     }
   }
 
-  test("the keyed pass plans what the Dataset-join planner planned, on random trees") {
+  test("the co-walk plans what the Dataset-join planner planned, across tasks and rounds") {
     import java.nio.file.attribute.FileTime
     def chk(p: Path): String = "chkfile://" + p
+    /** The plan of `c` as (relDst, source path) tasks and deletes, or None
+      * for a duplicate destination; its walk rounds; and whether the
+      * post-walk job resolved a pending guard. */
+    def planned(c: CopyConfig): (Option[(Set[(String, String)], Set[String])], Int, Boolean) = {
+      val (got, _, finals) = jobsIn(s"cowalk-${System.nanoTime()}") {
+        try {
+          val p = Planner.plan(spark, c)
+          val (t, d) = (p.tasks.collect().map(t => (t.relDst, t.src.path)).toSet, p.deletes.collect().toSet)
+          assert(p.totals.deletes == d.size && p.totals.files == p.tasks.filter(!_.src.isDir).count())
+          Some((t, d))
+        } catch { case _: DuplicationException => None }
+      }
+      (got, finals.count(_._1.startsWith("runJob at Enumerate.scala")),
+        finals.exists(_._1.startsWith("aggregate at Planner.scala")))
+    }
     val flagSets = Seq(
       Seq("-update", "-delete"),
       Seq("-update", "-delete", "-skipcrccheck"),
@@ -1113,8 +1157,9 @@ class CopyLayerSpec extends SparkTestBase {
     )
     val names = Vector("a", "b", "c", "log-1", "log-2")
     var (updateFileTasks, crcTasks, deletes) = (0, 0, 0)
-    // plans without a doomed path skip the suppression job, plans with one run it
+    // plans without a doomed path and plans with one
     var (undoomed, doomed) = (0, 0)
+    var resolvedRandom = 0
     for (seed <- 1 to 12) {
       val rnd = new Random(seed)
       val base = tmpDir(s"keyed-$seed")
@@ -1190,12 +1235,14 @@ class CopyLayerSpec extends SparkTestBase {
       val c = cfg(flags)
       val clue = s"seed=$seed flags=$flags selection=$selection"
       val want = JoinPlanner.plan(c)
-      val got =
-        try {
-          val p = Planner.plan(spark, c)
-          Some((p.tasks.collect().map(t => (t.relDst, t.src.path)).toSet, p.deletes.collect().toSet))
-        } catch { case _: DuplicationException => None }
+      val (got, _, resolved) = planned(c)
       assert(got == want, clue)
+      // guards: source directories that are no task (under -regexPath, or
+      // nested roots) over a mirrored destination; the post-walk job runs
+      // exactly when there are some
+      val nested = selection.head == "-f" || seed % 6 == 1
+      assert(resolved == (c.delete && (c.depthRegexes.nonEmpty || nested) && got.nonEmpty), clue)
+      if (resolved) resolvedRandom += 1
       if (seed % 6 == 5) assert(got.isEmpty, clue)
       got.foreach { case (t, d) =>
         if (c.update) updateFileTasks += t.count { case (_, p) => Files.isRegularFile(Paths.get(new HPath(p).toUri.getPath)) }
@@ -1207,8 +1254,86 @@ class CopyLayerSpec extends SparkTestBase {
     // the drift reached the diff, its CRC compare and the delete sync
     assert(updateFileTasks > 0 && crcTasks > 0 && deletes > 0, (updateFileTasks, crcTasks, deletes))
     assert(undoomed > 0 && doomed > 0, (undoomed, doomed))
+    assert(resolvedRandom > 0)
     info(s"$updateFileTasks file tasks under -update ($crcTasks found by CRC), $deletes deletes; " +
       s"$undoomed plans without a doomed path, $doomed with")
+
+    // across task and round boundaries: each case plans, drifts its
+    // mirror, then compares a re-plan with the oracle; the -regexPath case
+    // and the nested roots under -delete have guards, the deep tree none
+    val b = Enumerate.DirsPerTask
+    val mt = 1600000000000L
+    def put(p: Path, n: Int): Unit = {
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array.fill[Byte](n)(1))
+      Files.setLastModifiedTime(p, FileTime.fromMillis(mt))
+    }
+    def chain(root: Path, prefix: String, n: Int): Path =
+      (1 to n).foldLeft(root)((p, i) => Files.createDirectories(p.resolve(s"$prefix$i")))
+    def sync(flags: Seq[String], selection: Seq[String], dst: Path) = {
+      val c = Args.parse(flags ++ selection :+ chk(dst)).toOption.get
+      Executor.execute(spark, Planner.plan(spark, c), c)
+    }
+    case class Case(label: String, selection: Seq[String], flags: Seq[Seq[String]], minRounds: Int, resolves: Boolean)
+    val cases = {
+      val base = tmpDir("cowalk-cases")
+      // deep: a chain of b + 10 directories, each with a file, and a side
+      // directory per level: the walk takes two rounds
+      val deep = base.resolve("deep")
+      var cur = deep
+      for (i <- 1 to b + 10) {
+        put(cur.resolve(s"f$i"), i % 7)
+        Files.createDirectories(cur.resolve("side"))
+        cur = cur.resolve(s"d$i")
+      }
+      // regex: big/d1/.../d70/f.txt is the one selected file, other/e1/...
+      // /e70 holds none; both chains span rounds below non-task directories
+      val rx = base.resolve("rx")
+      put(chain(rx.resolve("big"), "d", 70).resolve("f.txt"), 3)
+      put(rx.resolve("big/other.txt"), 2)
+      put(chain(rx.resolve("other"), "e", 70).resolve("x.txt"), 1)
+      // two roots sharing the basename n, with distinct children
+      for ((side, names) <- Seq("x" -> Seq("a", "s1/b", "s1/c"), "y" -> Seq("d", "s2/e", "s2/g")); f <- names)
+        put(base.resolve(s"$side/n/$f"), 5)
+      val lists = base.resolve("lists")
+      Files.createDirectories(lists)
+      Files.write(lists.resolve("n.txt"),
+        Seq("x", "y").map(r => chk(base.resolve(s"$r/n"))).mkString("\n").getBytes(StandardCharsets.UTF_8))
+      Seq(
+        Case("deep", Seq(chk(deep)),
+          Seq(Seq("-update", "-delete"), Seq("-overwrite", "-delete", "-filelimit", "20")), 2, resolves = false),
+        Case("regex-span", Seq("-regexPath", chk(rx), "big/d1"), Seq(Seq("-update", "-delete")), 2, resolves = true),
+        Case("shared-basename", Seq("-f", lists.resolve("n.txt").toString),
+          Seq(Seq("-update", "-delete"), Seq("-overwrite", "-delete", "-filelimit", "2")), 1, resolves = true),
+      )
+    }
+    val resolvedIn = scala.collection.mutable.Set.empty[String]
+    for (k <- cases; flags <- k.flags) {
+      val dst = tmpDir(s"cowalk-${k.label}")
+      sync(Seq("-pt"), k.selection, dst)
+      // drift: a changed file, a removed file and a destination-only subtree
+      // in the deepest destination directory; the regex case also mirrors
+      // its unselected chain, which nothing keeps
+      val dstFiles = Files.walk(dst).iterator().asScala.filter(Files.isRegularFile(_)).toVector.sortBy(_.toString)
+      dstFiles.headOption.foreach(f => put(f, 9))
+      dstFiles.drop(1).headOption.foreach(Files.delete(_))
+      val deepest = Files.walk(dst).iterator().asScala.filter(Files.isDirectory(_)).maxBy(_.getNameCount)
+      put(deepest.resolve("stale/x"), 1)
+      if (k.label == "regex-span") {
+        put(chain(dst.resolve("other"), "e", 70).resolve("y"), 1)
+        put(dst.resolve("big/d1/d2/stale.txt"), 1)
+      }
+      val c = Args.parse(flags ++ k.selection :+ chk(dst)).toOption.get
+      val clue = s"${k.label} $flags"
+      val want = JoinPlanner.plan(c)
+      val (got, rounds, resolved) = planned(c)
+      assert(got == want, clue)
+      assert(got.exists(_._2.nonEmpty), clue)
+      assert(rounds >= k.minRounds, s"$clue: $rounds rounds")
+      if (resolved) resolvedIn += k.label
+      assert(resolved == k.resolves, clue)
+    }
+    assert(resolvedIn == Set("regex-span", "shared-basename"))
   }
 
   private def quietly[T](body: => T): (T, String) = {
@@ -1217,7 +1342,7 @@ class CopyLayerSpec extends SparkTestBase {
     (r, out.toString(StandardCharsets.UTF_8))
   }
 
-  test("a no-op -update -delete -pt sync runs at most 3 Spark jobs and 4 stages") {
+  test("a no-op -update -delete -pt sync runs at most 2 Spark jobs and 2 stages") {
     val src = mkTree(tmpDir("src"))
     val dst = tmpDir("dst").resolve("out")
     quietly(graft.cli.Main.run(Array("-pt", src.toString, dst.toString), spark))
@@ -1225,14 +1350,11 @@ class CopyLayerSpec extends SparkTestBase {
       quietly(graft.cli.Main.run(Array("-update", "-delete", "-pt", src.toString, dst.toString), spark))
     }
     assert(rc == 0 && report.contains("COPY=0 "), report)
-    // one walk round (both trees are under DirsPerTask directories), the
-    // keyed pass and the executor's copy pass; a zero-byte plan skips the
-    // bucket packer's jobs (the Dataset-join planner ran 25 here). Stages:
-    // the walk's, the keyed pass's map and reduce sides, and the copy
-    // pass over the plan's own partitions; nothing is doomed, so no
-    // suppression shuffle runs
-    assert(totals.jobs <= 3, finals)
-    assert(totals.stages <= 4, (totals, finals))
+    // one walk round, which plans as it lists (both trees are under
+    // DirsPerTask directories), and the executor's copy pass over the
+    // plan's own partitions: one stage each, no shuffle
+    assert(totals.jobs <= 2, finals)
+    assert(totals.stages <= 2, (totals, finals))
   }
 
   test("-m bounds the copy pass's tasks, with bytes to pack and without") {
@@ -1259,28 +1381,55 @@ class CopyLayerSpec extends SparkTestBase {
     assert(tasks > 1 && used.size > 1, (tasks, used))
   }
 
-  test("ancestor suppression runs only when something is doomed, one delete per doomed top") {
+  test("delete sync lists no doomed subtree and runs no job beyond the walk's") {
     val base = tmpDir("suppress")
     val (src, dst) = (base.resolve("src"), base.resolve("dst"))
     Files.createDirectories(src.resolve("keep"))
     Files.write(src.resolve("keep/a"), Array[Byte](1))
     runCopy(Seq("-pt"), src, dst)
-    val cfg = Args.parse(Seq("-update", "-delete", "-pt", src.toString, dst.toString)).toOption.get
-    // the tasks, the deletes and the suppression jobs run
-    def planned(): (Set[String], Set[String], Int) = {
-      val (p, _, finals) = jobsIn(s"suppress-${System.nanoTime()}")(Planner.plan(spark, cfg))
-      val (tasks, deletes) = (p.tasks.collect().map(_.relDst).toSet, p.deletes.collect().toSet)
-      assert(JoinPlanner.plan(cfg).map { case (t, d) => (t.map(_._1), d) }.contains((tasks, deletes)))
-      (tasks, deletes, finals.count(_._1.startsWith("count at Planner.scala")))
-    }
-    assert(planned() == ((Set("keep"), Set.empty[String], 0)))
     // the doomed subtree gone/sub under the doomed directory gone, a
     // sibling of the kept directory keep, and a doomed file inside keep
     Files.createDirectories(dst.resolve("gone/sub"))
     Files.write(dst.resolve("gone/sub/x"), Array[Byte](1))
     Files.write(dst.resolve("gone/y"), Array[Byte](1))
     Files.write(dst.resolve("keep/stale"), Array[Byte](1))
-    assert(planned() == ((Set("keep"), Set("gone", "keep/stale"), 1)))
+    val cfg = Args.parse(Seq("-update", "-delete", "-pt", src.toString, s"chkfile://$dst")).toOption.get
+    val before = ChecksummedLocalFs.listStatusCalls
+    val (p, _, finals) = jobsIn("suppress")(Planner.plan(spark, cfg))
+    val listed = ChecksummedLocalFs.listStatusCalls.collect { case (k, v) if v != before.getOrElse(k, 0) => k }.toSet
+    val (tasks, deletes) = (p.tasks.collect().map(_.relDst).toSet, p.deletes.collect().toSet)
+    assert(tasks == Set("keep") && deletes == Set("gone", "keep/stale"))
+    assert(p.totals.deletes == 2)
+    assert(JoinPlanner.plan(cfg).map { case (t, d) => (t.map(_._1), d) }.contains((tasks, deletes)))
+    // every plan job is a walk round
+    assert(finals.nonEmpty && finals.forall(_._1.startsWith("runJob at Enumerate.scala")), finals)
+    // the destination's kept directories are listed, the doomed ones never
+    assert(listed == Set(dst.toString, dst.resolve("keep").toString), listed)
+  }
+
+  test("the root level is diffed in walk tasks, one per shard of about ShardEntries entries") {
+    import java.nio.file.attribute.FileTime
+    val base = tmpDir("flat-root")
+    val (src, dst) = (base.resolve("src"), base.resolve("dst"))
+    val n = Planner.ShardEntries + 1
+    for (d <- Seq(src, dst)) {
+      Files.createDirectories(d)
+      (1 to n).foreach { i =>
+        val f = Files.write(d.resolve(s"f$i"), Array[Byte](1))
+        Files.setLastModifiedTime(f, FileTime.fromMillis(1600000000000L))
+      }
+    }
+    val cfg = Args.parse(Seq("-update", "-delete", s"chkfile://$src", s"chkfile://$dst")).toOption.get
+    val before = ChecksummedLocalFs.checksumCalls
+    val (p, _, finals) = jobsIn("flat-root")(Planner.plan(spark, cfg))
+    val calls = ChecksummedLocalFs.checksumCalls.map { case (k, v) => k -> (v - before.getOrElse(k, 0)) }.filter(_._2 > 0)
+    assert(p.totals == graft.plan.CopyPlan.Totals(0, 0, 0))
+    // every metadata-equal pair is checksummed, by walk tasks only
+    assert(calls.values.sum == 2 * n, calls)
+    assert(calls.keySet.forall(_.startsWith("Executor task launch worker")), calls.keySet)
+    // n names on each side are 2n entries, three shards: one round of
+    // three tasks, one per shard
+    assert(finals.map(_._2) == Seq(3), finals)
   }
 
   test("Fs.conf hands out isolated copies of one raw-local, uncached template") {

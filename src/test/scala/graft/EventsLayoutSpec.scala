@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.GraftListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Regression for the round-8 testdata schema drift: `events.ts` has
@@ -81,5 +83,39 @@ class EventsLayoutSpec extends SparkTestBase {
           org.apache.spark.sql.types.StringType))))
     }
     assert(err.getMessage.contains("unsupported type"))
+  }
+
+  test("a second read of a table runs no Spark job, and a rewritten file is re-inferred") {
+    val dir = Files.createTempDirectory("graft_tables").toString
+    val path = s"$dir/t.parquet"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(path)
+    // the read's schema and the Spark jobs it ran
+    def read(): (Seq[String], Int) = {
+      val sc = spark.sparkContext
+      val group = s"tables-${System.nanoTime()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      try {
+        val names = Tables.table(spark, dir, "t").schema.fieldNames.toSeq
+        (names, { assert(GraftListenerDrain.drain(sc)); jobs.get })
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    val (first, _) = read()
+    assert(first == Seq("id", "s"))
+    assert(read() == ((first, 0)))
+    // a rewrite lists new files, whatever the directory's own status
+    Seq((1L, 2.0, "a")).toDF("id", "x", "s").write.mode("overwrite").parquet(path)
+    assert(read()._1 == Seq("id", "x", "s"))
+    assert(read() == ((Seq("id", "x", "s"), 0)))
+    // a missing table fails as Spark reports it
+    intercept[org.apache.spark.sql.AnalysisException](Tables.table(spark, dir, "missing"))
   }
 }

@@ -11,9 +11,12 @@ For every job, in submission order, prints one line:
 
     job  gap_ms  wall_ms  stages  tasks  run_ms  deser_ms  cpu_ms  group  name
 
-  gap_ms    driver time between the end of the previous job and this job's
-            submission (the first job's gap is from the application start)
-  wall_ms   submission to completion
+  gap_ms    driver time between the latest completion of any earlier job
+            and this job's submission, 0 when an earlier job was still
+            running (the first job's gap is from the application start)
+  wall_ms   submission to completion, with `*` appended when the job
+            overlapped an earlier one (AQE submits query-stage jobs
+            concurrently)
   run_ms    the largest task executor run time over the job's stages
   deser_ms  the largest task deserialize time over the job's stages
   cpu_ms    the largest task executor CPU time over the job's stages
@@ -21,7 +24,9 @@ For every job, in submission order, prints one line:
 
 and, under it, one indented line per stage with the same three maxima, so
 a job whose wall time is mostly scheduling shows small task maxima. A
-closing line sums the job walls and the gaps. Write the log with
+closing line reports the time covered by jobs (the union of their
+intervals, so concurrent jobs count once), the number of overlapping
+jobs, and the summed gaps. Write the log with
 `-Dspark.eventLog.enabled=true -Dspark.eventLog.compress=false
 -Dspark.eventLog.dir=<dir>` on the JVM's command line.
 """
@@ -92,24 +97,36 @@ def main():
     if not jobs:
         sys.exit(f"no jobs in {a.log}")
     print("job\tgap_ms\twall_ms\tstages\ttasks\trun_ms\tdeser_ms\tcpu_ms\tgroup\tname")
-    prev_end = app_start
-    total_wall = total_gap = 0
+    latest_end = app_start  # the latest completion so far
+    covered = total_gap = overlapping = 0
+    span_start = span_end = None  # the current union of overlapping intervals
     for j in jobs:
         ran = [(sid, stages[sid]) for sid in j["stages"] if stages.get(sid, {}).get("tasks")]
         wall = (j["end"] - j["start"]) if j["end"] and j["start"] else 0
-        gap = (j["start"] - prev_end) if prev_end and j["start"] else 0
-        total_wall += wall
+        gap = max(j["start"] - latest_end, 0) if latest_end and j["start"] else 0
+        overlaps = bool(latest_end and j["start"] and j["start"] < latest_end)
+        overlapping += overlaps
         total_gap += gap
+        if j["start"] and j["end"]:
+            if span_end is None or j["start"] > span_end:
+                if span_end is not None:
+                    covered += span_end - span_start
+                span_start, span_end = j["start"], j["end"]
+            else:
+                span_end = max(span_end, j["end"])
         if j["end"]:
-            prev_end = j["end"]
-        print(f"{j['id']}\t{gap}\t{wall}\t{len(ran)}\t{sum(s['tasks'] for _, s in ran)}\t"
+            latest_end = max(latest_end or 0, j["end"])
+        print(f"{j['id']}\t{gap}\t{wall}{'*' if overlaps else ''}\t{len(ran)}\t{sum(s['tasks'] for _, s in ran)}\t"
               f"{max((s['run'] for _, s in ran), default=0)}\t"
               f"{max((s['deser'] for _, s in ran), default=0)}\t"
               f"{max((s['cpu'] for _, s in ran), default=0):.0f}\t{j['group']}\t{j['name']}")
         for sid, s in ran:
             print(f"  stage {sid}\t{s['tasks']} tasks\trun {s['run']}\tdeser {s['deser']}\t"
                   f"cpu {s['cpu']:.0f}\t{s['name']}")
-    print(f"# {len(jobs)} jobs, {total_wall} ms in jobs, {total_gap} ms in driver gaps before them")
+    if span_end is not None:
+        covered += span_end - span_start
+    print(f"# {len(jobs)} jobs ({overlapping} overlapping an earlier one), {covered} ms covered by jobs, "
+          f"{total_gap} ms in driver gaps before them")
 
 
 if __name__ == "__main__":
